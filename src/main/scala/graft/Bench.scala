@@ -44,6 +44,20 @@ object BenchPrior {
   def latestPath(sfDir: String): String =
     s"BENCH_LATEST_${java.nio.file.Paths.get(sfDir).getFileName}.json"
 
+  /** The files a bench run writes its JSON artifact to: the artifact of
+    * record (`out`, default `target/bench.json`), the sf-scoped prior
+    * BENCH_LATEST (a sf1.0 SCALING run must not become sf0.1's prior) and
+    * its cpu-keyed copy (VERDICT r17 Next #2: the 32- and 8-core runs of
+    * one round must not overwrite each other's artifact). A subset run
+    * (`SPARK_GRAFT_BENCH_ONLY`) writes none of them: a subset total must
+    * never become the artifact of record, a prior or a committed
+    * BENCH_LATEST. */
+  private[graft] def artifactPaths(subset: Boolean, out: Option[String], sfDir: String,
+                                   cpus: Int): Seq[String] =
+    if (subset) Seq.empty
+    else Seq(out.getOrElse("target/bench.json"), latestPath(sfDir),
+      latestPath(sfDir).stripSuffix(".json") + s"_c$cpus.json")
+
   def load(sfDir: String, names: Seq[String]): Map[String, Double] = {
     val explicit = sys.env.get("SPARK_GRAFT_BENCH_PRIOR")
       .flatMap(p => parse(p, sfDir = None))
@@ -342,27 +356,17 @@ object Bench {
     // The artifact of record goes to its OWN file (VERDICT r7 #4: the
     // r7 log-tail capture started mid-line and lost q1/q10-q29 from the
     // checked-in BENCH json). stdout keeps the line for humans; the
-    // driver (or anyone) can pick up target/bench.json whole.
-    val outPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json"))
-    Option(outPath.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.write(outPath,
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    if (onlyPrefixes.isEmpty) {
-      // the committed prior for next round's self-healing re-measure
-      // (sf-scoped: a sf1.0 SCALING run must not become sf0.1's prior)
-      java.nio.file.Files.write(java.nio.file.Paths.get(BenchPrior.latestPath(sfDir)),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // ALSO a cpu-keyed copy (VERDICT r17 Next #2: the driver runs the
-      // bench twice per round — 32 then 8 cores — and the second run
-      // overwrote the first's BENCH_LATEST, destroying its
-      // cross_round_movers before the verdict could read them; keying by
-      // core count makes both runs' full artifacts survive the round)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(BenchPrior.latestPath(sfDir).stripSuffix(".json") +
-          s"_c${spark.sparkContext.defaultParallelism}.json"),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
+    // driver (or anyone) can pick up target/bench.json whole. A full run
+    // also writes the committed prior for next round's self-healing
+    // re-measure and its cpu-keyed copy (see BenchPrior.artifactPaths).
+    BenchPrior.artifactPaths(subset = onlyPrefixes.isDefined,
+        sys.env.get("SPARK_GRAFT_BENCH_OUT"), sfDir, spark.sparkContext.defaultParallelism)
+      .foreach { p =>
+        val path = java.nio.file.Paths.get(p)
+        Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
+        java.nio.file.Files.write(path,
+          (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
     // stdout gets SHORT self-contained lines (VERDICT r10 #5: the
     // round-10 single ~3.5 KB compact line still exceeded the driver's
     // bounded capture — BENCH_r10's recorded tail starts AND ends

@@ -864,14 +864,16 @@ object Plans {
 
 ## Per-commit fixed cost (round 16, VERDICT r15 Next #3)
 
-`graft.CommitProbe` is the job census: one line per Spark job for the
-four commit shapes. Measured (this round, local[32]):
+`graft.lens.JobBudgetSpec` is the job census: it pins the job count of
+each fixed-cost shape and names every job when a budget breaks.
+Measured in the spec's local[4] session (r16 columns at local[32]):
 
-| shape | jobs before | jobs after | wall after |
-|---|---|---|---|
-| settled rebuild (q159 storm drain / settled cascade wave) | 5 (~0.4-0.9 s) | **0** (~4-16 ms) | manifest reads only |
-| small-delta incremental build | 11 | 11 | map→spool→reduce→commit, all load-bearing |
-| single-record dataset write (q146 PUT) | 3 | 3 | prepare+gate join+snapshot |
+| shape | r16 before | r16 after | r18 | now |
+|---|---|---|---|---|
+| settled rebuild (q159 storm drain / settled cascade wave) | 5 (~0.4-0.9 s) | **0** (~4-16 ms) | 0 | 0 (manifest reads only) |
+| one-record incremental build | 11 | 11 | 20 | **7** (budget 8): driver-sized regime — gate collect (3 AQE jobs), old-output-id cache scan, one lookup of retained contributions + previous output rows, output and cache carry writes |
+| one-record unbucketed dataset write (q146 PUT) | 3 | 3 | 2 | 2 (prepare+gate, `NOT IN` carry write) |
+| batched bucketed `readRows` | — | — | 1 | 1 |
 
 The win is the INPUT-VERSIONS FAST PATH (LensBuild doBuild step 0):
 the compute cache records the input collection versions it was built

@@ -3,9 +3,14 @@ package graft.lens
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{Cbor, NaturalOrder, Reduce, RecordStructure}
 import graft.store.{Collection, DataPath, RecordRow, Store}
@@ -363,15 +368,220 @@ object LensBuild {
     * at-least-once absorption the maintainer relies on, now safe
     * across processes, not just within the in-JVM cascade's `building`
     * set. The nested `commitPrepared` re-enters via the lock's hold
-    * count. */
+    * count.
+    *
+    * An incremental build runs in one of two regimes, chosen by the
+    * freshness gate — one join of the input against the cache whose
+    * changed rows (fresh rows and deleted paths) are checkpointed once
+    * and collected up to `Store.MaxCommitInList + 1`:
+    *  - DRIVER-SIZED, at most `Store.MaxCommitInList` changed paths: the
+    *    fresh records map on the driver, the ids the changed paths
+    *    output before arrive through one IN-filtered cache scan, and the
+    *    output and the cache are each written as a `NOT IN` carry of the
+    *    previous generation unioned with the local rows. The changed
+    *    output ids reduce on the driver too when there are at most
+    *    `Store.MaxCommitInList` of them and their retained contributions
+    *    fit [[DriverReduceRows]]; otherwise the same IN-filtered scans
+    *    reduce as a Spark stage ([[reduceOuts]]), so a hot id (an index
+    *    entry most records feed) never pulls its whole history to the
+    *    driver. A one-record tick costs a fixed handful of Spark actions,
+    *    not a distributed pipeline whose per-stage scheduling outweighs
+    *    KB of data.
+    *  - SPARK, above the cap (and every full build): map, reduce and
+    *    hash gate run as distributed stages over the checkpointed gate.
+    * The path cap is the store's small-batch cap: the driver-sized
+    * writes inline the changed paths and ids as `NOT IN` literal lists,
+    * the shape a small dataset merge commits with, and that cap is where
+    * the store stops inlining. It is below the regimes' crossover: on a
+    * sandboxed JS token index over 5 000 Zipf documents (4 cores,
+    * `local[4]`) the driver-sized regime built every delta tried, from
+    * 16 to 4 096 changed paths, 0.6–1.1 s faster than the Spark one. No
+    * benchmark workload crosses the cap. Both regimes call the same
+    * helpers — [[Mapper]] per record (sandbox budgets included), [[foldContribs]]
+    * and [[outputRow]] per output id (or [[reduceOuts]] over Spark
+    * rows), [[commitChanged]]'s hash gate and carry, [[writeCache]],
+    * [[carryCacheBuckets]], the `RebalanceFileThreshold` compaction
+    * rule and the `_input_versions.json` manifest — and LensRegimeSpec
+    * checks on random deltas that they give equal outputs and logs. */
   def build(lens: Lens, incremental: Boolean): Long =
-    lens.store.withLock(lens.path)(doBuild(lens, incremental))
+    build(lens, incremental, Store.MaxCommitInList)
 
-  private def doBuild(lens: Lens, incremental: Boolean): Long = {
+  /** `driverCap`: the most changed paths the driver-sized regime takes;
+    * `driverRows`: the most retained contributions it reduces on the
+    * driver. Specs lower them to force the other paths. */
+  private[lens] def build(lens: Lens, incremental: Boolean, driverCap: Int,
+                          driverRows: Int = DriverReduceRows): Long =
+    lens.store.withLock(lens.path)(doBuild(lens, incremental, driverCap, driverRows))
+
+  /** The most retained contributions (cache `out` rows of the changed
+    * output ids) the driver-sized regime collects and folds on the
+    * driver; beyond it the changed ids reduce as a Spark stage. Measured
+    * on a sandboxed JS token index over a Zipf corpus (4 cores,
+    * `local[4]`, 6 GiB heap): the driver fold beat the Spark reduce at
+    * every size tried, up to 96k retained rows (1.9 s against 2.5 s per
+    * build), so no crossover bounds it from below; the bound caps what
+    * one build holds on the driver (~100 bytes a row for such a lens). */
+  private[lens] val DriverReduceRows = 100000
+
+  /** One input record as the map stage reads it:
+    * (id, value, version, ord, source, author, cname). */
+  private type InRow = (String, Array[Byte], Long, Int, String, String, String)
+  private val inCols = Seq("id", "value", "version", "ord", "source", "author", "cname")
+
+  /** The per-record body of the map stage: one map call under the lens's
+    * budgets (preemptive sandbox or cooperative deadline), turned into
+    * the record's cache rows — `seen`, then its outs, logs and error.
+    * The executor map stage and the driver-sized regime both call it, so
+    * a fresh record maps exactly once whichever regime runs it. */
+  private final case class Mapper(fn: MapFn, timeoutMs: Long, sandboxed: Boolean,
+                                  memCap: Long) {
+    def apply(r: InRow): Seq[BuildEmit] = {
+      val (id, bytes, ver, ord, source, author, cname) = r
+      val mp = MapPath(s"/$source/$author:$cname/records/$id", source, author, cname, id)
+      val res =
+        if (sandboxed) MapRunner.runSandboxed(fn, mp, Cbor.decode(bytes), timeoutMs, memCap)
+        else MapRunner.run(fn, mp, Cbor.decode(bytes), timeoutMs)
+      val nk = NaturalOrder.naturalKey(id)
+      val outs = res.outputs.zipWithIndex.map { case ((oid, v), idx) =>
+        BuildEmit("out", mp.string, ver, ord, nk, idx, oid, Cbor.encode(v),
+          null, null, null, null)
+      }
+      val logs = res.logs.map(l =>
+        BuildEmit("log", mp.string, ver, ord, nk, 0, null, null,
+          l.kind, l.args, null, null))
+      val errs = res.error.map(e =>
+        BuildEmit("err", mp.string, ver, ord, nk, 0, null, null,
+          null, null, e.errType, e.message))
+      BuildEmit("seen", mp.string, ver, ord, nk, 0, null, null,
+        null, null, null, null) +: (outs ++ logs ++ errs)
+    }
+  }
+
+  /** The ordered merge fold of one output id's contributions, given in
+    * (input ordinal, natural record order, emit order) — exact
+    * order-sensitive reference semantics (lens.js:204-215). */
+  private def foldContribs(values: Iterator[Array[Byte]]): Array[Byte] =
+    Cbor.encode(values.map(Cbor.decode).reduceLeft(Reduce.merge))
+
+  /** A reduced output id's row: (id, value, hash, links). */
+  private def outputRow(id: String, bytes: Array[Byte]): (String, Array[Byte], String, Seq[String]) = {
+    val v = Cbor.decode(bytes)
+    (id, bytes, Cbor.hash(v), RecordStructure.listHashURLs(v))
+  }
+
+  /** Merge-reduce per output id into (id, value, hash, links). Two
+    * physical strategies, same semantics for the values each admits:
+    *  - default: ONE shuffle on the id, values folded in (input
+    *    ordinal, natural record order, emit order) — exact
+    *    order-sensitive reference semantics (lens.js:204-215);
+    *  - CommutativeMapFn: partial-aggregating shuffle (map-side
+    *    combine) — shuffle volume drops from O(emitted pairs) to
+    *    O(distinct keys × partitions), the 100 TB path for
+    *    set-union/sum lenses. */
+  private def reduceOuts(fn: MapFn, outs: Dataset[BuildEmit]): DataFrame = {
+    val spark = outs.sparkSession
+    import spark.implicits._
+    (if (fn.isInstanceOf[CommutativeMapFn])
+      outs.groupByKey(_.outId).agg(ReduceAggregator.toColumn.name("value"))
+    else
+      outs.groupByKey(_.outId)
+        .flatMapSortedGroups(col("ord"), col("natKey"), col("outIdx")) {
+          (id: String, it: Iterator[BuildEmit]) =>
+            Iterator((id, foldContribs(it.map(_.value))))
+        })
+      .map { case (id, bytes) => outputRow(id, bytes) }
+      .toDF("id", "value", "hash", "links")
+  }
+
+  /** The output ids an incremental build changes: held on the driver
+    * (`Left`) or as a frame of one `id` column (`Right`). */
+  private type ChangedIds = Either[Seq[String], DataFrame]
+
+  /** The rows of `df` whose `column` is (`keep`) or is not one of `ids`:
+    * an inlined `IN` list for at most `Store.MaxCommitInList` held ids,
+    * a semi- or anti-join otherwise. */
+  private def byIds(df: DataFrame, column: String, ids: ChangedIds, keep: Boolean): DataFrame =
+    ids match {
+      case Left(held) if held.size <= Store.MaxCommitInList =>
+        val in = if (held.isEmpty) lit(false) else col(column).isin(held: _*)
+        df.filter(if (keep) in else !in)
+      case _ =>
+        val spark = df.sparkSession
+        import spark.implicits._
+        val frame = ids.fold(_.toDF(column), _.select(col("id").as(column)))
+        df.join(frame, Seq(column), if (keep) "left_semi" else "left_anti")
+    }
+
+  private val recordCols: Seq[Column] = Seq("id", "version", "hash", "links", "value").map(col)
+  private val recordEnc = Encoders.product[RecordRow]
+
+  /** The hash gate and commit of an incremental build: `reduced` (id,
+    * value, hash, links) holds the new rows of the changed `ids`, each
+    * keeping its old version when its hash did not move; every other
+    * output row carries from the previous snapshot byte-identical (an
+    * id none of whose contributions moved reduces to the same value).
+    * `ids` also tells a bucketed output which buckets to rewrite. */
+  private def commitChanged(out: Collection, reduced: DataFrame, ids: ChangedIds): Long = {
+    val newVersion = out.nextVersion
+    val old = out.toDF
+    val oldChanged = byIds(old, "id", ids, keep = true)
+      .select(col("id"), col("version").as("old_version"), col("hash").as("old_hash"))
+    val gated = reduced.join(oldChanged, Seq("id"), "left")
+      .withColumn("version",
+        when(col("old_hash") === col("hash"), col("old_version")).otherwise(lit(newVersion)))
+      .select(recordCols: _*)
+    val carried = byIds(old, "id", ids, keep = false).select(recordCols: _*)
+    out.commitPrepared(carried.unionByName(gated).as[RecordRow](recordEnc), Some(ids))
+  }
+
+  /** `ds` collected in one job when it holds at most about `bound` rows,
+    * else None. Each of its P partitions sends at most `bound / P + 1`
+    * rows, so the driver holds at most `bound + P` rows whatever `ds`
+    * holds; a partition over that share counts as over the bound
+    * (conservative when rows are skewed). `ds` must plan without an
+    * exchange, so that its partition count is known without a job. */
+  private[lens] def collectAtMost[T: scala.reflect.ClassTag](ds: Dataset[T],
+                                                             bound: Int): Option[Seq[T]] = {
+    val rdd = ds.rdd
+    val share = bound / math.max(1, rdd.getNumPartitions) + 1
+    val parts = rdd.mapPartitions(it => Iterator(it.take(share + 1).toVector)).collect()
+    if (parts.exists(_.size > share)) None else Some(parts.toSeq.flatten)
+  }
+
+  /** A row the driver-sized regime reduces or hash-gates: a contribution
+    * to output id `id` (`hash` null), or that id's previous output row
+    * (`hash` and `version` set, `value` null). Package-private, not
+    * private: Spark's generated deserializer must reach its constructor. */
+  private[lens] final case class Contrib(id: String, ord: Int, natKey: String, outIdx: Int,
+                                   value: Array[Byte], version: Long, hash: String)
+
+  /** (ord, natKey, outIdx) in the engine's sort order — `natKey` compared
+    * as UTF-8 bytes, as Spark orders strings — so a driver-side fold
+    * sees contributions in exactly the order `flatMapSortedGroups` does. */
+  private val contribOrder: Ordering[Contrib] = new Ordering[Contrib] {
+    def compare(a: Contrib, b: Contrib): Int = {
+      val o = Integer.compare(a.ord, b.ord)
+      if (o != 0) o
+      else {
+        val k = UTF8String.fromString(a.natKey).compareTo(UTF8String.fromString(b.natKey))
+        if (k != 0) k else Integer.compare(a.outIdx, b.outIdx)
+      }
+    }
+  }
+
+  private val emitEnc = Encoders.product[BuildEmit]
+  /** The cache's columns in [[BuildEmit]] order — without a partitioned
+    * cache's discovered `pbucket` column. */
+  private val emitCols: Seq[Column] = emitEnc.schema.fieldNames.toSeq.map(col)
+
+  /** The cache's path-hash bucket of each row. */
+  private def pbucketOf(pbuckets: Int): Column =
+    pmod(xxhash64(col("path")), lit(pbuckets.toLong))
+
+  private def doBuild(lens: Lens, incremental: Boolean, driverCap: Int, driverRows: Int): Long = {
     val store = lens.store
     val spark = store.spark
     import spark.implicits._
-    val emitEnc = org.apache.spark.sql.Encoders.product[BuildEmit]
 
     // ---- 0. O(metadata) no-op fast path (VERDICT r15 Next #3): the
     //         compute cache records the INPUT COLLECTION VERSIONS it
@@ -384,15 +594,15 @@ object LensBuild {
     //         BEFORE the scan, so a commit racing the build records
     //         the pre-commit version and merely causes one extra
     //         (gate-absorbed) rebuild — never a missed one.
-    val cacheDirFp = lens.cacheDir
+    val cacheDir = lens.cacheDir
     val inputVersionsNow: Option[Map[String, Long]] =
       try Some(lens.inputs.map { p =>
         val dp = DataPath(p.source, p.author, p.name)
         dp.collectionPath -> store.collection(dp).meta.version
       }.toMap)
       catch { case _: Throwable => None } // missing input: the scan below throws, as before
-    if (incremental && Files.isDirectory(cacheDirFp) && inputVersionsNow.isDefined &&
-        readInputVersions(cacheDirFp).contains(inputVersionsNow.get))
+    if (incremental && Files.isDirectory(cacheDir) && inputVersionsNow.isDefined &&
+        readInputVersions(cacheDir).contains(inputVersionsNow.get))
       return lens.output.meta.version
 
     // ---- 1. input scan: per-input ordinal, record filter (F1), then
@@ -427,71 +637,24 @@ object LensBuild {
     val current = deduped
       .withColumn("path", concat(lit("/"), col("source"), lit("/"),
         col("author"), lit(":"), col("cname"), lit("/records/"), col("id")))
-    var gatePersisted: Option[DataFrame] = None
-    var freshPersisted: Option[Dataset[BuildEmit]] = None
-    var idsPersisted: Option[DataFrame] = None
-    var deltaPersisted: Option[DataFrame] = None
+    // what the build pins in executor storage, released when it ends
+    val release = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    def hold[T](ds: Dataset[T]): Dataset[T] = {
+      val p = ds.persist(StorageLevel.MEMORY_AND_DISK)
+      release += (() => p.unpersist(blocking = false))
+      p
+    }
     try {
 
     // ---- shared stages ------------------------------------------------
     // Map stage: executor-side flatMap with log/error capture over the
     // FRESH records only (reference spools to scratch: lens.js:151-160).
-    val fn = lens.fn
-    val timeoutMs = lens.timeoutMs
-    val sandboxed = lens.sandboxed
-    val memCap = lens.memCapBytes
-    def mapEmits(in: DataFrame): Dataset[BuildEmit] = in
-      .select("id", "value", "version", "ord", "source", "author", "cname")
-      .as[(String, Array[Byte], Long, Int, String, String, String)]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes, ver, ord, source, author, cname) =>
-          val mp = MapPath(s"/$source/$author:$cname/records/$id",
-            source, author, cname, id)
-          val res =
-            if (sandboxed) MapRunner.runSandboxed(fn, mp, Cbor.decode(bytes), timeoutMs, memCap)
-            else MapRunner.run(fn, mp, Cbor.decode(bytes), timeoutMs)
-          val nk = NaturalOrder.naturalKey(id)
-          val outs = res.outputs.zipWithIndex.map { case ((oid, v), idx) =>
-            BuildEmit("out", mp.string, ver, ord, nk, idx, oid, Cbor.encode(v),
-              null, null, null, null)
-          }
-          val logs = res.logs.map(l =>
-            BuildEmit("log", mp.string, ver, ord, nk, 0, null, null,
-              l.kind, l.args, null, null))
-          val errs = res.error.map(e =>
-            BuildEmit("err", mp.string, ver, ord, nk, 0, null, null,
-              null, null, e.errType, e.message))
-          BuildEmit("seen", mp.string, ver, ord, nk, 0, null, null,
-            null, null, null, null) +: (outs ++ logs ++ errs)
-        }
-      }(emitEnc)
+    val mapper = Mapper(lens.fn, lens.timeoutMs, lens.sandboxed, lens.memCapBytes)
+    def mapEmits(in: DataFrame): Dataset[BuildEmit] =
+      in.select(inCols.map(col): _*).as[InRow]
+        .mapPartitions(_.flatMap(mapper(_)))(emitEnc)
 
-    // Merge-reduce per output id. Two physical strategies, same
-    // semantics for the values each admits:
-    //  - default: ONE shuffle on the id, values folded in (input
-    //    ordinal, natural record order, emit order) — exact
-    //    order-sensitive reference semantics (lens.js:204-215);
-    //  - CommutativeMapFn: partial-aggregating shuffle (map-side
-    //    combine) — shuffle volume drops from O(emitted pairs) to
-    //    O(distinct keys × partitions), the 100 TB path for
-    //    set-union/sum lenses.
-    def reduceOuts(outs: Dataset[BuildEmit]): DataFrame =
-      (if (fn.isInstanceOf[CommutativeMapFn])
-        outs.groupByKey(_.outId).agg(ReduceAggregator.toColumn.name("value"))
-      else
-        outs.groupByKey(_.outId)
-          .flatMapSortedGroups(col("ord"), col("natKey"), col("outIdx")) {
-            (id: String, it: Iterator[BuildEmit]) =>
-              Iterator((id, Cbor.encode(it.map(e => Cbor.decode(e.value))
-                .reduceLeft(Reduce.merge))))
-          })
-        .map { case (id, bytes) =>
-          val v = Cbor.decode(bytes)
-          (id, bytes, Cbor.hash(v), RecordStructure.listHashURLs(v): Seq[String])
-        }.toDF("id", "value", "hash", "links")
-
-    val cacheDir = lens.cacheDir
-    val cacheNext = cacheDir.resolveSibling("cache-next")
+    val cacheNext = cacheNextOf(cacheDir)
     val out = lens.output
     val useCache = incremental && Files.isDirectory(cacheDir)
 
@@ -517,8 +680,7 @@ object LensBuild {
       // window; no cache ⇒ no gate join). Multi-input builds are already
       // wide (the dedup window shuffles). At scale a big collection has
       // ≫ cores file-partitions and this is a no-op.
-      val freshSel = current
-        .select("id", "value", "version", "ord", "source", "author", "cname")
+      val freshSel = current.select(inCols.map(col): _*)
       val smallInput = lens.inputs.size == 1 &&
         freshSel.rdd.getNumPartitions < spark.sparkContext.defaultParallelism
       val mapIn =
@@ -533,12 +695,9 @@ object LensBuild {
       // (1-2 files at bench scale, advisory-sized at 100 TB — not a file
       // per map task) and the reduce reads the coalesced blocks. The
       // pbuckets > 1 write shuffles by pbucket inside writeCache instead.
-      val spoolDs =
+      val spooled = hold(
         if (pbuckets == 1) mapEmits(mapIn).hint("rebalance")
-        else mapEmits(mapIn)
-      val spooled = spoolDs
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      freshPersisted = Some(spooled)
+        else mapEmits(mapIn))
       // Overlap the cache write with the reduce+commit (r18, guide §2.6
       // "overlap independent jobs"): both consume the persisted spool
       // and are independent until the manifest swap — running them
@@ -550,42 +709,43 @@ object LensBuild {
       val cacheWritten = runCacheWrite(spark) {
         writeCache(spooled.toDF(), cacheNext, pbuckets)
       }
-
-      // hash-gated materialize: unchanged output records keep their
-      // version (same gate as a dataset commit)
-      val reduced = reduceOuts(spooled.filter(col("kind") === "out"))
-      val newVersion = out.nextVersion
-      val old = out.toDF.select(col("id"), col("version").as("old_version"),
-        col("hash").as("old_hash"))
-      val rows = reduced
-        .join(old, Seq("id"), "left")
-        .withColumn("version",
-          when(col("old_hash") === col("hash"), col("old_version"))
-            .otherwise(lit(newVersion)))
-        .select(col("id"), col("version"), col("hash"), col("links"), col("value"))
-        .as[RecordRow]
-      val committed = out.commitPrepared(rows)
-      scala.concurrent.Await.result(cacheWritten,
-        scala.concurrent.duration.Duration.Inf)
-      // the fast-path manifest rides the cache swap (atomic with it)
-      inputVersionsNow.foreach(writeInputVersions(cacheNext, _, pbuckets))
-      swapDir(cacheNext, cacheDir)
-      committed
+      commitAndSwap(cacheWritten, cacheDir, pbuckets, inputVersionsNow) {
+        // hash-gated materialize: unchanged output records keep their
+        // version (same gate as a dataset commit)
+        val reduced = reduceOuts(lens.fn, spooled.filter(col("kind") === "out"))
+        val newVersion = out.nextVersion
+        val old = out.toDF.select(col("id"), col("version").as("old_version"),
+          col("hash").as("old_hash"))
+        val rows = reduced
+          .join(old, Seq("id"), "left")
+          .withColumn("version",
+            when(col("old_hash") === col("hash"), col("old_version"))
+              .otherwise(lit(newVersion)))
+          .select(col("id"), col("version"), col("hash"), col("links"), col("value"))
+          .as[RecordRow]
+        out.commitPrepared(rows)
+      }
     } else {
       // ==== INCREMENTAL BUILD — O(delta), not O(corpus) =================
-      // (VERDICT r16 Next #3.) Three delta-scaled legs after the gate:
-      //  1. the compute-cache rewrite touches only the `pbucket=k` dirs
+      // (VERDICT r16 Next #3.) After the gate, every leg is delta-scaled:
+      //  1. only fresh records map;
+      //  2. the compute-cache rewrite touches only the `pbucket=k` dirs
       //     containing a fresh/deleted path (hardlink-carry for the rest);
-      //  2. the merge-reduce runs only over the output ids whose
+      //  3. the merge-reduce runs only over the output ids whose
       //     contributions moved (retained contributions of those ids are
       //     re-read from the cache; everything else is never decoded);
-      //  3. the output commit carries unchanged rows straight from the
+      //  4. the output commit carries unchanged rows straight from the
       //     previous snapshot (byte-identical by the hash-gate argument:
       //     unchanged contributions reduce to the same value) and
       //     hash-gates only the changed ids.
       // The gate itself stays O(corpus metadata) — one full-outer join of
       // narrow (path, version) rows — which is the irreducible cost of
-      // detecting new and deleted records.
+      // detecting new and deleted records. Its changed rows are
+      // collected up to `driverCap + 1`: up to `driverCap` the legs run
+      // in the DRIVER-SIZED regime ([[driverDelta]]: local map, IN-
+      // filtered cache scans, a local or Spark reduce, NOT IN carry
+      // writes — a fixed handful of Spark actions); above it they run as
+      // Spark stages over the same checkpointed changed rows, below.
 
       // ---- freshness gate (reference: lens.js:134-190 — version-gated
       //      recompute, cache retain). ONE full-outer join against the
@@ -595,36 +755,48 @@ object LensBuild {
       //      the footer-infer job. `pbucket` (when the cache is
       //      partitioned) arrives as a discovered partition column.
       val cacheRaw = spark.read.schema(emitEnc.schema).parquet(cacheDir.toString)
-      val emitCols = emitEnc.schema.fieldNames.toSeq.map(col)
       val cache = cacheRaw.select(emitCols: _*).as[BuildEmit](emitEnc)
-      val pbuckets = readPBuckets(cacheDirFp).getOrElse(1)
+      val pbuckets = readPBuckets(cacheDir).getOrElse(1)
       val usePB = pbuckets > 1 && cacheRaw.columns.contains("pbucket")
       val seen = cache.filter(col("kind") === "seen")
         .select(col("path"), col("inVersion").as("cachedV"))
-      val gate = current.join(seen, Seq("path"), "full_outer")
+      val gateRaw = current.join(seen, Seq("path"), "full_outer")
         .withColumn("isCur", col("version").isNotNull) // RecordRow.version is non-null
         .withColumn("isFresh", col("isCur") &&
           (col("cachedV").isNull || col("cachedV") < col("version")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      gatePersisted = Some(gate)
-      val changed = gate.filter(col("isFresh") || !col("isCur"))
-      // ONE small job over the persisted gate answers the no-op probe
-      // AND names the cache buckets the rewrite must touch (replaces the
-      // previous separate nFresh/nDeleted aggregate)
-      val pbOf =
-        if (usePB) pmod(xxhash64(col("path")), lit(pbuckets.toLong)) else lit(0L)
-      val touched = changed.select(pbOf.as("pb")).distinct().as[Long].collect().toSet
-      if (touched.isEmpty) {
+      // The join runs once. Its changed rows are checkpointed lazily:
+      // `localCheckpoint(eager = false)` runs the join's shuffles now,
+      // and the collect below computes (and pins) the changed rows —
+      // where a persisted frame would cost AQE a job of its own to
+      // materialize. The Spark regime reads the same checkpoint, so an
+      // over-cap delta does not join the corpus twice.
+      val changed = gateRaw.filter(col("isFresh") || !col("isCur"))
+        .select((col("path") +: inCols.map(col)) :+ col("isFresh"): _*)
+        .localCheckpoint(eager = false)
+      changed.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }.foreach(rdd => release += (() => rdd.unpersist(blocking = false)))
+      val changedRows = changed.limit(driverCap + 1).collect()
+      if (changedRows.isEmpty) {
         // record-versions unchanged though collection versions moved
         // (identical rewrites bump only the latter): advance the
         // manifest so the NEXT build takes the zero-job fast path
-        inputVersionsNow.foreach(writeInputVersions(cacheDirFp, _, pbuckets))
+        inputVersionsNow.foreach(writeInputVersions(cacheDir, _, pbuckets))
         return out.meta.version // no-op
       }
-      val changedPaths = changed.select("path")
-      val freshEmits = mapEmits(gate.filter(col("isFresh")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      freshPersisted = Some(freshEmits)
+      if (changedRows.length <= driverCap)
+        driverDelta(lens, cacheRaw, pbuckets, usePB, changedRows.toSeq, mapper,
+          inputVersionsNow, driverRows)
+      else {
+      // ==== SPARK REGIME: more changed paths than the driver takes ====
+      // The checkpointed changed rows serve every leg below, persisted
+      // so the planner sees their real size (a checkpoint reports none);
+      // the first action names the cache buckets the rewrite must touch.
+      val changedHeld = hold(changed)
+      val touched = changedHeld.select(pbucketOf(pbuckets).as("pb")).distinct()
+        .as[Long].collect().toSet
+      val changedPaths = changedHeld.select("path")
+      val freshEmits = hold(mapEmits(changedHeld.filter(col("isFresh"))))
 
       // ---- cache copy-on-write: rewrite ONLY the touched pbuckets
       //      (retained rows of those buckets + all fresh emits — a fresh
@@ -644,109 +816,217 @@ object LensBuild {
       // serves the reduce below, which then never re-scans the previous
       // cache parquet (r18: one fewer scan + anti-join leg per build).
       val deltaRaw = retainedTouched.unionByName(freshEmits.toDF())
-      val delta =
-        if (pbuckets == 1) {
-          val d = deltaRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          deltaPersisted = Some(d)
-          d
-        } else deltaRaw
-      // Amortized rebalance (r18, VERDICT r17 Next #1): the delta frame
-      // is a no-shuffle cache scan (broadcast anti-join) plus the AQE-
-      // coalesced fresh emits — a handful of partitions — so paying a
-      // rebalance SHUFFLE on every incremental build only re-compacted
-      // an already-small file set. Compact only once the cache has
-      // actually accumulated files past the threshold (~+2 per build).
-      val cacheParquets = graft.core.Fs.list(cacheDir)
-        .count(_.getFileName.toString.endsWith(".parquet"))
+      val delta = if (pbuckets == 1) hold(deltaRaw) else deltaRaw
       // Overlap the cache write + hardlink carry with the reduce/commit
       // below (r18, guide §2.6): independent until the manifest swap,
       // exactly-once map calls via the persist's per-partition block
       // locks (the full-build rationale above).
       val cacheWritten = runCacheWrite(spark) {
-        writeCache(
-          if (pbuckets == 1 && cacheParquets > graft.store.Store.RebalanceFileThreshold)
-            delta.hint("rebalance")
-          else delta,
-          cacheNext, pbuckets)
+        writeCache(compactIfFragmented(delta, cacheDir, pbuckets), cacheNext, pbuckets)
         if (usePB) carryCacheBuckets(cacheDir, cacheNext, touched)
       }
 
-      // ---- changed output ids (delta-scaled): an id's reduced value can
-      //      move only if some contribution to it did — it appears in the
-      //      NEW emits of a fresh path, or in the CACHED emits of a
-      //      fresh-or-deleted path (old contributions of an updated path
-      //      may shrink; a fully-deleted path may vanish its ids, which
-      //      the carry below must not resurrect). The cached-emits leg
-      //      only needs the TOUCHED buckets' rows (a changed path hashes
-      //      to a touched bucket by definition), so it reads retainSrc —
-      //      on a partitioned cache that is a pbucket-pruned scan, not
-      //      the full cache (r18).
-      val cacheOuts = cache.filter(col("kind") === "out")
-      val changedOutIds = freshEmits.toDF().filter(col("kind") === "out")
-        .select(col("outId").as("id"))
-        .unionByName(retainSrc.filter(col("kind") === "out")
-          .join(changedPaths, Seq("path"), "left_semi")
-          .select(col("outId").as("id")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      idsPersisted = Some(changedOutIds)
+      commitAndSwap(cacheWritten, cacheDir, pbuckets, inputVersionsNow) {
+        // ---- changed output ids (delta-scaled): an id's reduced value
+        //      can move only if some contribution to it did — it appears
+        //      in the NEW emits of a fresh path, or in the CACHED emits
+        //      of a fresh-or-deleted path (old contributions of an
+        //      updated path may shrink; a fully-deleted path may vanish
+        //      its ids, which the carry below must not resurrect). The
+        //      cached-emits leg only needs the TOUCHED buckets' rows (a
+        //      changed path hashes to a touched bucket by definition),
+        //      so it reads retainSrc — on a partitioned cache that is a
+        //      pbucket-pruned scan, not the full cache (r18).
+        val cacheOuts = cache.filter(col("kind") === "out")
+        val changedOutIds = hold(freshEmits.toDF().filter(col("kind") === "out")
+          .select(col("outId").as("id"))
+          .unionByName(retainSrc.filter(col("kind") === "out")
+            .join(changedPaths, Seq("path"), "left_semi")
+            .select(col("outId").as("id")))
+          .distinct())
 
-      // ---- delta reduce: contributions of the changed ids only —
-      //      retained cache rows (anti the changed paths) semi-joined to
-      //      the changed-id set, plus every fresh emit. Unchanged ids are
-      //      never decoded, merged, or re-hashed. At pbuckets == 1 the
-      //      persisted delta already holds exactly (retained ∪ fresh),
-      //      so the semi-join over it IS that set — the fresh emits must
-      //      not be unioned again (every fresh out's id is in
-      //      changedOutIds by construction).
-      val contrib =
-        (if (pbuckets == 1)
-          delta.filter(col("kind") === "out")
-            .join(changedOutIds.select(col("id").as("outId")), Seq("outId"), "left_semi")
-        else
-          cacheOuts.join(changedPaths, Seq("path"), "left_anti")
-            .join(changedOutIds.select(col("id").as("outId")), Seq("outId"), "left_semi")
-            .unionByName(freshEmits.toDF().filter(col("kind") === "out")))
-          .select(emitCols: _*).as[BuildEmit](emitEnc)
-      val reducedChanged = reduceOuts(contrib)
-
-      // ---- hash-gated materialize over the delta; everything else is
-      //      carried byte-identical from the previous output snapshot.
-      //      commitPrepared gets the changed-id set so a bucketed output
-      //      rewrites only the touched id-buckets (the writeEntriesDF COW
-      //      profile, for lens commits too) — at 100 TB the difference
-      //      between rewriting the whole derived collection per
-      //      incremental tick and rewriting 1/B of it.
-      val newVersion = out.nextVersion
-      val old = out.toDF
-      val carried = old.join(changedOutIds, Seq("id"), "left_anti")
-        .select(col("id"), col("version"), col("hash"), col("links"), col("value"))
-      val oldChanged = old.join(changedOutIds, Seq("id"), "left_semi")
-        .select(col("id"), col("version").as("old_version"),
-          col("hash").as("old_hash"))
-      val gated = reducedChanged.join(oldChanged, Seq("id"), "left")
-        .withColumn("version",
-          when(col("old_hash") === col("hash"), col("old_version"))
-            .otherwise(lit(newVersion)))
-        .select(col("id"), col("version"), col("hash"), col("links"), col("value"))
-      val rows = carried.unionByName(gated).as[RecordRow]
-      val committed = out.commitPrepared(rows, Some(changedOutIds))
-      scala.concurrent.Await.result(cacheWritten,
-        scala.concurrent.duration.Duration.Inf)
-      // the fast-path manifest rides the cache swap (atomic with it)
-      inputVersionsNow.foreach(writeInputVersions(cacheNext, _, pbuckets))
-      swapDir(cacheNext, cacheDir)
-      committed
+        // ---- delta reduce: contributions of the changed ids only —
+        //      retained cache rows (anti the changed paths) semi-joined
+        //      to the changed-id set, plus every fresh emit. Unchanged
+        //      ids are never decoded, merged, or re-hashed. At
+        //      pbuckets == 1 the persisted delta already holds exactly
+        //      (retained ∪ fresh), so the semi-join over it IS that set —
+        //      the fresh emits must not be unioned again (every fresh
+        //      out's id is in changedOutIds by construction).
+        val contrib =
+          (if (pbuckets == 1)
+            delta.filter(col("kind") === "out")
+              .join(changedOutIds.select(col("id").as("outId")), Seq("outId"), "left_semi")
+          else
+            cacheOuts.join(changedPaths, Seq("path"), "left_anti")
+              .join(changedOutIds.select(col("id").as("outId")), Seq("outId"), "left_semi")
+              .unionByName(freshEmits.toDF().filter(col("kind") === "out")))
+            .select(emitCols: _*).as[BuildEmit](emitEnc)
+        // ---- hash-gated materialize over the delta; everything else
+        //      is carried byte-identical from the previous output
+        //      snapshot. The changed-id set also lets a bucketed output
+        //      rewrite only the touched id-buckets (the writeEntriesDF
+        //      COW profile, for lens commits too) — at 100 TB the
+        //      difference between rewriting the whole derived collection
+        //      per incremental tick and rewriting 1/B of it.
+        commitChanged(out, reduceOuts(lens.fn, contrib), Right(changedOutIds))
+      }
+      }
     }
     // (logs need no write of their own — Lens.logsOf serves them from
     // the cache parquet the spool becomes, reference lens.js:87-92)
     v
-    } finally {
-      gatePersisted.foreach(_.unpersist(blocking = false))
-      freshPersisted.foreach(_.unpersist(blocking = false))
-      idsPersisted.foreach(_.unpersist(blocking = false))
-      deltaPersisted.foreach(_.unpersist(blocking = false))
+    } finally release.foreach(_())
+  }
+
+  /** The DRIVER-SIZED incremental regime (see [[build]]): `changed` holds
+    * every changed input row the gate collected — fresh rows with their
+    * values, deleted paths with `isFresh = false` and null record
+    * columns — at most `Store.MaxCommitInList` of them. The Spark work
+    * left is four jobs when the changed ids reduce on the driver: the
+    * cache scan for the ids the changed paths output before; one lookup
+    * reading the retained contributions of the changed ids and their
+    * previous output rows; and the output and cache carry writes,
+    * overlapped. The lookup is bounded: past `Store.MaxCommitInList`
+    * changed ids or `driverRows` retained contributions, the same scans
+    * reduce as a Spark stage instead. */
+  private def driverDelta(lens: Lens, cacheRaw: DataFrame, pbuckets: Int, usePB: Boolean,
+                          changed: Seq[Row], mapper: Mapper,
+                          inputVersionsNow: Option[Map[String, Long]], driverRows: Int): Long = {
+    val spark = lens.store.spark
+    import spark.implicits._
+    val cacheDir = lens.cacheDir
+    val out = lens.output
+
+    // ---- map: each fresh record once, on the driver, through the same
+    //      per-record body as the executor map stage
+    val freshEmits: Seq[BuildEmit] = changed.filter(_.getAs[Boolean]("isFresh")).flatMap { r =>
+      mapper((r.getAs[String]("id"), r.getAs[Array[Byte]]("value"), r.getAs[Long]("version"),
+        r.getAs[Int]("ord"), r.getAs[String]("source"), r.getAs[String]("author"),
+        r.getAs[String]("cname")))
     }
+    val changedPaths = changed.map(_.getAs[String]("path"))
+    val isChangedPath = col("path").isin(changedPaths: _*)
+    // a changed path's cache rows sit in its own path-hash bucket: the
+    // touched set folds on the driver (a LocalRelation projection, no job)
+    val touched: Set[Long] =
+      if (!usePB) Set.empty
+      else changedPaths.toDF("path").select(pbucketOf(pbuckets))
+        .collect().map(_.getLong(0)).toSet
+    val touchedCache =
+      if (usePB) cacheRaw.filter(col("pbucket").isin(touched.toSeq: _*)) else cacheRaw
+
+    // ---- cache: NOT path IN (...) carry of the touched buckets ∪ the
+    //      local fresh emits (one partition: one file per generation);
+    //      written while the output leg below runs
+    val nextCache = touchedCache.filter(!isChangedPath).select(emitCols: _*)
+      .unionByName(spark.createDataset(freshEmits)(emitEnc).toDF().coalesce(1))
+    val cacheNext = cacheNextOf(cacheDir)
+    val cacheWritten = runCacheWrite(spark) {
+      writeCache(compactIfFragmented(nextCache, cacheDir, pbuckets), cacheNext, pbuckets)
+      if (usePB) carryCacheBuckets(cacheDir, cacheNext, touched)
+    }
+
+    commitAndSwap(cacheWritten, cacheDir, pbuckets, inputVersionsNow) {
+      // ---- changed output ids: the fresh emits' ids plus the ids the
+      //      changed paths contributed to before
+      val isOut = col("kind") === "out"
+      val oldIds = touchedCache.filter(isOut && isChangedPath).select("outId")
+        .as[String].collect()
+      val freshOuts = freshEmits.filter(_.kind == "out")
+      val changedIds = (freshOuts.map(_.outId) ++ oldIds).distinct
+      val ids: ChangedIds = Left(changedIds)
+      // the retained contributions of the changed ids: cache `out` rows
+      // of unchanged paths, in any bucket
+      val retained = byIds(cacheRaw.filter(isOut && !isChangedPath), "outId", ids, keep = true)
+        .select(emitCols: _*)
+
+      // ---- one bounded lookup job when the changed ids are few: their
+      //      retained contributions and previous output rows (for the
+      //      hash gate, at most one per id), two IN-filtered scans
+      //      read as one union
+      val old = out.toDF
+      val lookup: Option[Seq[Contrib]] =
+        if (changedIds.isEmpty) Some(Seq.empty)
+        else if (changedIds.size > Store.MaxCommitInList) None
+        else collectAtMost(
+          retained.select(col("outId").as("id"), col("ord"), col("natKey"), col("outIdx"),
+            col("value"), lit(0L).as("version"), lit(null).cast("string").as("hash"))
+            .unionByName(byIds(old, "id", ids, keep = true)
+              .select(col("id"), lit(0).as("ord"), lit("").as("natKey"), lit(0).as("outIdx"),
+                lit(null).cast("binary").as("value"), col("version"), col("hash")))
+            .as[Contrib],
+          driverRows + changedIds.size)
+
+      lookup match {
+        case Some(rows) =>
+          // ---- reduce: retained plus fresh contributions, folded per
+          //      id in the Spark regime's order
+          val (prev, kept) = rows.partition(_.hash != null)
+          val fresh = freshOuts.map(e => Contrib(e.outId, e.ord, e.natKey, e.outIdx, e.value, 0L, null))
+          val reduced = (kept ++ fresh).groupBy(_.id).toSeq.map { case (id, cs) =>
+            outputRow(id, foldContribs(cs.sorted(contribOrder).iterator.map(_.value)))
+          }
+          // ---- hash gate + commit: NOT id IN (...) carry of the
+          //      previous snapshot ∪ the local gated rows
+          val newVersion = out.nextVersion
+          val prevById = prev.map(c => c.id -> c).toMap
+          val gated = reduced.map { case (id, bytes, hash, links) =>
+            val version = prevById.get(id).filter(_.hash == hash).fold(newVersion)(_.version)
+            RecordRow(id, version, hash, links, bytes)
+          }
+          val carried = byIds(old, "id", ids, keep = false).select(recordCols: _*)
+          val next = carried.unionByName(spark.createDataset(gated).toDF().coalesce(1))
+          out.commitPrepared(next.as[RecordRow], Some(ids))
+        case None =>
+          // ---- too many changed ids or retained rows for the driver:
+          //      the same scans plus the local fresh emits reduce as a
+          //      Spark stage
+          val contrib = retained.as[BuildEmit](emitEnc)
+            .union(spark.createDataset(freshOuts)(emitEnc))
+          commitChanged(out, reduceOuts(lens.fn, contrib), ids)
+      }
+    }
+  }
+
+  /** Compacts a `pbuckets == 1` cache write (AQE rebalance) only once the
+    * current cache holds more than `Store.RebalanceFileThreshold` parquet
+    * files (r18, VERDICT r17 Next #1): an incremental cache frame is a
+    * no-shuffle carry scan plus a few fresh-emit partitions, so paying a
+    * rebalance SHUFFLE on every build only re-compacted an already-small
+    * file set; each build adds ~1-2 files, and every ~threshold-th build
+    * compacts them. */
+  private def compactIfFragmented(df: DataFrame, cacheDir: Path, pbuckets: Int): DataFrame = {
+    val cacheParquets = graft.core.Fs.list(cacheDir)
+      .count(_.getFileName.toString.endsWith(".parquet"))
+    if (pbuckets == 1 && cacheParquets > Store.RebalanceFileThreshold) df.hint("rebalance")
+    else df
+  }
+
+  /** Runs a build's reduce+commit `leg`, which overlaps `cacheWritten`,
+    * then finishes the build: await the cache write, write the
+    * input-versions manifest into `cache-next`, swap it live. If the leg
+    * throws, the cache write is drained first — its own failure is
+    * dropped; the leg's is the one reported — so no
+    * `graft-lens-cache-write` thread still reads the frames the caller's
+    * `finally` unpersists, or writes `cache-next` after the writer lock
+    * is released. The live cache stays the last good one. */
+  private def commitAndSwap(cacheWritten: Future[Unit], cacheDir: Path, pbuckets: Int,
+                            inputVersions: Option[Map[String, Long]])(leg: => Long): Long = {
+    val committed =
+      try leg
+      catch {
+        case e: Throwable =>
+          try Await.ready(cacheWritten, Duration.Inf)
+          catch { case i: InterruptedException => e.addSuppressed(i) }
+          throw e
+      }
+    Await.result(cacheWritten, Duration.Inf)
+    val cacheNext = cacheNextOf(cacheDir)
+    // the fast-path manifest rides the cache swap (atomic with it)
+    inputVersions.foreach(writeInputVersions(cacheNext, _, pbuckets))
+    swapDir(cacheNext, cacheDir)
+    committed
   }
 
   /** Executor for the cache-write leg that overlaps the reduce+commit
@@ -768,10 +1048,10 @@ object LensBuild {
     * small-build regime), and can lose when both legs are
     * cluster-saturating and memory-bound. */
   private def runCacheWrite(spark: org.apache.spark.sql.SparkSession)(
-      body: => Unit): scala.concurrent.Future[Unit] =
+      body: => Unit): Future[Unit] =
     if (spark.conf.get("graft.lens.overlapCacheWrite", "true") == "true")
-      scala.concurrent.Future(body)(sideEc)
-    else { body; scala.concurrent.Future.successful(()) }
+      Future(body)(sideEc)
+    else { body; Future.successful(()) }
 
   /** Cache-layout write: `pbuckets` > 1 hashes rows into `pbucket=k`
     * partition dirs on the input path — one shuffle keyed on the bucket
@@ -781,7 +1061,7 @@ object LensBuild {
     * pre-COW shape. */
   private def writeCache(df: DataFrame, dest: Path, pbuckets: Int): Unit =
     if (pbuckets > 1)
-      df.withColumn("pbucket", pmod(xxhash64(col("path")), lit(pbuckets.toLong)))
+      df.withColumn("pbucket", pbucketOf(pbuckets))
         .repartition(col("pbucket"))
         .write.mode("overwrite").partitionBy("pbucket").parquet(dest.toString)
     else
@@ -828,6 +1108,10 @@ object LensBuild {
       math.min(MaxCacheBuckets.toLong, bytes / TargetCacheBucketBytes + 1).toInt
     }
   }
+
+  /** The staging dir a build writes the next cache generation into,
+    * swapped live only after the output commit. */
+  private def cacheNextOf(cacheDir: Path): Path = cacheDir.resolveSibling("cache-next")
 
   private def swapDir(tmp: Path, dst: Path): Unit = {
     graft.core.Fs.rmTree(dst)

@@ -49,8 +49,10 @@ object Store {
     * the unbucketed-merge fast path (r18): beyond this, the literal
     * list bloats the plan and the full-outer shape's one shuffle is the
     * better trade. HTTP PUT/DELETE batches are 1-a-few ids; bulk ingest
-    * arrives as a DataFrame (no knownIds) and never hits this. */
-  private[store] val MaxCommitInList = 1024
+    * arrives as a DataFrame (no knownIds) and never hits this. The same
+    * cap bounds a lens build's driver-sized incremental regime
+    * (`LensBuild.build`), whose output commit is the same `NOT IN` carry. */
+  private[graft] val MaxCommitInList = 1024
 
   /** Unbucketed snapshots compact (AQE rebalance before the write) only
     * when the previous snapshot exceeds this many parquet files —
@@ -780,8 +782,8 @@ final class Collection(val store: Store, val path: DataPath) {
   /** Replace contents from an already-prepared RecordRow dataset (used by
     * the lens materializer, which computes versions itself).
     *
-    * `changedIds` (single `id` STRING column) enables the copy-on-write
-    * bucket carry on a bucketed store — the same I/O profile a dataset
+    * `changedIds` (held ids, or a frame of one `id` STRING column)
+    * enables the copy-on-write bucket carry on a bucketed store — the same I/O profile a dataset
     * merge commit gets from [[writeEntriesDF]]: only the buckets
     * containing a changed id are rewritten; every other bucket carries
     * forward from the previous snapshot by hardlink. CALLER CONTRACT:
@@ -791,9 +793,12 @@ final class Collection(val store: Store, val path: DataPath) {
     * keep their version); `changedIds` must cover every id whose row
     * changed AND every id that vanished. Without `changedIds` (or on an
     * unbucketed store, or when no previous snapshot exists) the commit
-    * rewrites the snapshot wholesale, as before. */
+    * rewrites the snapshot wholesale, as before. Ids the caller holds
+    * on the driver (`Left`) fold their bucket set on the driver
+    * ([[bucketsOfIds]], no Spark job); an id frame (`Right`) pays one
+    * distinct job. */
   private[graft] def commitPrepared(rows: Dataset[RecordRow],
-                                    changedIds: Option[DataFrame] = None): Long =
+                                    changedIds: Option[Either[Seq[String], DataFrame]] = None): Long =
     store.withLock(path) { store.withCommitGate {
     require(exists, s"collection ${path.encoded} does not exist")
     val m = meta
@@ -802,7 +807,7 @@ final class Collection(val store: Store, val path: DataPath) {
       .filter(_ => changedIds.isDefined && hasParquet(snapshotDir(m.version)))
     cow match {
       case Some(b) =>
-        val touched = touchedBuckets(changedIds.get, b)
+        val touched = changedIds.get.fold(bucketsOfIds(_, b), touchedBuckets(_, b))
         val filtered = rows.toDF().filter(bucketExpr(b).isin(touched: _*))
         commitSnapshot(filtered, m, newVersion, carrySkip = Some(touched.toSet))
       case None =>

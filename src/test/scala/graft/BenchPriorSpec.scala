@@ -32,6 +32,15 @@ class BenchPriorSpec extends AnyFunSuite {
 
   private val names = Seq("q2_join", "q1_agg", "q10_dedup")
 
+  test("a subset run (SPARK_GRAFT_BENCH_ONLY) writes no artifact; a full run writes all three") {
+    assert(BenchPrior.artifactPaths(subset = true, None, "/data/sf0.1", 32).isEmpty)
+    assert(BenchPrior.artifactPaths(subset = true, Some("x.json"), "/data/sf0.1", 32).isEmpty)
+    assert(BenchPrior.artifactPaths(subset = false, None, "/data/sf0.1", 8) ==
+      Seq("target/bench.json", "BENCH_LATEST_sf0.1.json", "BENCH_LATEST_sf0.1_c8.json"))
+    assert(BenchPrior.artifactPaths(subset = false, Some("out/b.json"), "/data/sf1.0", 32).head ==
+      "out/b.json")
+  }
+
   test("decodes walls positionally over the alpha order, centiseconds to seconds") {
     val raw = artifact(names, Seq(212, 64, 1333), "/root/testdata/sf0.1")
     val got = BenchPrior.decodeWjLine(raw, "/root/testdata/sf0.1", names)

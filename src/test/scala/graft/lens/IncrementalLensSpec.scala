@@ -3,6 +3,8 @@ package graft.lens
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -17,6 +19,26 @@ object CountingTagFn extends MapFn {
   val calls = new AtomicInteger(0)
   def map(ctx: MapContext): Unit = {
     calls.incrementAndGet()
+    ctx.data match {
+      case o: PoObj => o.fields.get("tags") match {
+        case Some(PoArr(tags)) => tags.foreach {
+          case PoStr(t) => ctx.output(t, PoSet(PoStr(ctx.path.recordID)))
+          case _ => ()
+        }
+        case _ => ()
+      }
+      case _ => ()
+    }
+  }
+}
+
+/** [[CountingTagFn]] with a 25 ms map call: long enough that a full
+  * build's cache write is still mapping when its commit leg fails. */
+object SlowCountingTagFn extends MapFn {
+  val calls = new AtomicInteger(0)
+  def map(ctx: MapContext): Unit = {
+    calls.incrementAndGet()
+    Thread.sleep(25)
     ctx.data match {
       case o: PoObj => o.fields.get("tags") match {
         case Some(PoArr(tags)) => tags.foreach {
@@ -191,6 +213,57 @@ class IncrementalLensSpec extends AnyFunSuite {
       assert(setOf(lens.output.read("common").get) ==
         (1 to 24).filterNot(Set(3, 7)).map(i => s"r$i").toSet)
     } finally spark.conf.unset("graft.lens.cachePartitions")
+  }
+
+  test("a commit leg that throws drains the overlapped cache write; the live cache stays the last good one") {
+    val store = freshStore()
+    val d = store.dataset("a", "drain").create()
+    d.writeEntries((1 to 16).map(i => graft.store.WriteEntry(s"r$i", Some(doc(s"t$i", "all")))),
+      graft.store.WriteMode.Merge)
+    val lens = new Lens(store, "a", "drain-lens",
+      Seq(DataPath("datasets", "a", "drain")), SlowCountingTagFn).create()
+    lens.build()
+    val cache = lens.cacheDir
+    def cacheState(): Map[String, String] =
+      graft.core.Fs.list(cache).map { f =>
+        f.getFileName.toString ->
+          (if (f.getFileName.toString.endsWith(".json")) Files.readString(f)
+           else Files.size(f).toString)
+      }.toMap
+    val lastGood = cacheState()
+    def busyWriters(): Seq[String] =
+      Thread.getAllStackTraces.asScala.collect {
+        case (t, st) if t.getName == "graft-lens-cache-write" &&
+            st.exists(_.getClassName.startsWith("graft.lens.LensBuild")) =>
+          st.take(8).mkString(" < ")
+      }.toSeq
+
+    d.write("r17", doc("t17"))
+    d.write("r3", doc("t3b"))
+    // the output collection's manifest goes missing: the reduce+commit
+    // leg throws at its first read of it, while the cache write (which
+    // maps every record of the full build) is still running
+    val meta = store.dir(lens.path).resolve("meta.json")
+    val aside = meta.resolveSibling("meta.json.aside")
+    Files.move(meta, aside)
+    Seq[(String, () => Long)]("full" -> (() => lens.buildFull()),
+      "incremental" -> (() => lens.build())).foreach { case (shape, b) =>
+      intercept[java.nio.file.NoSuchFileException](b())
+      assert(busyWriters().isEmpty,
+        s"$shape: a cache-write thread outlived the failed build: ${busyWriters()}")
+      assert(SparkTestBase.spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+        s"$shape: Spark jobs still running after the failed build returned")
+      assert(cacheState() == lastGood, s"$shape: the live cache must stay the last good one")
+    }
+    Files.move(aside, meta)
+
+    SlowCountingTagFn.calls.set(0)
+    lens.build()
+    assert(SlowCountingTagFn.calls.get == 2, "the retry maps each fresh record exactly once")
+    assert(setOf(lens.output.read("t17").get) == Set("r17"))
+    assert(setOf(lens.output.read("t3b").get) == Set("r3"))
+    assert(lens.output.read("t3").isEmpty)
+    assert(setOf(lens.output.read("all").get) == (1 to 16).filter(_ != 3).map(i => s"r$i").toSet)
   }
 
   test("cached logs survive incremental rebuilds of other records") {

@@ -1,0 +1,107 @@
+package graft.lens
+
+import java.nio.file.Files
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTestBase
+import graft.core._
+import graft.store.{DataPath, Store}
+
+/** Job census of the fixed-cost operation shapes: how many Spark jobs a
+  * settled lens rebuild, a one-record incremental build, a one-record
+  * dataset PUT and a batched bucketed lookup schedule. Each shape's
+  * per-job scheduling is most of its wall time at small scale, so these
+  * counts are pinned as budgets: a change that adds a job to one of them
+  * fails here, with the job names in the message. */
+class JobBudgetSpec extends AnyFunSuite {
+  private val spark = SparkTestBase.spark
+
+  private def freshStore(buckets: Option[Int] = None): Store =
+    new Store(spark, Files.createTempDirectory("graft-jobs").toString, buckets)
+
+  private def doc(tags: String*): PoValue =
+    PoObj("tags" -> PoArr(tags.map(PoStr.apply).toVector))
+
+  /** Runs `body` and returns its result with the names of the Spark jobs
+    * it scheduled (listener bus flushed on both sides). */
+  private def jobsOf[A](body: => A): (A, Seq[String]) = {
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        names.add(j.stageInfos.map(_.name).distinct.mkString(" | "))
+    }
+    org.apache.spark.GraftSparkShim.flushListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.GraftSparkShim.flushListenerBus(spark.sparkContext)
+      (r, names.toArray(Array.empty[String]).toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def tagLens(store: Store): Lens = {
+    val d = store.dataset("a", "docs").create()
+    (1 to 50).foreach(i => d.write(s"r$i", doc(s"t${i % 7}", s"t${i % 3}")))
+    val lens = new Lens(store, "a", "tags",
+      Seq(DataPath("datasets", "a", "docs")), CountingTagFn).create()
+    lens.build() // cold full build: not a shape under test
+    lens
+  }
+
+  test("settled rebuild schedules 0 jobs") {
+    val lens = tagLens(freshStore())
+    val v = lens.output.meta.version
+    val (got, jobs) = jobsOf(lens.build())
+    assert(got == v)
+    info(s"settled rebuild: ${jobs.size} jobs")
+    assert(jobs.isEmpty, s"settled rebuild ran ${jobs.size} job(s): ${jobs.mkString("; ")}")
+  }
+
+  test("one-record incremental build schedules at most 8 jobs and maps once") {
+    // bucketed: the output's touched buckets fold on the driver, so the
+    // copy-on-write commit adds no bucket-probe job
+    Seq(None, Some(8)).foreach { buckets =>
+      val store = freshStore(buckets)
+      val lens = tagLens(store)
+      // a warm incremental build first: the shape under test is the
+      // steady-state tick, not the first build after the full one
+      store.dataset("a", "docs").write("r1", doc("t1", "warm"))
+      lens.build()
+      Seq(
+        "update" -> (() => store.dataset("a", "docs").write("r2", doc("t9"))),
+        "insert" -> (() => store.dataset("a", "docs").write("r99", doc("t1", "new"))),
+        "delete" -> (() => store.dataset("a", "docs").delete("r3"))
+      ).foreach { case (shape, commit) =>
+        commit()
+        CountingTagFn.calls.set(0)
+        val (_, jobs) = jobsOf(lens.build())
+        val what = s"one-record $shape build${buckets.fold("")(b => s", $b buckets")}"
+        info(s"$what: ${jobs.size} jobs")
+        assert(jobs.size <= 8, s"$what ran ${jobs.size} jobs: ${jobs.mkString("; ")}")
+        assert(CountingTagFn.calls.get == (if (shape == "delete") 0 else 1))
+      }
+      val t9 = lens.output.read("t9").get.asInstanceOf[PoSet].items
+      assert(t9.contains(PoStr("r2")))
+      assert(lens.output.read("new").get == PoSet(PoStr("r99")))
+    }
+  }
+
+  test("one-record unbucketed dataset PUT schedules 2 jobs") {
+    val d = freshStore().dataset("a", "put").create()
+    (1 to 20).foreach(i => d.write(s"r$i", doc(s"t$i")))
+    val (_, jobs) = jobsOf(d.write("r5", doc("changed")))
+    info(s"dataset PUT: ${jobs.size} jobs")
+    assert(jobs.size == 2, s"PUT ran ${jobs.size} jobs: ${jobs.mkString("; ")}")
+  }
+
+  test("batched readRows on a bucketed store schedules 1 job") {
+    val d = freshStore(buckets = Some(8)).dataset("a", "pts").create()
+    d.writeEntries((1 to 40).map(i =>
+      graft.store.WriteEntry(s"r$i", Some(doc(s"t$i")))), graft.store.WriteMode.Merge)
+    val (rows, jobs) = jobsOf(d.readRows(Seq("r1", "r17", "r33", "nope")))
+    assert(rows.map(_.id).toSet == Set("r1", "r17", "r33"))
+    info(s"batched readRows: ${jobs.size} jobs")
+    assert(jobs.size == 1, s"readRows ran ${jobs.size} jobs: ${jobs.mkString("; ")}")
+  }
+}
