@@ -387,11 +387,11 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- Aggregation over a scan (SURVEY §2.8 aggregation; reduce-sum
     //      lattice semantics expressed relationally) ----
-    // Cost note (r3 verdict "q1 drifted up 3 rounds"): profiled with
-    // Q1Probe — the same group-by with double sums runs ~0.26 s, with
-    // these decimal sums ~1.0 s at sf0.1. Spark's sum widens the buffer
-    // to DECIMAL(28,*), past the 18-digit compact-long representation,
-    // so every update is a BigDecimal op. That cost is the price of the
+    // Cost note (r3 verdict "q1 drifted up 3 rounds"; probe numbers in
+    // SCALING.md, "Retired probes") — the same group-by with double
+    // sums runs ~0.26 s, with these decimal sums ~1.0 s at sf0.1.
+    // Spark's sum widens the buffer to DECIMAL(28,*), past the 18-digit
+    // compact-long representation, so every update is a BigDecimal op. That cost is the price of the
     // bit-exact cross-engine oracle AND the right call at scale: a
     // scaled-long (or narrow-decimal) sum is 4× faster here but
     // overflows at ~1e16 scaled units — i.e. exactly at the 100 TB fact

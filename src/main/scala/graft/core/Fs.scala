@@ -75,6 +75,21 @@ object Fs {
       list.parallelStream().forEach { p => linkOrCopyDir(p._1, p._2) }
     }
 
+  /** The copy-on-write half of a partitioned write: hardlink-carry every
+    * `<column>=k` partition dir of the previous generation `from` into
+    * the next one `to`, except the partitions in `skip` (rewritten this
+    * generation). Bucketed snapshots (`bucket=k`) and the lens compute
+    * cache (`pbucket=k`) both carry this way. */
+  def carryPartitions(from: Path, to: Path, column: String, skip: Set[Long]): Unit =
+    if (Files.isDirectory(from))
+      linkOrCopyDirs(list(from).flatMap { p =>
+        val n = p.getFileName.toString
+        if (!n.startsWith(s"$column=")) None
+        else n.stripPrefix(s"$column=").toLongOption.collect {
+          case k if !skip(k) => (p, to.resolve(n))
+        }
+      })
+
   /** Reap sibling `<prefix><pid>` dirs left by processes that no longer
     * exist. The pid-suffix pattern gives every live process its own
     * scratch dir (concurrent runs never share state — in-process locks

@@ -6,13 +6,14 @@ import scala.jdk.CollectionConverters._
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{Cbor, NaturalOrder, Reduce, RecordStructure}
+import graft.codec.JsonCodec
+import graft.core.{Cbor, NaturalOrder, PoInt, PoObj, PoValue, Reduce, RecordStructure}
 import graft.store.{Collection, DataPath, RecordRow, Store}
 
 /** One row of the spooled map stage — the lens compute cache. Kinds:
@@ -85,14 +86,13 @@ final class Lens(val store: Store, val author: String, val name: String,
     * lens in a different process; in-process Scala fns persist their
     * class name, resolvable only when that class is on the classpath. */
   def saveConfig(): Lens = {
-    import graft.core.{PoArr, PoObj, PoStr}
+    import graft.core.{PoArr, PoStr}
     val (mapType, code) = fn match {
       case js: JsMapFn => ("javascript", PoStr(js.code))
       case dsl: MapDsl.DslMapFn =>
         ("dsl", graft.codec.JsonCodec.decodeString(dsl.rawSpecJson))
       case other => ("scala", PoStr(other.getClass.getName))
     }
-    import graft.core.PoInt
     val cfg = PoObj(
       "memo" -> PoStr(memo),
       "mapType" -> PoStr(mapType),
@@ -370,52 +370,48 @@ object LensBuild {
     * set. The nested `commitPrepared` re-enters via the lock's hold
     * count.
     *
-    * An incremental build runs in one of two regimes, chosen by the
-    * freshness gate — one join of the input against the cache whose
-    * changed rows (fresh rows and deleted paths) are checkpointed once
-    * and collected up to `Store.MaxCommitInList + 1`:
-    *  - DRIVER-SIZED, at most `Store.MaxCommitInList` changed paths: the
-    *    fresh records map on the driver, the ids the changed paths
-    *    output before arrive through one IN-filtered cache scan, and the
-    *    output and the cache are each written as a `NOT IN` carry of the
-    *    previous generation unioned with the local rows. The changed
-    *    output ids reduce on the driver too when there are at most
-    *    `Store.MaxCommitInList` of them and their retained contributions
-    *    fit [[DriverReduceRows]]; otherwise the same IN-filtered scans
-    *    reduce as a Spark stage ([[reduceOuts]]), so a hot id (an index
-    *    entry most records feed) never pulls its whole history to the
-    *    driver. A one-record tick costs a fixed handful of Spark actions,
-    *    not a distributed pipeline whose per-stage scheduling outweighs
-    *    KB of data.
-    *  - SPARK, above the cap (and every full build): map, reduce and
-    *    hash gate run as distributed stages over the checkpointed gate.
-    * The path cap is the store's small-batch cap: the driver-sized
-    * writes inline the changed paths and ids as `NOT IN` literal lists,
-    * the shape a small dataset merge commits with, and that cap is where
-    * the store stops inlining. It is below the regimes' crossover: on a
-    * sandboxed JS token index over 5 000 Zipf documents (4 cores,
-    * `local[4]`) the driver-sized regime built every delta tried, from
-    * 16 to 4 096 changed paths, 0.6–1.1 s faster than the Spark one. No
-    * benchmark workload crosses the cap. Both regimes call the same
-    * helpers — [[Mapper]] per record (sandbox budgets included), [[foldContribs]]
-    * and [[outputRow]] per output id (or [[reduceOuts]] over Spark
-    * rows), [[commitChanged]]'s hash gate and carry, [[writeCache]],
-    * [[carryCacheBuckets]], the `RebalanceFileThreshold` compaction
-    * rule and the `_input_versions.json` manifest — and LensRegimeSpec
-    * checks on random deltas that they give equal outputs and logs. */
+    * An incremental build is one pipeline — gate → map → changed ids →
+    * reduce → hash gate → carry commit, with the cache rewrite beside
+    * it — whose delta is HELD or a FRAME. The freshness gate, one join of
+    * the input against the cache, checkpoints its changed rows (fresh
+    * rows and deleted paths) and collects up to `driverCap + 1` of them:
+    *  - at most `driverCap` (`Store.MaxCommitInList`) changed paths are
+    *    held on the driver: the fresh records map there and their emits
+    *    become a one-partition local frame; the changed paths and output
+    *    ids are driver lists, so every cache and output scan is an
+    *    inlined `IN` / `NOT IN` filter and the touched buckets fold
+    *    locally. The cap is the store's small-batch cap, where it stops
+    *    inlining literal lists;
+    *  - above it, the changed rows stay a persisted frame, the fresh
+    *    records map as an executor stage, and the same scans become
+    *    semi- and anti-joins ([[byIds]]).
+    * The changed output ids fold on the driver — one lookup job for
+    * their retained contributions and previous rows, then the shared
+    * [[foldContribs]]/[[outputRow]] in the Spark reduce's order — when
+    * they are held, at most `Store.MaxCommitInList`, and their retained
+    * contributions fit `driverRows` ([[DriverReduceRows]]). Otherwise
+    * they reduce as a Spark stage ([[reduceOuts]]) and hash-gate through
+    * [[commitChanged]], so a hot id (an index entry most records feed)
+    * never pulls its whole history to the driver. A one-record tick
+    * therefore costs a fixed handful of Spark actions. Both forms call
+    * [[Mapper]] per record (sandbox budgets included), [[writeCache]],
+    * the partition carry, the `RebalanceFileThreshold` compaction rule
+    * and the `_input_versions.json` manifest; LensRegimeSpec checks on
+    * random deltas that held, frame and Spark-reduced builds give the
+    * output, versions and logs of a full rebuild. */
   def build(lens: Lens, incremental: Boolean): Long =
     build(lens, incremental, Store.MaxCommitInList)
 
-  /** `driverCap`: the most changed paths the driver-sized regime takes;
-    * `driverRows`: the most retained contributions it reduces on the
-    * driver. Specs lower them to force the other paths. */
+  /** `driverCap`: the most changed paths a build holds on the driver;
+    * `driverRows`: the most retained contributions it reduces there.
+    * Specs lower them to force the frame delta and the Spark reduce. */
   private[lens] def build(lens: Lens, incremental: Boolean, driverCap: Int,
                           driverRows: Int = DriverReduceRows): Long =
     lens.store.withLock(lens.path)(doBuild(lens, incremental, driverCap, driverRows))
 
   /** The most retained contributions (cache `out` rows of the changed
-    * output ids) the driver-sized regime collects and folds on the
-    * driver; beyond it the changed ids reduce as a Spark stage. Measured
+    * output ids) a build collects and folds on the driver; beyond it
+    * the changed ids reduce as a Spark stage. Measured
     * on a sandboxed JS token index over a Zipf corpus (4 cores,
     * `local[4]`, 6 GiB heap): the driver fold beat the Spark reduce at
     * every size tried, up to 96k retained rows (1.9 s against 2.5 s per
@@ -431,8 +427,8 @@ object LensBuild {
   /** The per-record body of the map stage: one map call under the lens's
     * budgets (preemptive sandbox or cooperative deadline), turned into
     * the record's cache rows — `seen`, then its outs, logs and error.
-    * The executor map stage and the driver-sized regime both call it, so
-    * a fresh record maps exactly once whichever regime runs it. */
+    * The executor map stage and a held delta both call it, so a fresh
+    * record maps exactly once wherever it runs. */
   private final case class Mapper(fn: MapFn, timeoutMs: Long, sandboxed: Boolean,
                                   memCap: Long) {
     def apply(r: InRow): Seq[BuildEmit] = {
@@ -493,8 +489,9 @@ object LensBuild {
       .toDF("id", "value", "hash", "links")
   }
 
-  /** The output ids an incremental build changes: held on the driver
-    * (`Left`) or as a frame of one `id` column (`Right`). */
+  /** The keys an incremental build changes — input paths or output ids:
+    * held on the driver (`Left`) or as a frame of one `id` column
+    * (`Right`). */
   private type ChangedIds = Either[Seq[String], DataFrame]
 
   /** The rows of `df` whose `column` is (`keep`) or is not one of `ids`:
@@ -548,7 +545,7 @@ object LensBuild {
     if (parts.exists(_.size > share)) None else Some(parts.toSeq.flatten)
   }
 
-  /** A row the driver-sized regime reduces or hash-gates: a contribution
+  /** A row the driver fold reduces or hash-gates: a contribution
     * to output id `id` (`hash` null), or that id's previous output row
     * (`hash` and `version` set, `value` null). Package-private, not
     * private: Spark's generated deserializer must reach its constructor. */
@@ -574,9 +571,10 @@ object LensBuild {
     * cache's discovered `pbucket` column. */
   private val emitCols: Seq[Column] = emitEnc.schema.fieldNames.toSeq.map(col)
 
-  /** The cache's path-hash bucket of each row. */
-  private def pbucketOf(pbuckets: Int): Column =
-    pmod(xxhash64(col("path")), lit(pbuckets.toLong))
+  /** The cache's path-hash bucket of each row (of its input path in
+    * `column`). */
+  private def pbucketOf(pbuckets: Int, column: String = "path"): Column =
+    pmod(xxhash64(col(column)), lit(pbuckets.toLong))
 
   private def doBuild(lens: Lens, incremental: Boolean, driverCap: Int, driverRows: Int): Long = {
     val store = lens.store
@@ -740,12 +738,7 @@ object LensBuild {
       //     hash-gates only the changed ids.
       // The gate itself stays O(corpus metadata) — one full-outer join of
       // narrow (path, version) rows — which is the irreducible cost of
-      // detecting new and deleted records. Its changed rows are
-      // collected up to `driverCap + 1`: up to `driverCap` the legs run
-      // in the DRIVER-SIZED regime ([[driverDelta]]: local map, IN-
-      // filtered cache scans, a local or Spark reduce, NOT IN carry
-      // writes — a fixed handful of Spark actions); above it they run as
-      // Spark stages over the same checkpointed changed rows, below.
+      // detecting new and deleted records.
 
       // ---- freshness gate (reference: lens.js:134-190 — version-gated
       //      recompute, cache retain). ONE full-outer join against the
@@ -755,10 +748,9 @@ object LensBuild {
       //      the footer-infer job. `pbucket` (when the cache is
       //      partitioned) arrives as a discovered partition column.
       val cacheRaw = spark.read.schema(emitEnc.schema).parquet(cacheDir.toString)
-      val cache = cacheRaw.select(emitCols: _*).as[BuildEmit](emitEnc)
       val pbuckets = readPBuckets(cacheDir).getOrElse(1)
       val usePB = pbuckets > 1 && cacheRaw.columns.contains("pbucket")
-      val seen = cache.filter(col("kind") === "seen")
+      val seen = cacheRaw.filter(col("kind") === "seen")
         .select(col("path"), col("inVersion").as("cachedV"))
       val gateRaw = current.join(seen, Seq("path"), "full_outer")
         .withColumn("isCur", col("version").isNotNull) // RecordRow.version is non-null
@@ -768,8 +760,8 @@ object LensBuild {
       // `localCheckpoint(eager = false)` runs the join's shuffles now,
       // and the collect below computes (and pins) the changed rows —
       // where a persisted frame would cost AQE a job of its own to
-      // materialize. The Spark regime reads the same checkpoint, so an
-      // over-cap delta does not join the corpus twice.
+      // materialize. A delta too large to hold reads the same
+      // checkpoint, so it does not join the corpus twice.
       val changed = gateRaw.filter(col("isFresh") || !col("isCur"))
         .select((col("path") +: inCols.map(col)) :+ col("isFresh"): _*)
         .localCheckpoint(eager = false)
@@ -784,46 +776,64 @@ object LensBuild {
         inputVersionsNow.foreach(writeInputVersions(cacheDir, _, pbuckets))
         return out.meta.version // no-op
       }
-      if (changedRows.length <= driverCap)
-        driverDelta(lens, cacheRaw, pbuckets, usePB, changedRows.toSeq, mapper,
-          inputVersionsNow, driverRows)
-      else {
-      // ==== SPARK REGIME: more changed paths than the driver takes ====
-      // The checkpointed changed rows serve every leg below, persisted
-      // so the planner sees their real size (a checkpoint reports none);
-      // the first action names the cache buckets the rewrite must touch.
-      val changedHeld = hold(changed)
-      val touched = changedHeld.select(pbucketOf(pbuckets).as("pb")).distinct()
-        .as[Long].collect().toSet
-      val changedPaths = changedHeld.select("path")
-      val freshEmits = hold(mapEmits(changedHeld.filter(col("isFresh"))))
 
-      // ---- cache copy-on-write: rewrite ONLY the touched pbuckets
-      //      (retained rows of those buckets + all fresh emits — a fresh
-      //      path's emits land in its own path-hash bucket, so the delta
-      //      frame covers exactly the touched dirs); every untouched
-      //      bucket dir carries forward by hardlink. The retained-row
-      //      classification is an ANTI-join against the DELTA-SIZED
-      //      changed-path set (broadcastable), not a semi-join against
-      //      the O(corpus) retain set the previous shape shuffled.
-      val retainSrc =
-        if (usePB) cacheRaw.filter(col("pbucket").isin(touched.toSeq: _*))
-          .select(emitCols: _*)
-        else cache.toDF()
-      val retainedTouched = retainSrc.join(changedPaths, Seq("path"), "left_anti")
-      // At pbuckets == 1 the delta IS the whole next cache (retained ∪
-      // fresh) — persist it so the cache write's materialization also
-      // serves the reduce below, which then never re-scans the previous
-      // cache parquet (r18: one fewer scan + anti-join leg per build).
-      val deltaRaw = retainedTouched.unionByName(freshEmits.toDF())
-      val delta = if (pbuckets == 1) hold(deltaRaw) else deltaRaw
-      // Overlap the cache write + hardlink carry with the reduce/commit
-      // below (r18, guide §2.6): independent until the manifest swap,
-      // exactly-once map calls via the persist's per-partition block
-      // locks (the full-build rationale above).
+      // ---- the delta's representation follows its size: up to
+      //      `driverCap` changed paths are HELD on the driver (the rows
+      //      just collected), above it they are a FRAME over the
+      //      checkpoint, persisted so the planner sees their real size
+      //      (a checkpoint reports none). Every leg below reads either
+      //      form: paths and output ids are [[ChangedIds]], the fresh
+      //      emits one Dataset.
+      val held = changedRows.length <= driverCap
+      val changedPaths: ChangedIds =
+        if (held) Left(changedRows.toSeq.map(_.getAs[String]("path")))
+        else Right(hold(changed).select(col("path").as("id")))
+      // a changed path's cache rows sit in its own path-hash bucket:
+      // held paths fold on the driver (a LocalRelation projection, no
+      // job); a frame pays one distinct collect, which also materializes
+      // it — every plan made from here on (the fresh emits' pin
+      // included) sees its real size and broadcasts it
+      val touched: Set[Long] = changedPaths match {
+        case Left(paths) if usePB =>
+          paths.toDF("id").select(pbucketOf(pbuckets, "id")).as[Long].collect().toSet
+        case Left(_) => Set.empty
+        case Right(paths) =>
+          paths.select(pbucketOf(pbuckets, "id")).distinct().as[Long].collect().toSet
+      }
+      // the fresh records map on the driver when held, through the same
+      // per-record body as the executor map stage, into a one-partition
+      // frame (the cache gains one file per generation)
+      val freshLocal: Option[Seq[BuildEmit]] =
+        if (!held) None
+        else Some(changedRows.toSeq.filter(_.getAs[Boolean]("isFresh")).flatMap { r =>
+          mapper((r.getAs[String]("id"), r.getAs[Array[Byte]]("value"),
+            r.getAs[Long]("version"), r.getAs[Int]("ord"), r.getAs[String]("source"),
+            r.getAs[String]("author"), r.getAs[String]("cname")))
+        })
+      val freshEmits: Dataset[BuildEmit] = freshLocal match {
+        case Some(emits) => spark.createDataset(emits)(emitEnc).coalesce(1)
+        case None => hold(mapEmits(changed.filter(col("isFresh"))))
+      }
+      val touchedCache =
+        if (usePB) cacheRaw.filter(col("pbucket").isin(touched.toSeq: _*)) else cacheRaw
+
+      // ---- cache copy-on-write: the touched buckets' rows of unchanged
+      //      paths ∪ the fresh emits (a fresh path's emits land in its
+      //      own bucket, so this covers exactly the touched dirs); every
+      //      untouched bucket dir carries forward by hardlink. Written
+      //      while the reduce+commit leg below runs (r18, guide §2.6):
+      //      the two are independent until the manifest swap, and the
+      //      persisted fresh emits' block locks keep map calls exactly
+      //      once when both legs read them.
+      val nextCache = byIds(touchedCache, "path", changedPaths, keep = false)
+        .select(emitCols: _*).unionByName(freshEmits.toDF())
       val cacheWritten = runCacheWrite(spark) {
-        writeCache(compactIfFragmented(delta, cacheDir, pbuckets), cacheNext, pbuckets)
-        if (usePB) carryCacheBuckets(cacheDir, cacheNext, touched)
+        // a plain cache compacts by the store's unbucketed-snapshot rule:
+        // each build adds ~1-2 files, so paying a rebalance shuffle every
+        // build would only re-compact an already-small file set
+        writeCache(if (pbuckets == 1) Store.compactIfFragmented(nextCache, cacheDir) else nextCache,
+          cacheNext, pbuckets)
+        if (usePB) graft.core.Fs.carryPartitions(cacheDir, cacheNext, "pbucket", touched)
       }
 
       commitAndSwap(cacheWritten, cacheDir, pbuckets, inputVersionsNow) {
@@ -831,176 +841,77 @@ object LensBuild {
         //      can move only if some contribution to it did — it appears
         //      in the NEW emits of a fresh path, or in the CACHED emits
         //      of a fresh-or-deleted path (old contributions of an
-        //      updated path may shrink; a fully-deleted path may vanish
-        //      its ids, which the carry below must not resurrect). The
-        //      cached-emits leg only needs the TOUCHED buckets' rows (a
-        //      changed path hashes to a touched bucket by definition),
-        //      so it reads retainSrc — on a partitioned cache that is a
-        //      pbucket-pruned scan, not the full cache (r18).
-        val cacheOuts = cache.filter(col("kind") === "out")
-        val changedOutIds = hold(freshEmits.toDF().filter(col("kind") === "out")
+        //      updated path may shrink; a deleted path may vanish its
+        //      ids, which the carry must not resurrect). The cached leg
+        //      reads only the touched buckets: a pbucket-pruned scan.
+        val isOut = col("kind") === "out"
+        val freshOuts = freshEmits.filter(isOut)
+        val oldIds = byIds(touchedCache.filter(isOut), "path", changedPaths, keep = true)
           .select(col("outId").as("id"))
-          .unionByName(retainSrc.filter(col("kind") === "out")
-            .join(changedPaths, Seq("path"), "left_semi")
-            .select(col("outId").as("id")))
-          .distinct())
+        val ids: ChangedIds = freshLocal match {
+          case Some(emits) =>
+            Left((emits.filter(_.kind == "out").map(_.outId) ++ oldIds.as[String].collect()).distinct)
+          case None =>
+            Right(hold(freshOuts.select(col("outId").as("id")).unionByName(oldIds).distinct()))
+        }
+        // the retained contributions of the changed ids: cache `out`
+        // rows of unchanged paths, in any bucket
+        val retained = byIds(byIds(cacheRaw.filter(isOut), "path", changedPaths, keep = false),
+          "outId", ids, keep = true).select(emitCols: _*)
 
-        // ---- delta reduce: contributions of the changed ids only —
-        //      retained cache rows (anti the changed paths) semi-joined
-        //      to the changed-id set, plus every fresh emit. Unchanged
-        //      ids are never decoded, merged, or re-hashed. At
-        //      pbuckets == 1 the persisted delta already holds exactly
-        //      (retained ∪ fresh), so the semi-join over it IS that set —
-        //      the fresh emits must not be unioned again (every fresh
-        //      out's id is in changedOutIds by construction).
-        val contrib =
-          (if (pbuckets == 1)
-            delta.filter(col("kind") === "out")
-              .join(changedOutIds.select(col("id").as("outId")), Seq("outId"), "left_semi")
-          else
-            cacheOuts.join(changedPaths, Seq("path"), "left_anti")
-              .join(changedOutIds.select(col("id").as("outId")), Seq("outId"), "left_semi")
-              .unionByName(freshEmits.toDF().filter(col("kind") === "out")))
-            .select(emitCols: _*).as[BuildEmit](emitEnc)
-        // ---- hash-gated materialize over the delta; everything else
-        //      is carried byte-identical from the previous output
-        //      snapshot. The changed-id set also lets a bucketed output
-        //      rewrite only the touched id-buckets (the writeEntriesDF
-        //      COW profile, for lens commits too) — at 100 TB the
-        //      difference between rewriting the whole derived collection
-        //      per incremental tick and rewriting 1/B of it.
-        commitChanged(out, reduceOuts(lens.fn, contrib), Right(changedOutIds))
-      }
+        // ---- the bounded fast path: when the changed ids are held and
+        //      few, ONE lookup job reads their retained contributions and
+        //      previous output rows (for the hash gate, at most one per
+        //      id) as a union of two IN-filtered scans; if they fit
+        //      `driverRows`, the ids reduce and hash-gate on the driver
+        //      with the shared fold, in the Spark reduce's order
+        val old = out.toDF
+        val folded: Option[Seq[RecordRow]] = for {
+          emits <- freshLocal
+          held <- ids.left.toOption if held.size <= Store.MaxCommitInList
+          rows <- if (held.isEmpty) Some(Seq.empty) else collectAtMost(
+            retained.select(col("outId").as("id"), col("ord"), col("natKey"), col("outIdx"),
+              col("value"), lit(0L).as("version"), lit(null).cast("string").as("hash"))
+              .unionByName(byIds(old, "id", ids, keep = true)
+                .select(col("id"), lit(0).as("ord"), lit("").as("natKey"), lit(0).as("outIdx"),
+                  lit(null).cast("binary").as("value"), col("version"), col("hash")))
+              .as[Contrib],
+            driverRows + held.size)
+        } yield {
+          val (prev, kept) = rows.partition(_.hash != null)
+          val fresh = emits.filter(_.kind == "out")
+            .map(e => Contrib(e.outId, e.ord, e.natKey, e.outIdx, e.value, 0L, null))
+          val newVersion = out.nextVersion
+          val prevById = prev.map(c => c.id -> c).toMap
+          (kept ++ fresh).groupBy(_.id).toSeq.map { case (id, cs) =>
+            val (_, bytes, hash, links) =
+              outputRow(id, foldContribs(cs.sorted(contribOrder).iterator.map(_.value)))
+            val version = prevById.get(id).filter(_.hash == hash).fold(newVersion)(_.version)
+            RecordRow(id, version, hash, links, bytes)
+          }
+        }
+
+        folded match {
+          case Some(gated) =>
+            // NOT id IN (...) carry of the previous snapshot ∪ the
+            // locally gated rows
+            val carried = byIds(old, "id", ids, keep = false).select(recordCols: _*)
+            out.commitPrepared(
+              carried.unionByName(spark.createDataset(gated).toDF().coalesce(1)).as[RecordRow],
+              Some(ids))
+          case None =>
+            // ---- everything else — a frame delta, too many changed
+            //      ids, a hot id past `driverRows` — reduces as a Spark
+            //      stage over the same scans plus the fresh emits
+            commitChanged(out, reduceOuts(lens.fn, retained.as[BuildEmit](emitEnc).union(freshOuts)),
+              ids)
+        }
       }
     }
     // (logs need no write of their own — Lens.logsOf serves them from
     // the cache parquet the spool becomes, reference lens.js:87-92)
     v
     } finally release.foreach(_())
-  }
-
-  /** The DRIVER-SIZED incremental regime (see [[build]]): `changed` holds
-    * every changed input row the gate collected — fresh rows with their
-    * values, deleted paths with `isFresh = false` and null record
-    * columns — at most `Store.MaxCommitInList` of them. The Spark work
-    * left is four jobs when the changed ids reduce on the driver: the
-    * cache scan for the ids the changed paths output before; one lookup
-    * reading the retained contributions of the changed ids and their
-    * previous output rows; and the output and cache carry writes,
-    * overlapped. The lookup is bounded: past `Store.MaxCommitInList`
-    * changed ids or `driverRows` retained contributions, the same scans
-    * reduce as a Spark stage instead. */
-  private def driverDelta(lens: Lens, cacheRaw: DataFrame, pbuckets: Int, usePB: Boolean,
-                          changed: Seq[Row], mapper: Mapper,
-                          inputVersionsNow: Option[Map[String, Long]], driverRows: Int): Long = {
-    val spark = lens.store.spark
-    import spark.implicits._
-    val cacheDir = lens.cacheDir
-    val out = lens.output
-
-    // ---- map: each fresh record once, on the driver, through the same
-    //      per-record body as the executor map stage
-    val freshEmits: Seq[BuildEmit] = changed.filter(_.getAs[Boolean]("isFresh")).flatMap { r =>
-      mapper((r.getAs[String]("id"), r.getAs[Array[Byte]]("value"), r.getAs[Long]("version"),
-        r.getAs[Int]("ord"), r.getAs[String]("source"), r.getAs[String]("author"),
-        r.getAs[String]("cname")))
-    }
-    val changedPaths = changed.map(_.getAs[String]("path"))
-    val isChangedPath = col("path").isin(changedPaths: _*)
-    // a changed path's cache rows sit in its own path-hash bucket: the
-    // touched set folds on the driver (a LocalRelation projection, no job)
-    val touched: Set[Long] =
-      if (!usePB) Set.empty
-      else changedPaths.toDF("path").select(pbucketOf(pbuckets))
-        .collect().map(_.getLong(0)).toSet
-    val touchedCache =
-      if (usePB) cacheRaw.filter(col("pbucket").isin(touched.toSeq: _*)) else cacheRaw
-
-    // ---- cache: NOT path IN (...) carry of the touched buckets ∪ the
-    //      local fresh emits (one partition: one file per generation);
-    //      written while the output leg below runs
-    val nextCache = touchedCache.filter(!isChangedPath).select(emitCols: _*)
-      .unionByName(spark.createDataset(freshEmits)(emitEnc).toDF().coalesce(1))
-    val cacheNext = cacheNextOf(cacheDir)
-    val cacheWritten = runCacheWrite(spark) {
-      writeCache(compactIfFragmented(nextCache, cacheDir, pbuckets), cacheNext, pbuckets)
-      if (usePB) carryCacheBuckets(cacheDir, cacheNext, touched)
-    }
-
-    commitAndSwap(cacheWritten, cacheDir, pbuckets, inputVersionsNow) {
-      // ---- changed output ids: the fresh emits' ids plus the ids the
-      //      changed paths contributed to before
-      val isOut = col("kind") === "out"
-      val oldIds = touchedCache.filter(isOut && isChangedPath).select("outId")
-        .as[String].collect()
-      val freshOuts = freshEmits.filter(_.kind == "out")
-      val changedIds = (freshOuts.map(_.outId) ++ oldIds).distinct
-      val ids: ChangedIds = Left(changedIds)
-      // the retained contributions of the changed ids: cache `out` rows
-      // of unchanged paths, in any bucket
-      val retained = byIds(cacheRaw.filter(isOut && !isChangedPath), "outId", ids, keep = true)
-        .select(emitCols: _*)
-
-      // ---- one bounded lookup job when the changed ids are few: their
-      //      retained contributions and previous output rows (for the
-      //      hash gate, at most one per id), two IN-filtered scans
-      //      read as one union
-      val old = out.toDF
-      val lookup: Option[Seq[Contrib]] =
-        if (changedIds.isEmpty) Some(Seq.empty)
-        else if (changedIds.size > Store.MaxCommitInList) None
-        else collectAtMost(
-          retained.select(col("outId").as("id"), col("ord"), col("natKey"), col("outIdx"),
-            col("value"), lit(0L).as("version"), lit(null).cast("string").as("hash"))
-            .unionByName(byIds(old, "id", ids, keep = true)
-              .select(col("id"), lit(0).as("ord"), lit("").as("natKey"), lit(0).as("outIdx"),
-                lit(null).cast("binary").as("value"), col("version"), col("hash")))
-            .as[Contrib],
-          driverRows + changedIds.size)
-
-      lookup match {
-        case Some(rows) =>
-          // ---- reduce: retained plus fresh contributions, folded per
-          //      id in the Spark regime's order
-          val (prev, kept) = rows.partition(_.hash != null)
-          val fresh = freshOuts.map(e => Contrib(e.outId, e.ord, e.natKey, e.outIdx, e.value, 0L, null))
-          val reduced = (kept ++ fresh).groupBy(_.id).toSeq.map { case (id, cs) =>
-            outputRow(id, foldContribs(cs.sorted(contribOrder).iterator.map(_.value)))
-          }
-          // ---- hash gate + commit: NOT id IN (...) carry of the
-          //      previous snapshot ∪ the local gated rows
-          val newVersion = out.nextVersion
-          val prevById = prev.map(c => c.id -> c).toMap
-          val gated = reduced.map { case (id, bytes, hash, links) =>
-            val version = prevById.get(id).filter(_.hash == hash).fold(newVersion)(_.version)
-            RecordRow(id, version, hash, links, bytes)
-          }
-          val carried = byIds(old, "id", ids, keep = false).select(recordCols: _*)
-          val next = carried.unionByName(spark.createDataset(gated).toDF().coalesce(1))
-          out.commitPrepared(next.as[RecordRow], Some(ids))
-        case None =>
-          // ---- too many changed ids or retained rows for the driver:
-          //      the same scans plus the local fresh emits reduce as a
-          //      Spark stage
-          val contrib = retained.as[BuildEmit](emitEnc)
-            .union(spark.createDataset(freshOuts)(emitEnc))
-          commitChanged(out, reduceOuts(lens.fn, contrib), ids)
-      }
-    }
-  }
-
-  /** Compacts a `pbuckets == 1` cache write (AQE rebalance) only once the
-    * current cache holds more than `Store.RebalanceFileThreshold` parquet
-    * files (r18, VERDICT r17 Next #1): an incremental cache frame is a
-    * no-shuffle carry scan plus a few fresh-emit partitions, so paying a
-    * rebalance SHUFFLE on every build only re-compacted an already-small
-    * file set; each build adds ~1-2 files, and every ~threshold-th build
-    * compacts them. */
-  private def compactIfFragmented(df: DataFrame, cacheDir: Path, pbuckets: Int): DataFrame = {
-    val cacheParquets = graft.core.Fs.list(cacheDir)
-      .count(_.getFileName.toString.endsWith(".parquet"))
-    if (pbuckets == 1 && cacheParquets > Store.RebalanceFileThreshold) df.hint("rebalance")
-    else df
   }
 
   /** Runs a build's reduce+commit `leg`, which overlaps `cacheWritten`,
@@ -1074,20 +985,6 @@ object LensBuild {
       // per file)
       df.write.mode("overwrite").parquet(dest.toString)
 
-  /** Hardlink-carry every untouched `pbucket=k` dir of the previous
-    * cache generation into the next — the COW half of the cache swap,
-    * O(#files) metadata work (the bucketed-snapshot carryBuckets
-    * profile). */
-  private def carryCacheBuckets(from: Path, to: Path, skip: Set[Long]): Unit =
-    graft.core.Fs.linkOrCopyDirs(
-      graft.core.Fs.list(from).flatMap { p =>
-        val n = p.getFileName.toString
-        if (!n.startsWith("pbucket=")) None
-        else n.stripPrefix("pbucket=").toLongOption.collect {
-          case k if !skip(k) => (p, to.resolve(n))
-        }
-      })
-
   /** Cache partition count for a full (re)write: explicit
     * `graft.lens.cachePartitions` session conf wins; otherwise derived
     * from the current input snapshot bytes at ~64 MB of input per
@@ -1132,57 +1029,32 @@ object LensBuild {
 
   private val PBucketsKey = "__pbuckets"
 
-  private[lens] def readPBuckets(cacheDir: Path): Option[Int] =
+  /** The manifest's entries, [[PBucketsKey]] included; None when the
+    * file is absent or not a JSON object of integers (a torn write). */
+  private def readManifest(cacheDir: Path): Option[Map[String, Long]] =
     try {
       val f = inputVersionsFile(cacheDir)
       if (!Files.isRegularFile(f)) None
-      else ("\"" + PBucketsKey + "\":(\\d+)").r
-        .findFirstMatchIn(Files.readString(f)).map(_.group(1).toInt)
-    } catch { case _: Throwable => None }
-
-  private def readInputVersions(cacheDir: Path): Option[Map[String, Long]] =
-    try {
-      val f = inputVersionsFile(cacheDir)
-      if (!Files.isRegularFile(f)) None
-      else {
-        val s = Files.readString(f)
-        val re = """"((?:[^"\\]|\\.)*)":(\d+)""".r
-        // single left-to-right unescape pass (ADVICE r16): sequential
-        // replace() mis-decodes a literal backslash-then-quote key
-        // (\\\" would unescape the quote first, then fuse the escapes)
-        def unescape(k: String): String = {
-          val sb = new java.lang.StringBuilder(k.length)
-          var i = 0
-          while (i < k.length) {
-            val c = k.charAt(i)
-            if (c == '\\' && i + 1 < k.length) {
-              k.charAt(i + 1) match {
-                case 'n' => sb.append('\n'); case 't' => sb.append('\t')
-                case 'r' => sb.append('\r'); case 'b' => sb.append('\b')
-                case 'f' => sb.append('\f')
-                case 'u' if i + 5 < k.length =>
-                  sb.append(Integer.parseInt(k.substring(i + 2, i + 6), 16).toChar)
-                  i += 4
-                case other => sb.append(other)
-              }
-              i += 2
-            } else { sb.append(c); i += 1 }
-          }
-          sb.toString
-        }
-        Some(re.findAllMatchIn(s).map { m =>
-          unescape(m.group(1)) -> m.group(2).toLong
-        }.toMap - PBucketsKey) // the layout key is not an input version
+      else JsonCodec.decode(Files.readAllBytes(f)) match {
+        case PoObj(fields) =>
+          val vs = fields.collect { case (k, PoInt(v)) => k -> v }
+          if (vs.size == fields.size) Some(vs.toMap) else None
+        case _ => None
       }
     } catch { case _: Throwable => None }
 
-  private def writeInputVersions(cacheDir: Path, vs: Map[String, Long],
-                                 pbuckets: Int): Unit =
+  private[lens] def readPBuckets(cacheDir: Path): Option[Int] =
+    readManifest(cacheDir).flatMap(_.get(PBucketsKey)).map(_.toInt)
+
+  /** The layout key is not an input version. */
+  private[lens] def readInputVersions(cacheDir: Path): Option[Map[String, Long]] =
+    readManifest(cacheDir).map(_ - PBucketsKey)
+
+  private[lens] def writeInputVersions(cacheDir: Path, vs: Map[String, Long],
+                                       pbuckets: Int): Unit =
     try {
-      val json = (vs.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${graft.Verify.jsonString(k)}:$v" } :+
-        s""""$PBucketsKey":$pbuckets""")
-        .mkString("{", ",", "}")
-      Files.writeString(inputVersionsFile(cacheDir), json)
+      val entries = vs.toSeq.sortBy(_._1).map { case (k, v) => k -> (PoInt(v): PoValue) }
+      Files.write(inputVersionsFile(cacheDir),
+        JsonCodec.encode(PoObj(entries :+ (PBucketsKey -> PoInt(pbuckets)): _*)))
     } catch { case _: Throwable => () } // best-effort: absence = gate path
 }

@@ -654,8 +654,8 @@ object TextOps {
     *    encode allocation per position (the doc is encoded once).
     *    Production default at 100 TB: the fingerprint stage measures
     *    2.1× faster than sha256 on the sf0.1 corpus and 3.3× on
-    *    web-page-length docs (graft.tools.WinnowBench, min-of-5 noop
-    *    sink) — the gap widens with doc length because per-gram hash
+    *    web-page-length docs (SCALING.md "Retired probes", min-of-5
+    *    noop sink) — the gap widens with doc length because per-gram hash
     *    cost is the entire difference. Different hash ⇒ a different
     *    (equally valid) selection — use it when fingerprints live and
     *    die inside this engine, use "sha256" when an external system

@@ -44,11 +44,19 @@ object ReadPath {
     case _ => false
   }
 
-  /** Decode one record's value through the path machinery. */
+  /** Decode one record's value: a collection's bucket-pruned point
+    * lookup ([[Collection.read]]), or the meta entry computed alone. */
   def readRecord(store: Store, p: DataPath): Option[PoValue] = {
     require(p.recordID.isDefined, "readRecord needs a record path")
-    read(store, p).limit(1).collect().headOption
-      .map(r => Cbor.decode(r.getAs[Array[Byte]]("value")))
+    val rid = p.recordID.get
+    p.source match {
+      case "meta" =>
+        MetaVfs.checkPath(store, p)
+        MetaVfs.readEntry(store, rid)
+      case "datasets" | "lenses" =>
+        store.collection(DataPath(p.source, p.author, p.name)).read(rid)
+      case other => throw new IllegalArgumentException(s"unknown source $other")
+    }
   }
 }
 
@@ -107,10 +115,15 @@ object MetaVfs {
     case _ => None
   }
 
-  /** The virtual collection as a RecordRow-shaped DataFrame. */
-  def frame(store: Store, p: DataPath): DataFrame = {
+  /** Rejects (IllegalArgumentException) a path outside the one virtual
+    * collection. */
+  private[store] def checkPath(store: Store, p: DataPath): Unit =
     require(exists(store, p.copy(recordID = None)),
       s"meta source only serves /meta/system:system, got ${p.encoded}")
+
+  /** The virtual collection as a RecordRow-shaped DataFrame. */
+  def frame(store: Store, p: DataPath): DataFrame = {
+    checkPath(store, p)
     val spark = store.spark
     import spark.implicits._
     val rows = RecordNames.flatMap { n =>
