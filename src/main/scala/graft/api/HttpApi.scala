@@ -212,28 +212,11 @@ final class HttpApi(store: Store, port: Int = 0, authOpt: Option[Auth] = None,
             ReadPath.read(store, p).select(col("id"), col("version"), col("hash")),
             start, limit)
           .toLocalIterator().asScala
-        // force the FIRST row before committing the 200: a planning or
-        // early-execution failure must surface as a 500, not a truncated
-        // 200 body (headers cannot be unsent)
-        val head = if (it.hasNext) Some(it.next()) else None
-        ex.getResponseHeaders.set("Content-Type", mimeFor("json"))
-        ex.sendResponseHeaders(200, 0)
-        val out: OutputStream = ex.getResponseBody
-        out.write('{')
-        var first = true
-        def emit(r: org.apache.spark.sql.Row): Unit = {
-          if (!first) out.write(',')
-          first = false
-          val entry = JsonCodec.encodeString(PoStr(r.getString(0))) + ":" +
+        streamJson(ex, '{', '}', it) { r =>
+          JsonCodec.encodeString(PoStr(r.getString(0))) + ":" +
             JsonCodec.encodeString(PoObj(
               "version" -> PoInt(r.getLong(1)), "hash" -> PoStr(r.getString(2))))
-          out.write(entry.getBytes(UTF_8))
         }
-        // a MID-stream failure (executor loss, query error) can no longer
-        // become a 400/500 — abort without the closing brace so the body
-        // is not valid JSON, never a silently-complete 200
-        try { head.foreach(emit); it.foreach(emit); out.write('}') }
-        finally out.close()
       case ("GET", RecordPat(source, author, name, rid, _, ext)) =>
         val p = DataPath(source, author, name, Some(rid))
         val v = ReadPath.readRecord(store, p)
@@ -501,22 +484,7 @@ final class HttpApi(store: Store, port: Int = 0, authOpt: Option[Auth] = None,
         // a per-record captured error, not a pinned core
         graft.lens.EphemeralLens.stream(store, inputs, fn, sandbox = true,
           sandboxMs = lensTimeoutMs, sandboxMemCap = lensMemCapBytes) { frames =>
-          // same discipline as the listings: force the first frame
-          // before committing the 200, abort mid-stream without the
-          // closing bracket so a failure is never a silent complete body
-          val head = if (frames.hasNext) Some(frames.next()) else None
-          ex.getResponseHeaders.set("Content-Type", mimeFor("json"))
-          ex.sendResponseHeaders(200, 0)
-          val out: OutputStream = ex.getResponseBody
-          out.write('[')
-          var first = true
-          def emit(v: PoValue): Unit = {
-            if (!first) out.write(',')
-            first = false
-            out.write(JsonCodec.encodeString(v).getBytes(UTF_8))
-          }
-          try { head.foreach(emit); frames.foreach(emit); out.write(']') }
-          finally out.close()
+          streamJson(ex, '[', ']', frames)(JsonCodec.encodeString)
         }
       case ("GET", LensConfigPat(author, name)) =>
         // lens configuration incl. the map code (lens-controller.js:61-75
@@ -648,19 +616,7 @@ final class HttpApi(store: Store, port: Int = 0, authOpt: Option[Auth] = None,
                 })
             PoObj(scala.collection.immutable.VectorMap.from(body))
           }
-        val head = if (it.hasNext) Some(it.next()) else None
-        ex.getResponseHeaders.set("Content-Type", mimeFor("json"))
-        ex.sendResponseHeaders(200, 0)
-        val out: OutputStream = ex.getResponseBody
-        out.write('[')
-        var first = true
-        def emit(v: PoValue): Unit = {
-          if (!first) out.write(',')
-          first = false
-          out.write(JsonCodec.encodeString(v).getBytes(UTF_8))
-        }
-        try { head.foreach(emit); it.foreach(emit); out.write(']') }
-        finally out.close()
+        streamJson(ex, '[', ']', it)(JsonCodec.encodeString)
       case ("GET", "/changes") =>
         // ?since=ts[&seq=n]: full-cursor resume is exact; ts-only resume
         // re-delivers that millisecond (at-least-once) rather than
@@ -721,6 +677,31 @@ final class HttpApi(store: Store, port: Int = 0, authOpt: Option[Auth] = None,
 
   /** decoded JSON object body, capped at the reference's 3 MB
     * (lens-controller.js:192 `parse.body({ maxSize: 3145728 })`) */
+  /** A 200 JSON body streamed from `items`, each rendered by `render`,
+    * comma-separated between `open` and `close`. The first item is
+    * forced before the 200 is committed, so a planning or
+    * early-execution failure surfaces as a 500, not a truncated 200
+    * (headers cannot be unsent). A mid-stream failure (executor loss,
+    * query error) can no longer become an error status: the body is
+    * aborted without its closing bracket, so it is not valid JSON and
+    * never a silently complete 200. */
+  private def streamJson[A](ex: HttpExchange, open: Char, close: Char,
+                            items: Iterator[A])(render: A => String): Unit = {
+    val head = if (items.hasNext) Some(items.next()) else None
+    ex.getResponseHeaders.set("Content-Type", mimeFor("json"))
+    ex.sendResponseHeaders(200, 0)
+    val out: OutputStream = ex.getResponseBody
+    out.write(open)
+    var first = true
+    def emit(a: A): Unit = {
+      if (!first) out.write(',')
+      first = false
+      out.write(render(a).getBytes(UTF_8))
+    }
+    try { head.foreach(emit); items.foreach(emit); out.write(close) }
+    finally out.close()
+  }
+
   private def jsonBody(ex: HttpExchange): Either[(Int, String), PoObj] = {
     val body = ex.getRequestBody.readNBytes(MaxEphemeralBody + 1)
     if (body.length > MaxEphemeralBody)

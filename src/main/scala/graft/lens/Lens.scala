@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.codec.JsonCodec
 import graft.core.{Cbor, NaturalOrder, PoInt, PoObj, PoValue, Reduce, RecordStructure}
-import graft.store.{Collection, DataPath, RecordRow, Store}
+import graft.store.{Collection, Commit, DataPath, RecordRow, Store}
 
 /** One row of the spooled map stage — the lens compute cache. Kinds:
   *  - "seen": one row per mapped input record, carrying the input
@@ -367,38 +367,45 @@ object LensBuild {
     * its freshness gate sees everything current, and it no-ops — the
     * at-least-once absorption the maintainer relies on, now safe
     * across processes, not just within the in-JVM cascade's `building`
-    * set. The nested `commitPrepared` re-enters via the lock's hold
-    * count.
+    * set. The output commit re-enters the lock via its hold count.
+    *
+    * The output is written through the store's one commit operator
+    * (`Collection.commit`), which owns the hash gate, the carry of
+    * untouched rows and the output's bucket layout: a full build hands
+    * it the whole reduced output (replace-all form), an incremental
+    * build only the rows of its changed output ids (held or frame form).
     *
     * An incremental build is one pipeline — gate → map → changed ids →
-    * reduce → hash gate → carry commit, with the cache rewrite beside
-    * it — whose delta is HELD or a FRAME. The freshness gate, one join of
-    * the input against the cache, checkpoints its changed rows (fresh
-    * rows and deleted paths) and collects up to `driverCap + 1` of them:
+    * reduce → commit, with the cache rewrite beside it — whose delta is
+    * HELD or a FRAME. The freshness gate, one join of the input against
+    * the cache, checkpoints its changed rows (fresh rows and deleted
+    * paths) and collects up to `driverCap + 1` of them:
     *  - at most `driverCap` (`Store.MaxCommitInList`) changed paths are
     *    held on the driver: the fresh records map there and their emits
     *    become a one-partition local frame; the changed paths and output
-    *    ids are driver lists, so every cache and output scan is an
-    *    inlined `IN` / `NOT IN` filter and the touched buckets fold
-    *    locally. The cap is the store's small-batch cap, where it stops
-    *    inlining literal lists;
+    *    ids are driver lists, so every cache scan is an inlined `IN` /
+    *    `NOT IN` filter and the touched cache buckets fold locally. The
+    *    cap is the store's held-commit cap;
     *  - above it, the changed rows stay a persisted frame, the fresh
-    *    records map as an executor stage, and the same scans become
-    *    semi- and anti-joins ([[byIds]]).
+    *    records map as an executor stage, and the same cache scans
+    *    become semi- and anti-joins ([[byIds]]).
     * The changed output ids fold on the driver — one lookup job for
-    * their retained contributions and previous rows, then the shared
-    * [[foldContribs]]/[[outputRow]] in the Spark reduce's order — when
-    * they are held, at most `Store.MaxCommitInList`, and their retained
-    * contributions fit `driverRows` ([[DriverReduceRows]]). Otherwise
-    * they reduce as a Spark stage ([[reduceOuts]]) and hash-gate through
-    * [[commitChanged]], so a hot id (an index entry most records feed)
-    * never pulls its whole history to the driver. A one-record tick
-    * therefore costs a fixed handful of Spark actions. Both forms call
-    * [[Mapper]] per record (sandbox budgets included), [[writeCache]],
-    * the partition carry, the `RebalanceFileThreshold` compaction rule
-    * and the `_input_versions.json` manifest; LensRegimeSpec checks on
-    * random deltas that held, frame and Spark-reduced builds give the
-    * output, versions and logs of a full rebuild. */
+    * their retained contributions and their previous rows (the store's
+    * id scan), then the shared [[foldContribs]]/[[outputRow]] in the
+    * Spark reduce's order and `Store.gate` — when they are held, at most
+    * `Store.MaxCommitInList`, and their retained contributions fit
+    * `driverRows` ([[DriverReduceRows]]); they then commit in the held
+    * form. Otherwise they reduce as a Spark stage ([[reduceOuts]]) and
+    * commit in the frame form, every changed id a tombstone its reduced
+    * row overrides, so a hot id (an index entry most records feed) never
+    * pulls its whole history to the driver. A one-record tick therefore
+    * costs a fixed handful of Spark actions and reads only the output's
+    * touched bucket dirs. Both forms call [[Mapper]] per record (sandbox
+    * budgets included), [[writeCache]], the partition carry, the
+    * `RebalanceFileThreshold` compaction rule and the
+    * `_input_versions.json` manifest; LensRegimeSpec checks on random
+    * deltas that held, frame and Spark-reduced builds give the output,
+    * versions and logs of a full rebuild. */
   def build(lens: Lens, incremental: Boolean): Long =
     build(lens, incremental, Store.MaxCommitInList)
 
@@ -494,9 +501,9 @@ object LensBuild {
     * (`Right`). */
   private type ChangedIds = Either[Seq[String], DataFrame]
 
-  /** The rows of `df` whose `column` is (`keep`) or is not one of `ids`:
-    * an inlined `IN` list for at most `Store.MaxCommitInList` held ids,
-    * a semi- or anti-join otherwise. */
+  /** The compute-cache rows of `df` whose `column` is (`keep`) or is
+    * not one of `ids`: an inlined `IN` list for at most
+    * `Store.MaxCommitInList` held ids, a semi- or anti-join otherwise. */
   private def byIds(df: DataFrame, column: String, ids: ChangedIds, keep: Boolean): DataFrame =
     ids match {
       case Left(held) if held.size <= Store.MaxCommitInList =>
@@ -508,28 +515,6 @@ object LensBuild {
         val frame = ids.fold(_.toDF(column), _.select(col("id").as(column)))
         df.join(frame, Seq(column), if (keep) "left_semi" else "left_anti")
     }
-
-  private val recordCols: Seq[Column] = Seq("id", "version", "hash", "links", "value").map(col)
-  private val recordEnc = Encoders.product[RecordRow]
-
-  /** The hash gate and commit of an incremental build: `reduced` (id,
-    * value, hash, links) holds the new rows of the changed `ids`, each
-    * keeping its old version when its hash did not move; every other
-    * output row carries from the previous snapshot byte-identical (an
-    * id none of whose contributions moved reduces to the same value).
-    * `ids` also tells a bucketed output which buckets to rewrite. */
-  private def commitChanged(out: Collection, reduced: DataFrame, ids: ChangedIds): Long = {
-    val newVersion = out.nextVersion
-    val old = out.toDF
-    val oldChanged = byIds(old, "id", ids, keep = true)
-      .select(col("id"), col("version").as("old_version"), col("hash").as("old_hash"))
-    val gated = reduced.join(oldChanged, Seq("id"), "left")
-      .withColumn("version",
-        when(col("old_hash") === col("hash"), col("old_version")).otherwise(lit(newVersion)))
-      .select(recordCols: _*)
-    val carried = byIds(old, "id", ids, keep = false).select(recordCols: _*)
-    out.commitPrepared(carried.unionByName(gated).as[RecordRow](recordEnc), Some(ids))
-  }
 
   /** `ds` collected in one job when it holds at most about `bound` rows,
     * else None. Each of its P partitions sends at most `bound / P + 1`
@@ -708,20 +693,9 @@ object LensBuild {
         writeCache(spooled.toDF(), cacheNext, pbuckets)
       }
       commitAndSwap(cacheWritten, cacheDir, pbuckets, inputVersionsNow) {
-        // hash-gated materialize: unchanged output records keep their
-        // version (same gate as a dataset commit)
-        val reduced = reduceOuts(lens.fn, spooled.filter(col("kind") === "out"))
-        val newVersion = out.nextVersion
-        val old = out.toDF.select(col("id"), col("version").as("old_version"),
-          col("hash").as("old_hash"))
-        val rows = reduced
-          .join(old, Seq("id"), "left")
-          .withColumn("version",
-            when(col("old_hash") === col("hash"), col("old_version"))
-              .otherwise(lit(newVersion)))
-          .select(col("id"), col("version"), col("hash"), col("links"), col("value"))
-          .as[RecordRow]
-        out.commitPrepared(rows)
+        // the reduced output replaces the old; unchanged output records
+        // keep their version (the store's gate, as for a dataset commit)
+        out.commit(Commit.Replace(reduceOuts(lens.fn, spooled.filter(col("kind") === "out"))))
       }
     } else {
       // ==== INCREMENTAL BUILD — O(delta), not O(corpus) =================
@@ -861,18 +835,19 @@ object LensBuild {
 
         // ---- the bounded fast path: when the changed ids are held and
         //      few, ONE lookup job reads their retained contributions and
-        //      previous output rows (for the hash gate, at most one per
-        //      id) as a union of two IN-filtered scans; if they fit
+        //      previous output rows (the store's id scan, for the hash
+        //      gate) as a union of two IN-filtered scans; if they fit
         //      `driverRows`, the ids reduce and hash-gate on the driver
-        //      with the shared fold, in the Spark reduce's order
-        val old = out.toDF
-        val folded: Option[Seq[RecordRow]] = for {
+        //      with the shared fold, in the Spark reduce's order, and
+        //      commit in the held form (an id that reduced to nothing is
+        //      deleted)
+        val folded: Option[Commit] = for {
           emits <- freshLocal
           held <- ids.left.toOption if held.size <= Store.MaxCommitInList
           rows <- if (held.isEmpty) Some(Seq.empty) else collectAtMost(
             retained.select(col("outId").as("id"), col("ord"), col("natKey"), col("outIdx"),
               col("value"), lit(0L).as("version"), lit(null).cast("string").as("hash"))
-              .unionByName(byIds(old, "id", ids, keep = true)
+              .unionByName(out.scanIds(held)
                 .select(col("id"), lit(0).as("ord"), lit("").as("natKey"), lit(0).as("outIdx"),
                   lit(null).cast("binary").as("value"), col("version"), col("hash")))
               .as[Contrib],
@@ -882,30 +857,26 @@ object LensBuild {
           val fresh = emits.filter(_.kind == "out")
             .map(e => Contrib(e.outId, e.ord, e.natKey, e.outIdx, e.value, 0L, null))
           val newVersion = out.nextVersion
-          val prevById = prev.map(c => c.id -> c).toMap
-          (kept ++ fresh).groupBy(_.id).toSeq.map { case (id, cs) =>
+          val prevById = prev.map(c => c.id -> (c.version, c.hash)).toMap
+          Commit.Held(held, (kept ++ fresh).groupBy(_.id).toSeq.map { case (id, cs) =>
             val (_, bytes, hash, links) =
               outputRow(id, foldContribs(cs.sorted(contribOrder).iterator.map(_.value)))
-            val version = prevById.get(id).filter(_.hash == hash).fold(newVersion)(_.version)
-            RecordRow(id, version, hash, links, bytes)
-          }
+            RecordRow(id, Store.gate(prevById.get(id), hash, newVersion), hash, links, bytes)
+          })
         }
 
-        folded match {
-          case Some(gated) =>
-            // NOT id IN (...) carry of the previous snapshot ∪ the
-            // locally gated rows
-            val carried = byIds(old, "id", ids, keep = false).select(recordCols: _*)
-            out.commitPrepared(
-              carried.unionByName(spark.createDataset(gated).toDF().coalesce(1)).as[RecordRow],
-              Some(ids))
-          case None =>
-            // ---- everything else — a frame delta, too many changed
-            //      ids, a hot id past `driverRows` — reduces as a Spark
-            //      stage over the same scans plus the fresh emits
-            commitChanged(out, reduceOuts(lens.fn, retained.as[BuildEmit](emitEnc).union(freshOuts)),
-              ids)
-        }
+        // ---- everything else — a frame delta, too many changed ids, a
+        //      hot id past `driverRows` — reduces as a Spark stage over
+        //      the same scans plus the fresh emits, and commits in the
+        //      frame form: every changed id as a tombstone, which its
+        //      reduced row (if any) overrides
+        out.commit(folded.getOrElse {
+          val vanished = ids.fold(_.toDF("id"), identity).select(col("id"),
+            lit(null).cast("string").as("hash"), lit(null).cast("array<string>").as("links"),
+            lit(null).cast("binary").as("value"), lit(true).as("tombstone"))
+          Commit.Frame(reduceOuts(lens.fn, retained.as[BuildEmit](emitEnc).union(freshOuts))
+            .withColumn("tombstone", lit(false)).unionByName(vanished))
+        })
       }
     }
     // (logs need no write of their own — Lens.logsOf serves them from

@@ -134,7 +134,7 @@ class BucketedStoreSpec extends AnyFunSuite {
     assert(c.read("nope").isEmpty)
     // the scan's physical plan carries a bucket partition filter, so only
     // the id's bucket dir is listed/read (1/B of the snapshot's files)
-    val plan = c.pointScan("r5").queryExecution.executedPlan.toString
+    val plan = c.scanIds(Seq("r5")).queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined,
       s"expected a bucket partition filter in:\n${plan.take(2000)}")
   }
