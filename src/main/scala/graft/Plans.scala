@@ -873,12 +873,13 @@ Measured in the spec's local[4] session (r16 columns at local[32]):
 | settled rebuild (q159 storm drain / settled cascade wave) | 5 (~0.4-0.9 s) | **0** (~4-16 ms) | 0 | 0 (manifest reads only) |
 | one-record incremental build | 11 | 11 | 20 | **7** (budget 8): driver-sized regime — gate collect (3 AQE jobs), old-output-id cache scan, one lookup of retained contributions + previous output rows, output and cache carry writes |
 | one-record unbucketed dataset write (q146 PUT) | 3 | 3 | 2 | 2 (previous-version lookup, `NOT IN` carry write) |
-| one-record 16-bucket dataset write (serve_mix PUT) | — | — | — | 3 (was 4 before the held commit form): previous-version lookup, bucket repartition, one-bucket write |
+| one-record 16-bucket dataset write (serve_mix PUT) | — | — | — | 2 (4 before the held commit form, 3 before its one-bucket coalesce): previous-version lookup, one-bucket write with no shuffle |
 | batched bucketed `readRows` | — | — | 1 | 1 |
 
 The win is the INPUT-VERSIONS FAST PATH (LensBuild doBuild step 0):
 the compute cache records the input collection versions it was built
-against (`_input_versions.json`, swapped atomically with the cache);
+against (in `cache/manifest.json`, which names the live cache
+generation `cache/g{N}` and is renamed into place atomically);
 a rebuild whose inputs' versions all match returns without scheduling
 ANY Spark job. The ~5-job full-outer gate query still runs exactly
 when a version moved — including the identical-rewrite case (collection

@@ -44,7 +44,7 @@ object Fs {
 
   /** Hardlink (copy fallback) an entire directory tree — the O(#files)
     * metadata-only carry both copy-on-write surfaces use (bucketed
-    * snapshot commits and the lens compute-cache swap): untouched
+    * snapshot commits and lens compute-cache generations): untouched
     * bucket directories of the previous generation become links in the
     * next one instead of rewritten data. An object-store deployment
     * would swap this seam for server-side copy. */

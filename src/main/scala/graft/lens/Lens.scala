@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.codec.JsonCodec
 import graft.core.{Cbor, NaturalOrder, PoInt, PoObj, PoValue, Reduce, RecordStructure}
-import graft.store.{Collection, Commit, DataPath, RecordRow, Store}
+import graft.store.{Collection, Commit, DataPath, Generations, RecordRow, Store}
 
 /** One row of the spooled map stage — the lens compute cache. Kinds:
   *  - "seen": one row per mapped input record, carrying the input
@@ -222,19 +222,15 @@ object Lens {
     // byte — one write job per build, deleted in round 6. kind is a
     // leading filter → parquet predicate pushdown skips the out/seen
     // row groups.
-    // Migration note (round 7): the round-6 transition fallback to a
-    // pre-cache `logs/` dir is gone — any store built by round 6+
-    // has the cache dir after its first build, and the fallback (plus
-    // the rmTree of `logs/` every build) was dead weight on the build
-    // path. A pre-round-6 store simply reports no logs until its next
-    // build, which is what the empty frame below says.
+    // The live generation is the one the cache manifest names: a
+    // failed build's orphan generation is never read, and a store with
+    // no manifest reports no logs until its next build.
     val cacheDir = store.dir(DataPath("lenses", author, name)).resolve("cache")
-    val src = if (Files.isDirectory(cacheDir)) Some(cacheDir) else None
-    src match {
-      case Some(dir) =>
+    CacheManifest.read(cacheDir) match {
+      case Some(live) =>
         spark.read
           .schema(org.apache.spark.sql.Encoders.product[BuildEmit].schema)
-          .parquet(dir.toString)
+          .parquet(live.dir(cacheDir).toString)
           .filter(col("kind") === "log" || col("kind") === "err")
           .orderBy(col("ord"), col("natKey"))
           .select(cols.map(col): _*)
@@ -243,6 +239,46 @@ object Lens {
           .toDF().select(cols.map(col): _*)
     }
   }
+}
+
+/** The live lens compute-cache generation, `cache/g{version}`, as
+  * `cache/manifest.json` names it: its `pbucket` count and the input
+  * collection versions it was built against. The freshness gate reads
+  * the generation and its layout from it, the zero-job fast path
+  * (`LensBuild` step 0) its input versions, and [[Lens.logsOf]] the
+  * generation. */
+private[lens] final case class CacheManifest(version: Long, pbuckets: Int,
+                                             inputs: Map[String, Long]) {
+  def dir(cacheDir: Path): Path = CacheManifest.generations(cacheDir).dirOf(version)
+
+  /** Make this generation the live one (and prune every other). */
+  def publish(cacheDir: Path): Unit =
+    CacheManifest.generations(cacheDir).publish(CacheManifest.file(cacheDir), json, version)
+
+  def json: Array[Byte] = JsonCodec.encode(PoObj("version" -> PoInt(version),
+    "pbuckets" -> PoInt(pbuckets), "inputs" -> PoObj(inputs.toSeq.sortBy(_._1)
+      .map { case (k, v) => k -> (PoInt(v): PoValue) }: _*)))
+}
+
+private[lens] object CacheManifest {
+  /** The cache's generations. Only the live one is kept: a second would
+    * grow the store by the whole cache. */
+  def generations(cacheDir: Path): Generations = new Generations(cacheDir, "g", keep = 1)
+
+  def file(cacheDir: Path): Path = cacheDir.resolve("manifest.json")
+
+  /** None when there is no manifest or it does not parse: no cache, so
+    * the next build is a full one. */
+  def read(cacheDir: Path): Option[CacheManifest] =
+    try JsonCodec.decode(Files.readAllBytes(file(cacheDir))) match {
+      case PoObj(f) => (f.get("version"), f.get("pbuckets"), f.get("inputs")) match {
+        case (Some(PoInt(v)), Some(PoInt(pb)), Some(PoObj(in))) =>
+          val vs = in.collect { case (k, PoInt(n)) => k -> n }
+          if (vs.size == in.size) Some(CacheManifest(v, pb.toInt, vs.toMap)) else None
+        case _ => None
+      }
+      case _ => None
+    } catch { case _: Exception => None }
 }
 
 /** The change-feed cascade (reference: update-events.js:7-14 +
@@ -357,13 +393,13 @@ final class LensHub(store: Store, parallelCascade: Boolean = false) {
 
 object LensBuild {
 
-  /** The whole build — map → spool → reduce → commit → cache swap —
+  /** The whole build — map → spool → reduce → commit → cache publish —
     * runs under the output collection's writer lock (Store.withLock:
-    * JVM monitor + OS file lock), because the compute-cache staging
-    * dir (`cache-next`) is a SHARED path: two processes
+    * JVM monitor + OS file lock), because every builder of a lens writes
+    * the same next cache generation (`cache/g{N+1}`): two processes
     * building one lens concurrently would interleave Spark overwrites
-    * into the same `_temporary` dir and race the final swaps. Under
-    * the lock, the second builder enters after the first's cache swap,
+    * into the same `_temporary` dir and race their manifest publishes.
+    * Under the lock, the second builder enters after the first's publish,
     * its freshness gate sees everything current, and it no-ops — the
     * at-least-once absorption the maintainer relies on, now safe
     * across processes, not just within the in-JVM cascade's `building`
@@ -401,9 +437,9 @@ object LensBuild {
     * pulls its whole history to the driver. A one-record tick therefore
     * costs a fixed handful of Spark actions and reads only the output's
     * touched bucket dirs. Both forms call [[Mapper]] per record (sandbox
-    * budgets included), [[writeCache]], the partition carry, the
-    * `RebalanceFileThreshold` compaction rule and the
-    * `_input_versions.json` manifest; LensRegimeSpec checks on random
+    * budgets included) and write the next cache generation through the
+    * store's [[Generations]] protocol — partition carry, compaction rule
+    * and the [[CacheManifest]] publish; LensRegimeSpec checks on random
     * deltas that held, frame and Spark-reduced builds give the output,
     * versions and logs of a full rebuild. */
   def build(lens: Lens, incremental: Boolean): Long =
@@ -556,11 +592,6 @@ object LensBuild {
     * cache's discovered `pbucket` column. */
   private val emitCols: Seq[Column] = emitEnc.schema.fieldNames.toSeq.map(col)
 
-  /** The cache's path-hash bucket of each row (of its input path in
-    * `column`). */
-  private def pbucketOf(pbuckets: Int, column: String = "path"): Column =
-    pmod(xxhash64(col(column)), lit(pbuckets.toLong))
-
   private def doBuild(lens: Lens, incremental: Boolean, driverCap: Int, driverRows: Int): Long = {
     val store = lens.store
     val spark = store.spark
@@ -578,15 +609,17 @@ object LensBuild {
     //         the pre-commit version and merely causes one extra
     //         (gate-absorbed) rebuild — never a missed one.
     val cacheDir = lens.cacheDir
-    val inputVersionsNow: Option[Map[String, Long]] =
-      try Some(lens.inputs.map { p =>
-        val dp = DataPath(p.source, p.author, p.name)
-        dp.collectionPath -> store.collection(dp).meta.version
-      }.toMap)
-      catch { case _: Throwable => None } // missing input: the scan below throws, as before
-    if (incremental && Files.isDirectory(cacheDir) && inputVersionsNow.isDefined &&
-        readInputVersions(cacheDir).contains(inputVersionsNow.get))
+    val gens = CacheManifest.generations(cacheDir)
+    val inputsNow: Map[String, Long] = lens.inputs.map { p =>
+      val dp = DataPath(p.source, p.author, p.name)
+      dp.collectionPath -> store.collection(dp).meta.version
+    }.toMap
+    val manifest = CacheManifest.read(cacheDir)
+    if (incremental && manifest.exists(_.inputs == inputsNow))
       return lens.output.meta.version
+    // the generation this build writes; the live one stays readable
+    // until the manifest names this one
+    val next = manifest.fold(1L)(_.version + 1)
 
     // ---- 1. input scan: per-input ordinal, record filter (F1), then
     //         union-distinct by record path keeping the FIRST input's copy
@@ -637,11 +670,10 @@ object LensBuild {
       in.select(inCols.map(col): _*).as[InRow]
         .mapPartitions(_.flatMap(mapper(_)))(emitEnc)
 
-    val cacheNext = cacheNextOf(cacheDir)
     val out = lens.output
-    val useCache = incremental && Files.isDirectory(cacheDir)
 
-    val v: Long = if (!useCache) {
+    val v: Long = manifest.filter(_ => incremental) match {
+    case None =>
       // ==== FULL BUILD ==================================================
       // Map everything, spool everything, reduce everything; the spool
       // becomes the next compute cache. `pbuckets` > 1 lays the cache
@@ -669,7 +701,7 @@ object LensBuild {
       val mapIn =
         if (smallInput) freshSel.repartition(spark.sparkContext.defaultParallelism)
         else freshSel
-      // The spool is BOTH the next compute cache (parquet, swapped in at
+      // The spool is BOTH the next compute cache (parquet, published at
       // the end) and the input to the reduce + logs stages. Persist it so
       // the write job doubles as the materialization and the reduce reads
       // memory/local-disk instead of re-reading the parquet it just wrote.
@@ -677,27 +709,27 @@ object LensBuild {
       // shuffle serves both consumers: the cache lands size-targeted
       // (1-2 files at bench scale, advisory-sized at 100 TB — not a file
       // per map task) and the reduce reads the coalesced blocks. The
-      // pbuckets > 1 write shuffles by pbucket inside writeCache instead.
+      // pbuckets > 1 write shuffles by pbucket as it writes instead.
       val spooled = hold(
         if (pbuckets == 1) mapEmits(mapIn).hint("rebalance")
         else mapEmits(mapIn))
       // Overlap the cache write with the reduce+commit (r18, guide §2.6
       // "overlap independent jobs"): both consume the persisted spool
-      // and are independent until the manifest swap — running them
+      // and are independent until the manifest publish — running them
       // sequentially left the cluster idle through each action's
       // scheduling tail. Exactly-once map calls are preserved: the
       // persist's per-partition block lock makes concurrent
       // materializations compute each partition once (spec-pinned by
       // IncrementalLensSpec's exact invocation counts).
       val cacheWritten = runCacheWrite(spark) {
-        writeCache(spooled.toDF(), cacheNext, pbuckets)
+        gens.write(spooled.toDF(), next, None, pbucketLayout(pbuckets, None, narrow = false))
       }
-      commitAndSwap(cacheWritten, cacheDir, pbuckets, inputVersionsNow) {
+      commitAndPublish(cacheWritten, CacheManifest(next, pbuckets, inputsNow).publish(cacheDir)) {
         // the reduced output replaces the old; unchanged output records
         // keep their version (the store's gate, as for a dataset commit)
         out.commit(Commit.Replace(reduceOuts(lens.fn, spooled.filter(col("kind") === "out"))))
       }
-    } else {
+    case Some(live) =>
       // ==== INCREMENTAL BUILD — O(delta), not O(corpus) =================
       // (VERDICT r16 Next #3.) After the gate, every leg is delta-scaled:
       //  1. only fresh records map;
@@ -721,8 +753,8 @@ object LensBuild {
       //      (cached only). Schema pinned: we wrote this parquet; skips
       //      the footer-infer job. `pbucket` (when the cache is
       //      partitioned) arrives as a discovered partition column.
-      val cacheRaw = spark.read.schema(emitEnc.schema).parquet(cacheDir.toString)
-      val pbuckets = readPBuckets(cacheDir).getOrElse(1)
+      val cacheRaw = spark.read.schema(emitEnc.schema).parquet(live.dir(cacheDir).toString)
+      val pbuckets = live.pbuckets
       val usePB = pbuckets > 1 && cacheRaw.columns.contains("pbucket")
       val seen = cacheRaw.filter(col("kind") === "seen")
         .select(col("path"), col("inVersion").as("cachedV"))
@@ -745,9 +777,10 @@ object LensBuild {
       val changedRows = changed.limit(driverCap + 1).collect()
       if (changedRows.isEmpty) {
         // record-versions unchanged though collection versions moved
-        // (identical rewrites bump only the latter): advance the
-        // manifest so the NEXT build takes the zero-job fast path
-        inputVersionsNow.foreach(writeInputVersions(cacheDir, _, pbuckets))
+        // (identical rewrites bump only the latter): republish the live
+        // generation at the new input versions, so the NEXT build takes
+        // the zero-job fast path
+        live.copy(inputs = inputsNow).publish(cacheDir)
         return out.meta.version // no-op
       }
 
@@ -769,10 +802,10 @@ object LensBuild {
       // included) sees its real size and broadcasts it
       val touched: Set[Long] = changedPaths match {
         case Left(paths) if usePB =>
-          paths.toDF("id").select(pbucketOf(pbuckets, "id")).as[Long].collect().toSet
+          paths.toDF("id").select(Generations.bucketOf("id", pbuckets)).as[Long].collect().toSet
         case Left(_) => Set.empty
         case Right(paths) =>
-          paths.select(pbucketOf(pbuckets, "id")).distinct().as[Long].collect().toSet
+          paths.select(Generations.bucketOf("id", pbuckets)).distinct().as[Long].collect().toSet
       }
       // the fresh records map on the driver when held, through the same
       // per-record body as the executor map stage, into a one-partition
@@ -796,7 +829,7 @@ object LensBuild {
       //      own bucket, so this covers exactly the touched dirs); every
       //      untouched bucket dir carries forward by hardlink. Written
       //      while the reduce+commit leg below runs (r18, guide §2.6):
-      //      the two are independent until the manifest swap, and the
+      //      the two are independent until the manifest publish, and the
       //      persisted fresh emits' block locks keep map calls exactly
       //      once when both legs read them.
       val nextCache = byIds(touchedCache, "path", changedPaths, keep = false)
@@ -805,12 +838,11 @@ object LensBuild {
         // a plain cache compacts by the store's unbucketed-snapshot rule:
         // each build adds ~1-2 files, so paying a rebalance shuffle every
         // build would only re-compact an already-small file set
-        writeCache(if (pbuckets == 1) Store.compactIfFragmented(nextCache, cacheDir) else nextCache,
-          cacheNext, pbuckets)
-        if (usePB) graft.core.Fs.carryPartitions(cacheDir, cacheNext, "pbucket", touched)
+        gens.write(nextCache, next, Some(live.version),
+          pbucketLayout(pbuckets, Some(touched), narrow = held))
       }
 
-      commitAndSwap(cacheWritten, cacheDir, pbuckets, inputVersionsNow) {
+      commitAndPublish(cacheWritten, CacheManifest(next, pbuckets, inputsNow).publish(cacheDir)) {
         // ---- changed output ids (delta-scaled): an id's reduced value
         //      can move only if some contribution to it did — it appears
         //      in the NEW emits of a fresh path, or in the CACHED emits
@@ -886,15 +918,14 @@ object LensBuild {
   }
 
   /** Runs a build's reduce+commit `leg`, which overlaps `cacheWritten`,
-    * then finishes the build: await the cache write, write the
-    * input-versions manifest into `cache-next`, swap it live. If the leg
-    * throws, the cache write is drained first — its own failure is
-    * dropped; the leg's is the one reported — so no
+    * then finishes the build: await the cache write and `publish` its
+    * generation. If the leg throws, the cache write is drained first —
+    * its own failure is dropped; the leg's is the one reported — so no
     * `graft-lens-cache-write` thread still reads the frames the caller's
-    * `finally` unpersists, or writes `cache-next` after the writer lock
-    * is released. The live cache stays the last good one. */
-  private def commitAndSwap(cacheWritten: Future[Unit], cacheDir: Path, pbuckets: Int,
-                            inputVersions: Option[Map[String, Long]])(leg: => Long): Long = {
+    * `finally` unpersists, or writes a generation after the writer lock
+    * is released. The manifest still names the last good generation;
+    * the unpublished one is an orphan the next build overwrites. */
+  private def commitAndPublish(cacheWritten: Future[Unit], publish: => Unit)(leg: => Long): Long = {
     val committed =
       try leg
       catch {
@@ -904,10 +935,7 @@ object LensBuild {
           throw e
       }
     Await.result(cacheWritten, Duration.Inf)
-    val cacheNext = cacheNextOf(cacheDir)
-    // the fast-path manifest rides the cache swap (atomic with it)
-    inputVersions.foreach(writeInputVersions(cacheNext, _, pbuckets))
-    swapDir(cacheNext, cacheDir)
+    publish
     committed
   }
 
@@ -935,26 +963,18 @@ object LensBuild {
       Future(body)(sideEc)
     else { body; Future.successful(()) }
 
-  /** Cache-layout write: `pbuckets` > 1 hashes rows into `pbucket=k`
-    * partition dirs on the input path — one shuffle keyed on the bucket
-    * (so each bucket lands in exactly one task → one file per bucket,
-    * never tasks × buckets small files), then a partitioned write. At
-    * `pbuckets == 1` the layout is a plain parquet dir, exactly the
-    * pre-COW shape. */
-  private def writeCache(df: DataFrame, dest: Path, pbuckets: Int): Unit =
-    if (pbuckets > 1)
-      df.withColumn("pbucket", pbucketOf(pbuckets))
-        .repartition(col("pbucket"))
-        .write.mode("overwrite").partitionBy("pbucket").parquet(dest.toString)
-    else
-      // pbuckets == 1: plain layout; callers rebalance the frame FIRST
-      // (full builds below their persist, so one shuffle serves both the
-      // write and the reduce) — otherwise the cache inherits
-      // (cache-scan ∪ map) parallelism as its file count and fragments
-      // compounding (measured ~65 files of a 5 000-row spool by the
-      // second build, every later gate/reduce scan scheduling a task
-      // per file)
-      df.write.mode("overwrite").parquet(dest.toString)
+  /** The cache's layout: `pbuckets` > 1 hashes rows into `pbucket=k`
+    * partition dirs on the input path; at 1 it is a plain parquet dir,
+    * whose rows callers rebalance FIRST (full builds below their persist,
+    * so one shuffle serves both the write and the reduce) — otherwise the
+    * cache inherits (cache-scan ∪ map) parallelism as its file count and
+    * fragments compounding (measured ~65 files of a 5 000-row spool by
+    * the second build, every later gate/reduce scan scheduling a task
+    * per file). */
+  private def pbucketLayout(pbuckets: Int, rewrite: Option[Set[Long]],
+                            narrow: Boolean): Option[Generations.Partitions] =
+    if (pbuckets > 1) Some(Generations.Partitions("pbucket", "path", pbuckets, rewrite, narrow))
+    else None
 
   /** Cache partition count for a full (re)write: explicit
     * `graft.lens.cachePartitions` session conf wins; otherwise derived
@@ -976,56 +996,4 @@ object LensBuild {
       math.min(MaxCacheBuckets.toLong, bytes / TargetCacheBucketBytes + 1).toInt
     }
   }
-
-  /** The staging dir a build writes the next cache generation into,
-    * swapped live only after the output commit. */
-  private def cacheNextOf(cacheDir: Path): Path = cacheDir.resolveSibling("cache-next")
-
-  private def swapDir(tmp: Path, dst: Path): Unit = {
-    graft.core.Fs.rmTree(dst)
-    Files.move(tmp, dst)
-  }
-
-  /** input-collection versions the cache was built against — the
-    * zero-job no-op fast path's manifest (doBuild step 0) — plus the
-    * cache's pbucket count under [[PBucketsKey]] (can't collide with a
-    * collection path, which always starts with '/'). Lives inside the
-    * cache dir so the atomic swap keeps cache and manifest consistent;
-    * absent/corrupt reads fall back to the gate query / the
-    * unpartitioned-layout full rewrite. */
-  private def inputVersionsFile(cacheDir: Path): Path =
-    // underscore prefix: Spark/Hadoop file listings ignore `_*` files,
-    // so the parquet reads over the cache dir never see the manifest
-    cacheDir.resolve("_input_versions.json")
-
-  private val PBucketsKey = "__pbuckets"
-
-  /** The manifest's entries, [[PBucketsKey]] included; None when the
-    * file is absent or not a JSON object of integers (a torn write). */
-  private def readManifest(cacheDir: Path): Option[Map[String, Long]] =
-    try {
-      val f = inputVersionsFile(cacheDir)
-      if (!Files.isRegularFile(f)) None
-      else JsonCodec.decode(Files.readAllBytes(f)) match {
-        case PoObj(fields) =>
-          val vs = fields.collect { case (k, PoInt(v)) => k -> v }
-          if (vs.size == fields.size) Some(vs.toMap) else None
-        case _ => None
-      }
-    } catch { case _: Throwable => None }
-
-  private[lens] def readPBuckets(cacheDir: Path): Option[Int] =
-    readManifest(cacheDir).flatMap(_.get(PBucketsKey)).map(_.toInt)
-
-  /** The layout key is not an input version. */
-  private[lens] def readInputVersions(cacheDir: Path): Option[Map[String, Long]] =
-    readManifest(cacheDir).map(_ - PBucketsKey)
-
-  private[lens] def writeInputVersions(cacheDir: Path, vs: Map[String, Long],
-                                       pbuckets: Int): Unit =
-    try {
-      val entries = vs.toSeq.sortBy(_._1).map { case (k, v) => k -> (PoInt(v): PoValue) }
-      Files.write(inputVersionsFile(cacheDir),
-        JsonCodec.encode(PoObj(entries :+ (PBucketsKey -> PoInt(pbuckets)): _*)))
-    } catch { case _: Throwable => () } // best-effort: absence = gate path
 }

@@ -1,7 +1,7 @@
 package graft.store
 
 import java.net.{URLDecoder, URLEncoder}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
 
@@ -43,7 +43,8 @@ final class AttachmentStore(store: Store) {
   }
 
   /** Store a blob, returning its hash (idempotent). Written to a temp
-    * file then atomically renamed — same commit discipline as snapshots.
+    * file of its own then atomically renamed — same commit discipline as
+    * snapshots; concurrent uploads of one blob each rename their own.
     *
     * Runs under the store's commit gate (read side): gc() holds the
     * write side for its whole run, so a write can never interleave with
@@ -57,13 +58,7 @@ final class AttachmentStore(store: Store) {
     val hex = sha256hex(bytes)
     held.put(hex, System.currentTimeMillis())
     val p = pathFor(hex)
-    if (!Files.exists(p)) {
-      Files.createDirectories(p.getParent)
-      val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-      Files.write(tmp, bytes)
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (!Files.exists(p)) Generations.atomicWrite(p, bytes)
     hex
   }
 

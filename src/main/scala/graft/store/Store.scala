@@ -1,7 +1,7 @@
 package graft.store
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -54,26 +54,6 @@ object Store {
     * never hits this. The same cap bounds the incremental lens delta a
     * build holds on the driver (`LensBuild.build`). */
   private[graft] val MaxCommitInList = 1024
-
-  /** Unbucketed snapshots compact (AQE rebalance before the write) only
-    * when the previous snapshot exceeds this many parquet files —
-    * amortized: the no-shuffle carry branch of a small-batch merge adds
-    * ~1 file per commit, so commits between compactions pay ZERO
-    * shuffles for the snapshot and every ~threshold-th commit pays one.
-    * Production stores at 100 TB should be bucketed (file-level COW
-    * carry); this bounds the unbucketed fallback's file count. */
-  private[graft] val RebalanceFileThreshold = 24
-
-  /** `df` with an AQE rebalance hint when the parquet dir `prev` (the
-    * generation `df` replaces) holds more than [[RebalanceFileThreshold]]
-    * files, else `df` as is: the one fragmentation rule of unbucketed
-    * snapshots and plain lens compute caches. */
-  private[graft] def compactIfFragmented(df: DataFrame, prev: Path): DataFrame = {
-    val parquets =
-      if (!Files.isDirectory(prev)) 0
-      else graft.core.Fs.list(prev).count(_.getFileName.toString.endsWith(".parquet"))
-    if (parquets > RebalanceFileThreshold) df.hint("rebalance") else df
-  }
 
   /** The version rule of every commit, datasets and lenses alike
     * (reference: base-data-model.js:193-196): a record keeps its
@@ -385,7 +365,10 @@ final class Collection(val store: Store, val path: DataPath) {
 
   private def dir: Path = store.dir(path)
   private def metaFile: Path = dir.resolve("meta.json")
-  private def snapshotDir(v: Long): Path = dir.resolve(s"v$v")
+  /** Snapshots `v{N}` behind `meta.json`; the previous one is kept, as
+    * the reference keeps its `.backup`. */
+  private def snapshots = new Generations(dir, "v", keep = 2)
+  private def snapshotDir(v: Long): Path = snapshots.dirOf(v)
 
   def exists: Boolean = Files.exists(metaFile)
 
@@ -412,9 +395,6 @@ final class Collection(val store: Store, val path: DataPath) {
       else p.getFileName.toString.endsWith(".parquet")
     Files.isDirectory(d) && walk(d)
   }
-
-  private def bucketExpr(b: Int): Column =
-    pmod(xxhash64(col("id")), lit(b.toLong))
 
   /** On-disk bytes of the current snapshot's parquet files — metadata
     * only (file sizes, no data read). Sizes the lens compute-cache's
@@ -510,12 +490,12 @@ final class Collection(val store: Store, val path: DataPath) {
   }
 
   /** Driver-side bucket assignment for a batch of literal ids: the SAME
-    * [[bucketExpr]] the writer uses, evaluated over a LocalRelation —
+    * `Generations.bucketOf` the writer uses, evaluated over a LocalRelation —
     * the optimizer folds the projection (ConvertToLocalRelation), so
     * the collect is a local array copy, NO Spark job. Using the one
     * expression tree for writer and reader means they can never drift. */
   private def bucketsOf(ids: Seq[String], b: Int): Seq[Long] =
-    ids.toDF("id").select(bucketExpr(b).as("k"))
+    ids.toDF("id").select(Generations.bucketOf("id", b).as("k"))
       .collect().map(_.getLong(0)).toSeq.distinct
 
   private def idIn(ids: Seq[String]): Column =
@@ -647,8 +627,8 @@ final class Collection(val store: Store, val path: DataPath) {
     * move ([[Store.gate]]). Returns the new version. Three forms, chosen
     * by what the caller holds:
     *  - [[Commit.Held]]: the untouched rows carry through a `NOT id IN`
-    *    filter of the snapshot ∪ the held rows — no join, no exchange
-    *    but the bucketed write's;
+    *    filter of the snapshot ∪ the held rows — no join, and no
+    *    exchange when it rewrites one bucket or none;
     *  - [[Commit.Frame]]: ONE full-outer join against the old rows
     *    classifies every id — insert (frame only), update or delete
     *    (both sides), untouched carry (old only); [[Store.gateCol]]
@@ -659,7 +639,8 @@ final class Collection(val store: Store, val path: DataPath) {
     * the `bucket=k` dirs of its ids — folded on the driver for held ids,
     * one distinct job over a frame (persisted for the commit, so it is
     * computed once) — and every other bucket dir carries forward from
-    * the previous snapshot by hardlink ([[commitSnapshot]]).
+    * the previous snapshot by hardlink. The new snapshot goes live by
+    * the [[Generations]] protocol, then the change feed is notified.
     * Executor-side failures surface as the first
     * IllegalArgumentException in their cause chain, the API contract of
     * a rejected write. */
@@ -678,7 +659,8 @@ final class Collection(val store: Store, val path: DataPath) {
           val frame = cow.fold(unpinned) { _ =>
             val p = unpinned.persist(StorageLevel.MEMORY_AND_DISK); pinned += p; p
           }
-          val touched = cow.map(b => frame.select(bucketExpr(b)).distinct().as[Long].collect().toSeq)
+          val touched = cow.map(b =>
+            frame.select(Generations.bucketOf("id", b)).distinct().as[Long].collect().toSeq)
           val old = snapshotRows(m.version, touched).select(col("id"),
             col("version").as("old_version"), col("hash").as("old_hash"),
             col("links").as("old_links"), col("value").as("old_value"))
@@ -698,7 +680,13 @@ final class Collection(val store: Store, val path: DataPath) {
             .select(col("id"), Store.gateCol(col("hash"), newVersion).as("version"),
               col("hash"), col("links"), col("value")), None)
       }
-      commitSnapshot(rows, m, newVersion, touched.map(_.toSet))
+      snapshots.write(rows, newVersion, Some(m.version), store.buckets.map(b =>
+        Generations.Partitions("bucket", "id", b, touched.map(_.toSet),
+          narrow = change.isInstanceOf[Commit.Held])))
+      snapshots.publish(metaFile,
+        MetaJson.encode(m.copy(version = newVersion, updated = System.currentTimeMillis())),
+        newVersion)
+      store.notifyCommit(path, newVersion)
     } catch {
       case e: Throwable =>
         var c: Throwable = e
@@ -708,85 +696,16 @@ final class Collection(val store: Store, val path: DataPath) {
     newVersion
   } }
 
-  /** Write the new snapshot, swap the manifest atomically, prune old
-    * snapshots (keeping the previous one as the reference keeps its
-    * `.backup`), then notify the change feed.
-    *
-    * Crash windows (spec-pinned in StoreSpec "crash mid-commit"): a
-    * death before the manifest swap leaves an orphan v{N} dir that the
-    * manifest gate makes invisible and the next commit's
-    * mode("overwrite") replaces — no cleanup step exists or is needed.
-    * A death AFTER the swap but before notifyCommit loses only the
-    * change-feed event: collection state is durable and correct, and a
-    * LensMaintainer heals the missed trigger at its next start (its
-    * retry set seeds with all lenses) or at the input's next commit.
-    *
-    * Bucketed stores write `bucket=k` partitions; with `carrySkip` set
-    * (copy-on-write merge), only the touched buckets are in `df` and
-    * every other bucket directory carries forward from the previous
-    * snapshot by hardlink (copy fallback) — no data I/O for untouched
-    * buckets. */
-  private def commitSnapshot(df: DataFrame, m: CollectionMeta, newVersion: Long,
-                             carrySkip: Option[Set[Long]]): Unit = {
-    val target = snapshotDir(newVersion)
-    store.buckets match {
-      case Some(b) =>
-        // repartition ON the bucket key before the partitioned write:
-        // every bucket lands in exactly one task → one file per bucket,
-        // never tasks × buckets tiny files (the write-side clustering
-        // Iceberg calls distribution-mode=hash). The point-lookup prune
-        // then reads ONE file; without it a 32-partition frame over B=8
-        // buckets wrote up to 256 files per commit.
-        df.withColumn("bucket", bucketExpr(b))
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(target.toString)
-        carrySkip.foreach { skip =>
-          graft.core.Fs.carryPartitions(snapshotDir(m.version), target, "bucket", skip)
-        }
-      case None =>
-        // AMORTIZED file-count control (r18, VERDICT r17 Next #1/#3):
-        // r17 put an AQE rebalance before EVERY unbucketed snapshot
-        // write, which stopped the fragmentation compounding (~97 files
-        // of a 5 000-row corpus by commit 2) but charged every commit a
-        // full shuffle of the snapshot — exactly what the held form's
-        // join-free carry avoids. Shuffled results (overwrite ingest,
-        // frame merges) are already AQE-coalesced to the advisory size,
-        // and a held commit adds only ~1 file; so the rebalance is only
-        // paid when the PREVIOUS snapshot actually accumulated files
-        // past the threshold — compaction every ~N commits instead of a
-        // shuffle every commit. Read order is never contractual (every
-        // listing surface sorts on the natural key at read).
-        Store.compactIfFragmented(df, snapshotDir(m.version))
-          .write.mode("overwrite").parquet(target.toString)
-    }
-    MetaJson.write(metaFile,
-      m.copy(version = newVersion, updated = System.currentTimeMillis()))
-    // prune snapshots older than newVersion-1
-    listSnapshots.filter(_ < newVersion - 1)
-      .foreach(v => graft.core.Fs.rmTree(snapshotDir(v)))
-    store.notifyCommit(path, newVersion)
-  }
-
   private[graft] def nextVersion: Long = meta.version + 1
-
-  private def listSnapshots: Seq[Long] =
-    if (!Files.isDirectory(dir)) Seq.empty
-    else graft.core.Fs.list(dir).iterator
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit))
-      .map(_.drop(1).toLong).toSeq
 }
 
 /** The O(1) manifest's JSON form, through the one JSON codec. */
 private object MetaJson {
-  def write(p: Path, m: CollectionMeta): Unit = {
-    val json = JsonCodec.encode(PoObj("version" -> PoInt(m.version),
+  def encode(m: CollectionMeta): Array[Byte] =
+    JsonCodec.encode(PoObj("version" -> PoInt(m.version),
       "created" -> PoInt(m.created), "updated" -> PoInt(m.updated), "memo" -> PoStr(m.memo)))
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.write(tmp, json)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+
+  def write(p: Path, m: CollectionMeta): Unit = Generations.atomicWrite(p, encode(m))
 
   def read(p: Path): CollectionMeta = {
     val bytes = Files.readAllBytes(p)

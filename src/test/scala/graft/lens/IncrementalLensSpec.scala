@@ -167,7 +167,8 @@ class IncrementalLensSpec extends AnyFunSuite {
         Seq(DataPath("datasets", "a", "cow")), CountingTagFn).create()
       lens.build()
 
-      val cache = java.nio.file.Paths.get(store.root, "lenses", "a", "cow-lens", "cache")
+      // the live cache generation, as the cache manifest names it
+      def cache = CacheManifest.read(lens.cacheDir).get.dir(lens.cacheDir)
       val bucketDirs = graft.core.Fs.list(cache)
         .filter(_.getFileName.toString.startsWith("pbucket=")).sortBy(_.toString)
       assert(bucketDirs.size >= 2, s"expected a partitioned cache, got $bucketDirs")
@@ -223,13 +224,13 @@ class IncrementalLensSpec extends AnyFunSuite {
     val lens = new Lens(store, "a", "drain-lens",
       Seq(DataPath("datasets", "a", "drain")), SlowCountingTagFn).create()
     lens.build()
-    val cache = lens.cacheDir
-    def cacheState(): Map[String, String] =
-      graft.core.Fs.list(cache).map { f =>
-        f.getFileName.toString ->
-          (if (f.getFileName.toString.endsWith(".json")) Files.readString(f)
-           else Files.size(f).toString)
-      }.toMap
+    // the manifest and the files of the live generation it names
+    def cacheState(): Map[String, String] = {
+      val manifest = CacheManifest.file(lens.cacheDir)
+      val live = CacheManifest.read(lens.cacheDir).get.dir(lens.cacheDir)
+      graft.core.Fs.list(live).map(f => f.getFileName.toString -> Files.size(f).toString).toMap +
+        (manifest.getFileName.toString -> Files.readString(manifest))
+    }
     val lastGood = cacheState()
     def busyWriters(): Seq[String] =
       Thread.getAllStackTraces.asScala.collect {
@@ -413,9 +414,9 @@ class IncrementalLensSpec extends AnyFunSuite {
     // deployments, separate processes) race a build of the same lens.
     // LensBuild.build holds the output collection's writer lock for the
     // whole pipeline, so the loser enters only after the winner's cache
-    // swap — its freshness gate then sees every input current and
-    // no-ops. Unserialized, both would overwrite the shared cache-next
-    // staging dir mid-job. Each record maps exactly once, ever.
+    // publish — its freshness gate then sees every input current and
+    // no-ops. Unserialized, both would overwrite the same next cache
+    // generation dir mid-job. Each record maps exactly once, ever.
     val root = Files.createTempDirectory("graft-inc-xproc").toString
     val s1 = new Store(SparkTestBase.spark, root)
     val s2 = new Store(SparkTestBase.spark, root)

@@ -87,6 +87,32 @@ class AttachmentsSpec extends AnyFunSuite {
     assert(s.attachments.has(hex))
   }
 
+  test("concurrent uploads of identical blobs all succeed and read back intact") {
+    val s = freshStore()
+    val rnd = new scala.util.Random(7)
+    val blobs = (1 to 32).map { i =>
+      val b = new Array[Byte](1 << 20); rnd.nextBytes(b); b(0) = i.toByte; b
+    }
+    val threads = 4
+    // every thread reaches each blob together, so the uploads overlap
+    val barrier = new java.util.concurrent.CyclicBarrier(threads)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val ts = (1 to threads).map { _ =>
+      val t = new Thread(() => blobs.foreach { b =>
+        barrier.await()
+        try s.attachments.write(b)
+        catch { case e: Throwable => failures.add(e) }
+      })
+      t.start(); t
+    }
+    ts.foreach(_.join(120000))
+    assert(failures.isEmpty, s"${failures.size} uploads failed, first: ${failures.peek()}")
+    blobs.foreach { b =>
+      assert(java.util.Arrays.equals(s.attachments.read(s.attachments.sha256hex(b)).get, b))
+    }
+    assert(s.attachments.list().size == blobs.size)
+  }
+
   test("cid: rewrite resolves uploads to hash URLs; missing cid rejects (W9)") {
     val s = freshStore()
     val hex = s.attachments.write("uploaded".getBytes)

@@ -78,6 +78,17 @@ class BucketedStoreSpec extends AnyFunSuite {
     assert(c.read("r0").get == PoInt(1000))
     assert(c.read("r63").get == PoInt(63))
     assert(c.list().size == 64)
+
+    // one-record PUTs into one bucket coalesce its carried rows and the
+    // new one into a single task: the bucket dir stays one file
+    val r0Bucket = bucketsV1.find(bn => filesOf(v2.resolve(bn)).forall(nf =>
+      !filesOf(v1.resolve(bn)).exists(Files.isSameFile(_, nf)))).get
+    (1 to 3).foreach(i => c.write("r0", PoInt(1000L + i)))
+    val live = s.dir(c.path).resolve(s"v${c.meta.version}")
+    assert(filesOf(live.resolve(r0Bucket)).size == 1,
+      s"$r0Bucket holds ${filesOf(live.resolve(r0Bucket))}")
+    assert(c.read("r0").get == PoInt(1003))
+    assert(c.list().size == 64)
   }
 
   test("lens output COW: incremental build rewrites only changed-output buckets") {
