@@ -596,8 +596,8 @@ object Plans {
 ## Round-12 additions (plan-shape)
 
 - q129 exact-substring pairs (Lee et al. class): scan → stride-1
-  char-32-gram explode (rebalanced to cores when the input has fewer
-  file-partitions — the Lens smallInput discipline) → partial-agg gram
+  char-32-gram explode (spread to cores when the input has fewer
+  file-partitions — `Parallelism.spread`) → partial-agg gram
   size table (map-side combined, no window sort anywhere in the
   candidate path) → left_semi cap gate → (gram) equi-join keyed pair
   candidates → per-(a,b,diagonal) WindowExec for gaps-and-islands

@@ -1755,15 +1755,12 @@ object SparkEntry {
     // Hashed-feature linear quality score (fastText/CCNet class):
     // uni+bigram features, bucket-indexed integer milli-weights,
     // integer fold in feature order, ONE final IEEE division — all
-    // inside the scan stage (zero shuffles in the op). The ingest
-    // rebalance below is the few-file-fixture spread (the sha256
-    // feature fold is the most CPU-dense map in the suite; one parquet
-    // file would run it on one core — the IncrementalLensQuery
-    // rationale); a real corpus has >= cores file-partitions.
+    // inside the scan stage (zero shuffles in the op). The sha256
+    // feature fold is the most CPU-dense map in the suite: its input is
+    // spread (see graft.core.Parallelism).
     "q131_quality_score" -> ((s, dir) =>
       graft.ops.TextOps.hashedQualityScore(
-          t(s, dir, "documents")
-            .repartition(s.sparkContext.defaultParallelism))
+          graft.core.Parallelism.spread(t(s, dir, "documents")))
         .orderBy(col("doc_id"))),
 
     // Corpus mixture construction (data mixing): per-source TOKEN

@@ -13,7 +13,7 @@ import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.codec.JsonCodec
-import graft.core.{Cbor, NaturalOrder, PoInt, PoObj, PoValue, Reduce, RecordStructure}
+import graft.core.{Cbor, NaturalOrder, Parallelism, PoInt, PoObj, PoValue, Reduce, RecordStructure}
 import graft.store.{Collection, Commit, DataPath, Generations, RecordRow, Store}
 
 /** One row of the spooled map stage — the lens compute cache. Kinds:
@@ -684,23 +684,12 @@ object LensBuild {
       // partitioned layout would only fragment a tiny cache), overridable
       // via `graft.lens.cachePartitions` for tests/production tuning.
       val pbuckets = derivePBuckets(lens)
-      // Map-stage parallelism: the map fn is the expensive stage of a
-      // build (user JS, CBOR decode). On a SINGLE-INPUT FULL build the
-      // plan is a narrow snapshot scan — partitions = input files, and a
-      // small collection (one ~MB parquet) runs the whole map in ONE
-      // task. Repartition up to the session's parallelism in exactly that
-      // case. Narrow-plan-only by construction: `.rdd` under AQE
-      // materializes query stages, so probing partition counts is only
-      // free when the plan has no exchanges (single input ⇒ no dedup
-      // window; no cache ⇒ no gate join). Multi-input builds are already
-      // wide (the dedup window shuffles). At scale a big collection has
-      // ≫ cores file-partitions and this is a no-op.
+      // The map fn (user JS, CBOR decode) is the expensive stage of a
+      // build: spread a SINGLE-INPUT full build's snapshot scan, whose
+      // partitions are its files (see Parallelism). Multi-input builds
+      // already shuffle in the dedup window.
       val freshSel = current.select(inCols.map(col): _*)
-      val smallInput = lens.inputs.size == 1 &&
-        freshSel.rdd.getNumPartitions < spark.sparkContext.defaultParallelism
-      val mapIn =
-        if (smallInput) freshSel.repartition(spark.sparkContext.defaultParallelism)
-        else freshSel
+      val mapIn = if (lens.inputs.size == 1) Parallelism.spread(freshSel) else freshSel
       // The spool is BOTH the next compute cache (parquet, published at
       // the end) and the input to the reduce + logs stages. Persist it so
       // the write job doubles as the materialization and the reduce reads

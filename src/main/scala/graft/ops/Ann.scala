@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.Parallelism
+
 /** Similarity search over an embedding column (ARRAY<FLOAT>).
   *
   * Scale design: the brute-force path broadcasts the (small) query set
@@ -197,16 +199,8 @@ object Ann {
     val spark = df.sparkSession
     import spark.implicits._
     val planes = hyperplanes(dim, tables * bitsPerTable)
-    // Spread before the L×k dot-product map (r18): a one-file embeddings
-    // table scans as ONE partition, and the signature computation — the
-    // CPU-dense narrow stage of every LSH operator — then runs single-
-    // threaded (measured in q73: a 1.6 s one-core stage with the other
-    // AQE stage jobs blocked on its persist's cache lock). Narrow-plan
-    // partition probe only (scan/select/filter callers), so no job.
-    val sel = df.select(col(idCol).cast("long"), col(embCol).cast("array<double>"))
-    val dp = spark.sparkContext.defaultParallelism
-    val spread = if (sel.rdd.getNumPartitions < dp) sel.repartition(dp) else sel
-    spread
+    // the L×k dot-product map is CPU-dense: see Parallelism
+    Parallelism.spread(df.select(col(idCol).cast("long"), col(embCol).cast("array<double>")))
       .as[(Long, Seq[Double])]
       .flatMap { case (id, emb) =>
         (0 until tables).iterator.map { t =>

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import scala.util.hashing.MurmurHash3
 
+import graft.core.Parallelism
+
 /** Deduplication operators for training-data pipelines.
   *
   * Scale design: nothing here ever materializes the O(n²) pair space.
@@ -187,13 +189,9 @@ object Dedup {
       .toDF("band", "bkey", idCol)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("band"), col("bkey"))
-    // explicit (band, bkey) partitioning (r18, the spreadForVerify
-    // rationale): the window's own exchange would AQE-coalesce to ~1
-    // partition on narrow rows, serializing the window + bucket
-    // aggregation + pair explosion that all reuse it
-    val sized = banded
-      .repartition(banded.sparkSession.sparkContext.defaultParallelism,
-        col("band"), col("bkey"))
+    // explicit (band, bkey) partitioning, see Parallelism: the window,
+    // bucket aggregation and pair explosion all reuse it
+    val sized = Parallelism.byKeys(banded, col("band"), col("bkey"))
       .withColumn("bsz", count(lit(1)).over(w))
       .withColumn("rn", row_number().over(w.orderBy(col(idCol))))
     // Default-on drop visibility (CapStats WARNs if the cap fires);
@@ -205,7 +203,7 @@ object Dedup {
       sum(when(col("bsz") > maxBucketSize && col("rn") === 1, 1L)
         .otherwise(0L)).as("dropped_buckets"),
       max(col("bsz")).as("max_bucket")))
-    spreadForVerify(watched
+    Parallelism.byKeys(watched
       .filter(col("bsz") > 1 && col("bsz") <= maxBucketSize)
       .groupBy(col("band"), col("bkey"))
       .agg(collect_list(col(idCol)).as("ids"))
@@ -214,26 +212,6 @@ object Dedup {
       col("a_id"), col("b_id"))
       .distinct()
   }
-
-  /** Explicit hash partitioning for a candidate-pair frame's dedup +
-    * verify stages (r18). AQE's size-based partition coalescing sees
-    * only the candidate rows' BYTES (bare ids/offsets, tens of bytes
-    * each) and packs them into one advisory-sized partition — blind to
-    * the work that runs there: the distinct/groupBy aggregation over
-    * millions of pairs AND the verify that re-attaches payloads
-    * (shingle arrays, embeddings, full texts) and runs the expensive
-    * comparison. Measured: q73's candidate distinct ran as ONE 15.7 s
-    * task at sf1.0 on a 32-core session (a post-hoc round-robin spread
-    * AFTER the distinct parallelized only the verify and left the
-    * aggregation serial). An explicit-numPartitions hash repartition on
-    * the dedup keys is exempt from AQE coalescing AND satisfies the
-    * aggregation's distribution requirement, so the same single
-    * exchange serves dedup and verify at full parallelism. The lost
-    * map-side partial dedup only re-ships duplicate occurrences of
-    * 16-byte id rows — noise against the serialized aggregation it
-    * buys back. */
-  private def spreadForVerify(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
 
   /** all unordered pairs of an id array, as struct(_1 < _2) — column
     * expression so the bucket expansion stays in codegen */
@@ -337,10 +315,8 @@ object Dedup {
       .select(col("id"), col("n_a"), xxhash64(col("g")).as("gh"))
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("gh"))
-    // explicit gram partitioning (r18): same serialized-window fix as
-    // lshCandidatePairs
-    val sized = ex
-      .repartition(ex.sparkSession.sparkContext.defaultParallelism, col("gh"))
+    // explicit gram partitioning, as in lshCandidatePairs
+    val sized = Parallelism.byKeys(ex, col("gh"))
       .withColumn("dfq", count(lit(1)).over(w))
       .withColumn("rn", row_number().over(w.orderBy(col("id"))))
     val warned = CapStats.watch(sized, "containmentPairs",
@@ -361,7 +337,7 @@ object Dedup {
       .filter(col("pr") <=
         expr(s"(n_a * ${threshDen - threshNum}) DIV $threshDen") + 1)
       .select(col("id").as("a_id"), col("gh"))
-    val cand = spreadForVerify(probe
+    val cand = Parallelism.byKeys(probe
       .join(kept.select(col("id").as("b_id"), col("gh")), "gh")
       .filter(col("a_id") =!= col("b_id"))
       .select(col("a_id"), col("b_id")), col("a_id"), col("b_id"))
@@ -526,7 +502,7 @@ object Dedup {
     // positional-gram join emits each qualifying pair many times (p
     // prefix grams × 3 probe bands), so the map-side partial dedup the
     // plain distinct() keeps is worth more than parallelizing its final
-    // aggregation — the spreadForVerify variant measured 8.1 → 11.3 s
+    // aggregation — the Parallelism.byKeys variant measured 8.1 → 11.3 s
     // at sf1.0 (shuffling every duplicate occurrence), plain wins.
     val cand = probe.join(build, Seq("g", "__band"))
       .filter(col("a_id") < col("b_id") &&
@@ -896,7 +872,7 @@ object Dedup {
     val sigOk = sig.join(okCells, Seq("tbl", "bucket"), "left_semi")
     val a = sigOk.select(col(idCol).as("a_id"), col("tbl"), col("bucket"))
     val b = sigOk.select(col(idCol).as("b_id"), col("tbl"), col("bucket"))
-    val cand = spreadForVerify(a.join(b, Seq("tbl", "bucket"))
+    val cand = Parallelism.byKeys(a.join(b, Seq("tbl", "bucket"))
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id")), col("a_id"), col("b_id")).distinct()
     val e = embeddings
@@ -936,7 +912,7 @@ object Dedup {
     val sigC = Ann.multiSignatures(corpus, dim, tables, bitsPerTable, idCol, embCol)
     val sigE = Ann.multiSignatures(evalSet, dim, tables, bitsPerTable, idCol, embCol)
       .select(col(idCol).as("eval_id"), col("tbl"), col("bucket"))
-    val cand = spreadForVerify(sigC.join(broadcast(sigE), Seq("tbl", "bucket"))
+    val cand = Parallelism.byKeys(sigC.join(broadcast(sigE), Seq("tbl", "bucket"))
       .select(col(idCol), col("eval_id")), col(idCol), col("eval_id")).distinct()
     val ce = corpus.select(col(idCol).cast("long"),
       col(embCol).cast("array<double>").as("emb_c"))
@@ -1133,13 +1109,9 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val d0 = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
       .filter(col("t").isNotNull && length(col("t")) >= k)
-    // The stride-1 gram explode is the expensive narrow stage (|text|
-    // substr+hash per doc); a few-file corpus would run it on a few
-    // cores. Rebalance ONLY then (the Lens smallInput discipline —
-    // probing .rdd partitions is free on this exchange-less projection;
-    // a big corpus has >= cores file-partitions and skips the shuffle).
-    val dp = docs.sparkSession.sparkContext.defaultParallelism
-    val d = if (d0.rdd.getNumPartitions < dp) d0.repartition(dp) else d0
+    // the stride-1 gram explode (|text| substr+hash per doc) is the
+    // expensive narrow stage: see Parallelism
+    val d = Parallelism.spread(d0)
     val grams = transform(sequence(lit(0), length(col("t")) - k),
       i => struct(i.as("p"), xxhash64(col("t").substr(i + lit(1), lit(k))).as("gh")))
     val pos = d.select(col("id"), explode(grams).as("pg"))
@@ -1180,14 +1152,11 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("pa"), (col("pa") - col("pb")).as("diag"))
     val wd = Window.partitionBy(col("a_id"), col("b_id"), col("diag"))
       .orderBy(col("pa"))
-    // explicit (pair, diagonal) partitioning (r18): the island window,
-    // the island aggregation (grouping keys ⊇ the partition keys, so it
-    // reuses the exchange) and the char-exact verify + extension scans
-    // downstream all run at full parallelism instead of on the
-    // AQE-coalesced read of narrow candidate rows
-    val islands = cand
-      .repartition(cand.sparkSession.sparkContext.defaultParallelism,
-        col("a_id"), col("b_id"), col("diag"))
+    // explicit (pair, diagonal) partitioning, see Parallelism: the
+    // island window, the island aggregation (grouping keys ⊇ the
+    // partition keys, so it reuses the exchange) and the char-exact
+    // verify + extension scans downstream all read it
+    val islands = Parallelism.byKeys(cand, col("a_id"), col("b_id"), col("diag"))
       .withColumn("grp", col("pa") - row_number().over(wd))
       .groupBy(col("a_id"), col("b_id"), col("diag"), col("grp"))
       .agg(min(col("pa")).as("a0"), (count(lit(1)) + lit(k - 1)).as("ilen"))

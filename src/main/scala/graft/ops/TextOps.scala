@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Parallelism
+
 /** Text-analysis primitives for large-scale training-data pipelines.
   * Everything is built from codegen'd `org.apache.spark.sql.functions`
   * (no per-row Scala UDFs on the hot path) so plans stay inside
@@ -92,14 +94,8 @@ object TextOps {
   def shingles(docs: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // Spread before the tokenize+shingle map (r18, the multiSignatures
-    // rationale): a one-file documents table scans as ONE partition and
-    // the most expensive narrow stage of the minhash pipeline runs
-    // single-threaded. Narrow-plan partition probe — no job.
-    val sel = docs.select(col(idCol).cast("long"), col(textCol))
-    val dp = spark.sparkContext.defaultParallelism
-    val spread = if (sel.rdd.getNumPartitions < dp) sel.repartition(dp) else sel
-    spread
+    // the tokenize+shingle map is CPU-dense: see Parallelism
+    Parallelism.spread(docs.select(col(idCol).cast("long"), col(textCol)))
       .as[(Long, String)]
       .map { case (id, text) =>
         // Locale.ROOT: a locale-default toLowerCase diverges from

@@ -1,13 +1,9 @@
 package graft.queries
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Tables
 import graft.core._
-import graft.lens.Lens
-import graft.store.{DataPath, Store, WriteMode}
+import graft.store.{DataPath, WriteMode}
 
 /** q150: a USER-JAVASCRIPT lens whose map is built on ASYNC/AWAIT +
   * PROMISES — the round-14 interpreter surface exercised end-to-end
@@ -184,27 +180,16 @@ object AsyncLensQuery {
   private def runWith(spark: SparkSession, sfDir: String, code: String,
                       lensName: String, tag: String): DataFrame = {
     import spark.implicits._
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val store = new Store(spark, Fs.pidScratch(s"graft-$tag-$sfName"))
+    val store = Fixture.store(spark, sfDir, s"graft-$tag")
 
     val fn = graft.lens.JsMapFn.compile(code).fold(
       e => throw new IllegalStateException(s"${e.errType}: ${e.message}"),
       identity)
 
-    val ds = store.dataset("bench", "documents")
-    if (ds.exists) ds.drop()
-    ds.create()
-    val entries = Tables.load(spark, sfDir, "documents")
-      .select("doc_id", "text").as[(Long, String)]
-      .map { case (id, text) =>
-        (id.toString, Cbor.encode(PoObj("text" -> PoStr(text))), false)
-      }.toDF("id", "value", "tombstone")
-    ds.writeEntriesDF(entries, WriteMode.Overwrite)
-
-    val lens = new Lens(store, "bench", lensName,
+    Fixture.freshDataset(store, "documents")
+      .writeEntriesDF(Fixture.entries(Fixture.docs(spark, sfDir)), WriteMode.Overwrite)
+    val lens = Fixture.freshLens(store, lensName,
       Seq(DataPath("datasets", "bench", "documents")), fn)
-    if (lens.output.exists) lens.output.drop()
-    lens.create()
     lens.build()
 
     lens.output.records.map { r =>

@@ -4,10 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
-import graft.Tables
-import graft.core.{Cbor, PoObj, PoSet, PoStr}
-import graft.lens.{CommutativeMapFn, Lens, MapContext, MapFn}
-import graft.store.{DataPath, Store, WriteMode}
+import graft.core.{Cbor, Parallelism, PoSet, PoStr}
+import graft.lens.{CommutativeMapFn, MapContext, MapFn}
+import graft.store.{DataPath, WriteMode}
 
 /** Lens-on-lens CASCADE under the hard signal (SURVEY §2.6 step 8;
   * reference: library/models/lens.js:351-367 cascading rebuilds,
@@ -61,35 +60,20 @@ object CascadeLensQuery {
     // pid-scoped scratch, reaped + reused (the q44/q136 discipline);
     // everything is dropped up front so build 1 always starts cold and
     // the invocation counts never see a previous run's caches
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val root = graft.core.Fs.pidScratch(s"graft-cascq-$sfName")
-    val store = new Store(spark, root)
-    val ds = store.dataset("bench", "docs-casc")
-    if (ds.exists) ds.drop()
-    ds.create()
-
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-      .repartition(spark.sparkContext.defaultParallelism)
-    def enc(id: Long, text: String): (String, Array[Byte], Boolean) =
-      (id.toString, Cbor.encode(PoObj("text" -> PoStr(text))), false)
+    val store = Fixture.store(spark, sfDir, "graft-cascq")
+    val ds = Fixture.freshDataset(store, "docs-casc")
+    val docs = Parallelism.spread(Fixture.docs(spark, sfDir))
 
     // ---- commit 1: the whole corpus
-    ds.writeEntriesDF(docs.as[(Long, String)]
-      .map { case (id, t) => enc(id, t) }.toDF("id", "value", "tombstone"),
-      WriteMode.Overwrite)
+    ds.writeEntriesDF(Fixture.entries(docs), WriteMode.Overwrite)
 
     val accA = spark.sparkContext.longAccumulator("graft.q138.mapCallsA")
     val accB = spark.sparkContext.longAccumulator("graft.q138.mapCallsB")
-    val lensA = new Lens(store, "bench", "tok-casc",
+    val lensA = Fixture.freshLens(store, "tok-casc",
       Seq(DataPath("datasets", "bench", "docs-casc")),
       new IncrementalLensQuery.CountingTokenFn(accA))
-    if (lensA.output.exists) lensA.output.drop()
-    lensA.create()
-    val lensB = new Lens(store, "bench", "buck-casc",
-      Seq(DataPath("lenses", "bench", "tok-casc")),
-      new BucketFn(accB))
-    if (lensB.output.exists) lensB.output.drop()
-    lensB.create()
+    val lensB = Fixture.freshLens(store, "buck-casc",
+      Seq(DataPath("lenses", "bench", "tok-casc")), new BucketFn(accB))
 
     // full builds, dependency order (the LensHub cascade runs exactly
     // this ordering off the change feed; the fixture calls it directly
@@ -98,20 +82,7 @@ object CascadeLensQuery {
     lensB.build()
 
     // ---- commit 2 (merge): q44's exact touched subsets
-    val updates = docs
-      .filter(col("doc_id") % 7 === 0 && col("doc_id") % 13 =!= 2)
-      .as[(Long, String)]
-      .map { case (id, t) => enc(id, t + " graftupdate") }
-      .toDF("id", "value", "tombstone")
-    val deletes = docs.filter(col("doc_id") % 13 === 2)
-      .select(col("doc_id").cast("string")).as[String]
-      .map(id => (id, Array.empty[Byte], true))
-      .toDF("id", "value", "tombstone")
-    val news = spark.range(1, 6)
-      .as[Long].map(i => enc(1000000L + i, s"brand new graft doc $i"))
-      .toDF("id", "value", "tombstone")
-    ds.writeEntriesDF(updates.unionByName(deletes).unionByName(news),
-      WriteMode.Merge)
+    ds.writeEntriesDF(Fixture.touchedDelta(docs), WriteMode.Merge)
 
     // ---- incremental cascade: A then B, each counting its map calls
     accA.reset(); accB.reset()

@@ -4,10 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
-import graft.Tables
-import graft.core.{Cbor, PoInt, PoObj, PoSet, PoStr}
+import graft.core.{Cbor, Parallelism, PoInt, PoSet, PoStr}
 import graft.lens.{Lens, LensHub, MapContext, MapFn}
-import graft.store.{DataPath, Store, WriteMode}
+import graft.store.{DataPath, WriteMode}
 
 /** 3-level DIAMOND cascade under the hard signal (VERDICT r13 #6;
   * reference: library/models/lens.js:351-367 cascading rebuilds —
@@ -81,20 +80,16 @@ object DiamondLensQuery {
 
   def run(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val root = graft.core.Fs.pidScratch(s"graft-diaq-$sfName")
-    val store = new Store(spark, root)
+    val store = Fixture.store(spark, sfDir, "graft-diaq")
 
     // drop everything BEFORE the hub exists: drops must not trigger a
     // cascade, and build 1 must start cold so the invocation counts
     // never see a previous run's caches
-    val ds = store.dataset("bench", "docs-dia")
-    if (ds.exists) ds.drop()
     Seq("tok-dia", "chr-dia", "len-dia", "sink-dia").foreach { n =>
       val c = store.collection(DataPath("lenses", "bench", n))
       if (c.exists) c.drop()
     }
-    ds.create()
+    val ds = Fixture.freshDataset(store, "docs-dia")
 
     val hub = new LensHub(store, parallelCascade = true)
     val accA = spark.sparkContext.longAccumulator("graft.q153.mapCallsA")
@@ -115,16 +110,11 @@ object DiamondLensQuery {
         DataPath("lenses", "bench", "len-dia")),
       new SinkFn(accC)).create())
 
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-      .repartition(spark.sparkContext.defaultParallelism)
-    def enc(id: Long, text: String): (String, Array[Byte], Boolean) =
-      (id.toString, Cbor.encode(PoObj("text" -> PoStr(text))), false)
+    val docs = Parallelism.spread(Fixture.docs(spark, sfDir))
 
     // ---- commit 1: the whole corpus — the hub settles the full DAG
     // synchronously before writeEntriesDF returns
-    ds.writeEntriesDF(docs.as[(Long, String)]
-      .map { case (id, t) => enc(id, t) }.toDF("id", "value", "tombstone"),
-      WriteMode.Overwrite)
+    ds.writeEntriesDF(Fixture.entries(docs), WriteMode.Overwrite)
 
     // phase-1 snapshot of C's versions (driver map: ~60 bucket rows) —
     // the deterministic reference point `changed` is measured against
@@ -134,20 +124,7 @@ object DiamondLensQuery {
     // ---- commit 2 (merge): q44's exact touched subsets; the hub
     // re-settles the diamond incrementally
     accA.reset(); accB1.reset(); accB2.reset(); accC.reset()
-    val updates = docs
-      .filter(col("doc_id") % 7 === 0 && col("doc_id") % 13 =!= 2)
-      .as[(Long, String)]
-      .map { case (id, t) => enc(id, t + " graftupdate") }
-      .toDF("id", "value", "tombstone")
-    val deletes = docs.filter(col("doc_id") % 13 === 2)
-      .select(col("doc_id").cast("string")).as[String]
-      .map(id => (id, Array.empty[Byte], true))
-      .toDF("id", "value", "tombstone")
-    val news = spark.range(1, 6)
-      .as[Long].map(i => enc(1000000L + i, s"brand new graft doc $i"))
-      .toDF("id", "value", "tombstone")
-    ds.writeEntriesDF(updates.unionByName(deletes).unionByName(news),
-      WriteMode.Merge)
+    ds.writeEntriesDF(Fixture.touchedDelta(docs), WriteMode.Merge)
 
     val (nA, nB1, nB2, nC) = (accA.value, accB1.value, accB2.value, accC.value)
     sink.output.records.map { r =>

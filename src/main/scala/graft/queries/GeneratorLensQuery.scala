@@ -1,13 +1,9 @@
 package graft.queries
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Tables
 import graft.core._
-import graft.lens.Lens
-import graft.store.{DataPath, Store, WriteMode}
+import graft.store.{DataPath, WriteMode}
 
 /** q149: a USER-JAVASCRIPT lens whose map runs on GENERATORS — the
   * round-13 interpreter surface (`function*`/`yield`, generator
@@ -65,27 +61,16 @@ object GeneratorLensQuery {
 
   def run(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val store = new Store(spark, Fs.pidScratch(s"graft-genq-$sfName"))
+    val store = Fixture.store(spark, sfDir, "graft-genq")
 
     val fn = graft.lens.JsMapFn.compile(JsBigramCode).fold(
       e => throw new IllegalStateException(s"${e.errType}: ${e.message}"),
       identity)
 
-    val ds = store.dataset("bench", "documents")
-    if (ds.exists) ds.drop()
-    ds.create()
-    val entries = Tables.load(spark, sfDir, "documents")
-      .select("doc_id", "text").as[(Long, String)]
-      .map { case (id, text) =>
-        (id.toString, Cbor.encode(PoObj("text" -> PoStr(text))), false)
-      }.toDF("id", "value", "tombstone")
-    ds.writeEntriesDF(entries, WriteMode.Overwrite)
-
-    val lens = new Lens(store, "bench", "bigram-index",
+    Fixture.freshDataset(store, "documents")
+      .writeEntriesDF(Fixture.entries(Fixture.docs(spark, sfDir)), WriteMode.Overwrite)
+    val lens = Fixture.freshLens(store, "bigram-index",
       Seq(DataPath("datasets", "bench", "documents")), fn)
-    if (lens.output.exists) lens.output.drop()
-    lens.create()
     lens.build()
 
     lens.output.records.map { r =>

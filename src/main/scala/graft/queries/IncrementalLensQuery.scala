@@ -4,10 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
-import graft.Tables
 import graft.core._
 import graft.lens.{CommutativeMapFn, Lens, MapContext, MapFn}
-import graft.store.{DataPath, Store, WriteMode}
+import graft.store.{DataPath, WriteMode}
 
 /** Incremental lens maintenance under the hard signal (SURVEY §2.6 —
   * version-gated recompute + compute-cache reuse + deletion drop;
@@ -93,24 +92,11 @@ object IncrementalLensQuery {
     * documents table; a doc that hits BOTH gates (%17==3 and %31==5)
     * must yield both rows — logs emitted before a throw survive. */
   def lensLogs(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val root = graft.core.Fs.pidScratch(s"graft-logq-$sfName")
-    val store = new Store(spark, root)
-    val ds = store.dataset("bench", "docs-log")
-    if (ds.exists) ds.drop()
-    ds.create()
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-      .repartition(spark.sparkContext.defaultParallelism)
-    ds.writeEntriesDF(docs.as[(Long, String)].map { case (id, t) =>
-        (id.toString, Cbor.encode(PoObj("text" -> PoStr(t))), false)
-      }.toDF("id", "value", "tombstone"), WriteMode.Overwrite)
-
-    val lens = new Lens(store, "bench", "log-lens",
-      Seq(DataPath("datasets", "bench", "docs-log")), new LoggingTokenFn)
-    if (lens.output.exists) lens.output.drop()
-    lens.create()
-    lens.build()
+    val store = Fixture.store(spark, sfDir, "graft-logq")
+    Fixture.freshDataset(store, "docs-log").writeEntriesDF(
+      Fixture.entries(Parallelism.spread(Fixture.docs(spark, sfDir))), WriteMode.Overwrite)
+    Fixture.freshLens(store, "log-lens",
+      Seq(DataPath("datasets", "bench", "docs-log")), new LoggingTokenFn).build()
 
     Lens.logsOf(store, "bench", "log-lens")
       .select(
@@ -139,70 +125,32 @@ object IncrementalLensQuery {
 
   def run(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // scratch store keyed by (scale factor, pid) and REUSED across runs
-    // in one process (a fresh dir per invocation would leak a full
-    // corpus copy every bench iteration). The pid suffix keeps
-    // concurrent processes off each other's store — commits would
-    // serialize safely (Store.withLock holds an OS file lock) but this
-    // query asserts exact map-invocation counts, which a concurrent
-    // rebuilder would perturb; dead processes' dirs are reaped here,
-    // the ivf-centroids pattern. Both collections are dropped up front:
-    // dropping the lens output removes its compute cache with it, so
-    // build 1 below always maps everything and the invocation count
-    // never sees state from a previous run.
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val root = graft.core.Fs.pidScratch(s"graft-incq-$sfName")
-    val store = new Store(spark, root)
-    val ds = store.dataset("bench", "documents-inc")
-    if (ds.exists) ds.drop()
-    ds.create()
-
-    // The documents table is one parquet file → one partition; without
-    // a spread, the CBOR encode here AND the store's hash/link prep run
-    // single-threaded. Repartitioning the ingest frame is the right
-    // call at any scale (bulk ingest from few files is exactly when a
-    // loader should rebalance before the expensive per-row work).
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-      .repartition(spark.sparkContext.defaultParallelism)
-    def enc(id: Long, text: String): (String, Array[Byte], Boolean) =
-      (id.toString, Cbor.encode(PoObj("text" -> PoStr(text))), false)
+    // The pid-scoped root keeps a concurrent process's rebuilds from
+    // perturbing the exact map-invocation counts. Both collections are
+    // dropped up front: dropping the lens output removes its compute
+    // cache with it, so build 1 below always maps everything and the
+    // invocation count never sees state from a previous run.
+    val store = Fixture.store(spark, sfDir, "graft-incq")
+    val ds = Fixture.freshDataset(store, "documents-inc")
+    // the CBOR encode and the store's hash/link prep are per-row work:
+    // spread the ingest frame (see Parallelism)
+    val docs = Parallelism.spread(Fixture.docs(spark, sfDir))
 
     // ---- commit 1: the whole corpus
     phase("commit1_overwrite") {
-      ds.writeEntriesDF(docs.as[(Long, String)]
-        .map { case (id, t) => enc(id, t) }.toDF("id", "value", "tombstone"),
-        WriteMode.Overwrite)
+      ds.writeEntriesDF(Fixture.entries(docs), WriteMode.Overwrite)
     }
 
     val acc = spark.sparkContext.longAccumulator("graft.q44.mapCalls")
-    val lens = new Lens(store, "bench", "token-index-inc",
-      Seq(DataPath("datasets", "bench", "documents-inc")),
-      new CountingTokenFn(acc))
-    if (lens.output.exists) lens.output.drop() // removes cache + logs too
-    lens.create()
+    val lens = Fixture.freshLens(store, "token-index-inc",
+      Seq(DataPath("datasets", "bench", "documents-inc")), new CountingTokenFn(acc))
     phase("build1_full") {
       lens.build() // full: empty cache maps everything → output version 1
     }
 
-    // ---- commit 2 (merge): disjoint touched subsets
-    //   deleted:  doc_id % 13 == 2            (tombstones)
-    //   updated:  doc_id % 7 == 0, not deleted (text append → new hash)
-    //   new:      1000001..1000005
-    val updates = docs
-      .filter(col("doc_id") % 7 === 0 && col("doc_id") % 13 =!= 2)
-      .as[(Long, String)]
-      .map { case (id, t) => enc(id, t + " graftupdate") }
-      .toDF("id", "value", "tombstone")
-    val deletes = docs.filter(col("doc_id") % 13 === 2)
-      .select(col("doc_id").cast("string")).as[String]
-      .map(id => (id, Array.empty[Byte], true))
-      .toDF("id", "value", "tombstone")
-    val news = spark.range(1, 6)
-      .as[Long].map(i => enc(1000000L + i, s"brand new graft doc $i"))
-      .toDF("id", "value", "tombstone")
+    // ---- commit 2 (merge): disjoint touched subsets (deleted, updated, new)
     phase("commit2_merge") {
-      ds.writeEntriesDF(updates.unionByName(deletes).unionByName(news),
-        WriteMode.Merge)
+      ds.writeEntriesDF(Fixture.touchedDelta(docs), WriteMode.Merge)
     }
 
     // ---- incremental build: only updated+new paths may re-map

@@ -4,9 +4,8 @@ import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Tables
 import graft.core._
-import graft.lens.{CommutativeMapFn, Lens, MapContext, MapFn}
+import graft.lens.{CommutativeMapFn, MapContext, MapFn}
 import graft.store.{DataPath, Store, WriteMode}
 
 /** Driver-verified query that exercises the REAL engine path — ingest →
@@ -70,24 +69,13 @@ object LensTokenIndex {
                       fn: MapFn): DataFrame = {
     import spark.implicits._
     // scratch store keyed by scale factor, rebuilt per run
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val root = Paths.get(sys.props("java.io.tmpdir"), s"graft-$tag-$sfName").toString
+    val root = Paths.get(sys.props("java.io.tmpdir"), s"graft-$tag-${Fixture.sfName(sfDir)}").toString
     val store = new Store(spark, root)
 
-    val ds = store.dataset("bench", "documents")
-    if (ds.exists) ds.drop()
-    ds.create()
-    val entries = Tables.load(spark, sfDir, "documents")
-      .select("doc_id", "text").as[(Long, String)]
-      .map { case (id, text) =>
-        (id.toString, Cbor.encode(PoObj("text" -> PoStr(text))), false)
-      }.toDF("id", "value", "tombstone")
-    ds.writeEntriesDF(entries, WriteMode.Overwrite)
-
-    val lens = new Lens(store, "bench", "token-index",
+    Fixture.freshDataset(store, "documents")
+      .writeEntriesDF(Fixture.entries(Fixture.docs(spark, sfDir)), WriteMode.Overwrite)
+    val lens = Fixture.freshLens(store, "token-index",
       Seq(DataPath("datasets", "bench", "documents")), fn)
-    if (lens.output.exists) lens.output.drop()
-    lens.create()
     lens.build()
 
     lens.output.records.map { r =>

@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.core._
 import graft.lens.Lens
 import graft.store.{DataPath, Store, WriteMode}
@@ -45,35 +44,24 @@ object MaintainerQuery {
 
   def run(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
     // store root reused across bench reps (the q44 pattern); stream
     // checkpoints are FRESH per invocation — re-consuming a previous
     // rep's log events only adds version-gated no-op triggers
-    val root = Fs.pidScratch(s"graft-lmq-$sfName")
-
     // ---- process 1: the ingest writer
-    val storeW = new Store(spark, root)
+    val storeW = Fixture.store(spark, sfDir, "graft-lmq")
+    val root = storeW.root
     new CommitLog(storeW, soleWriter = false).install()
-    val ds = storeW.dataset("bench", "documents-lm")
-    if (ds.exists) ds.drop()
-    ds.create()
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-      .repartition(spark.sparkContext.defaultParallelism)
-    def enc(id: Long, text: String): (String, Array[Byte], Boolean) =
-      (id.toString, Cbor.encode(PoObj("text" -> PoStr(text))), false)
-    ds.writeEntriesDF(docs.as[(Long, String)]
-      .map { case (id, t) => enc(id, t) }.toDF("id", "value", "tombstone"),
-      WriteMode.Overwrite)
+    val ds = Fixture.freshDataset(storeW, "documents-lm")
+    val docs = Parallelism.spread(Fixture.docs(spark, sfDir))
+    ds.writeEntriesDF(Fixture.entries(docs), WriteMode.Overwrite)
 
     // ---- process 2: the standing maintainer
     val storeM = new Store(spark, root)
     val logM = new CommitLog(storeM, soleWriter = false).install()
     val acc = spark.sparkContext.longAccumulator("graft.q159.mapCalls")
-    val lens = new Lens(storeM, "bench", "token-index-lm",
+    val lens = Fixture.freshLens(storeM, "token-index-lm",
       Seq(DataPath("datasets", "bench", "documents-lm")),
       new IncrementalLensQuery.CountingTokenFn(acc))
-    if (lens.output.exists) lens.output.drop() // previous rep's output + cache
-    lens.create()
     val maintainer = new LensMaintainer(logM, Seq(lens),
       Files.createTempDirectory("graft-lmq-ck").toString)
 
@@ -81,11 +69,8 @@ object MaintainerQuery {
     val fullCalls = acc.value
 
     // ---- the writer touches a subset; the maintainer drains again
-    val updates = docs.filter(col("doc_id") % 13 === 2)
-      .as[(Long, String)]
-      .map { case (id, t) => enc(id, t + " graftdelta") }
-      .toDF("id", "value", "tombstone")
-    ds.writeEntriesDF(updates, WriteMode.Merge)
+    ds.writeEntriesDF(Fixture.entries(docs.filter(col("doc_id") % 13 === 2), _ + " graftdelta"),
+      WriteMode.Merge)
     acc.reset()
     maintainer.runOnce() // incremental: only the touched subset re-maps
     val incrCalls = acc.value

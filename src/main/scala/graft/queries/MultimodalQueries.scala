@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.core.Parallelism
 import graft.ops.Multimodal
 
 /** Driver-verified multimodal queries. */
@@ -31,11 +32,7 @@ object MultimodalQueries {
   def audioDecode(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val n = 800 // 8 windows × 100 samples at 8 kHz = 0.1 s per clip
-    // NOT spread (r18): unlike the q151 JPEG path, spreading this map
-    // over 32 tasks REGRESSED it 1.1 → 2.9 s (remeasure-confirmed
-    // cross-round mover) — javax.sound's AudioSystem provider lookup
-    // serializes concurrent readers, so 32 contending threads lose to
-    // one uncontended task at this size. Left single-partition.
+    // NOT spread: javax.sound serializes concurrent readers (see Parallelism)
     val wavs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id").cast("long")).distinct()
       .as[Long]
@@ -378,17 +375,10 @@ object MultimodalQueries {
     // exist; decode-only is the real operator), and a seventh of the
     // corpus carries the same per-image decode signal (the subsample
     // is in the oracle too — nothing silent)
-    // Spread BEFORE the heavy per-id encode/decode map (r18, VERDICT
-    // r17 Next #5): distinct() emits a few KB of ids, which AQE
-    // coalesces to ~1 post-shuffle partition — and the MJPEG fixture
-    // encode plus the downstream keyframe decode then ran effectively
-    // single-threaded (measured c8/c32 ≈ 1.0 at sf0.1; 33 s at sf1.0).
-    // Repartitioning the ID frame costs a shuffle of a few KB and gives
-    // the decode map the session's full parallelism.
-    val blobs = Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long")).distinct()
-      .filter(col("doc_id") % 7 === 0)
-      .repartition(spark.sparkContext.defaultParallelism)
+    // the per-id encode/decode map is CPU-heavy: spread (see Parallelism)
+    val blobs = Parallelism.spread(Tables.load(spark, sfDir, "documents")
+        .select(col("doc_id").cast("long")).distinct()
+        .filter(col("doc_id") % 7 === 0))
       .as[Long]
       .mapPartitions(_.map(id => (id, mjpegFixture(id))))
       .toDF("id", "media")
@@ -478,11 +468,10 @@ object MultimodalQueries {
     // every 4th doc: the PNG encode/decode fixture dominates the query's
     // cost and a quarter of the corpus carries the same per-pixel decode
     // signal (the subsample is in the oracle too — nothing silent)
-    val pngs = Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long")).distinct()
-      .filter(col("doc_id") % 4 === 0)
-      // spread before the PNG encode+decode map (r18, the q151 finding)
-      .repartition(spark.sparkContext.defaultParallelism)
+    // the PNG encode+decode map is CPU-heavy: spread (see Parallelism)
+    val pngs = Parallelism.spread(Tables.load(spark, sfDir, "documents")
+        .select(col("doc_id").cast("long")).distinct()
+        .filter(col("doc_id") % 4 === 0))
       .as[Long]
       .mapPartitions { it =>
         it.map { id =>
@@ -547,6 +536,7 @@ object MultimodalQueries {
     val n = idsDf.count()
     val m0 = n / 43
     val m = math.max(29L, if (m0 % 2 == 0) m0 + 1 else m0)
+    // NOT spread: it measured slower spread (see Parallelism)
     val pngs = idsDf
       .mapPartitions { it =>
         it.map { id =>

@@ -3,10 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.core._
-import graft.lens.{Lens, MapContext, MapFn}
-import graft.store.{DataPath, Store, WriteMode}
+import graft.lens.{MapContext, MapFn}
+import graft.store.{DataPath, WriteMode}
 
 /** Reduce-lattice BREADTH under the hard signal (SURVEY §2.5; reference:
   * library/utility/reduce.js:27-49, behavior pinned by
@@ -73,23 +72,12 @@ object ReduceLatticeQuery {
 
   def run(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val root = graft.core.Fs.pidScratch(s"graft-latq-$sfName")
-    val store = new Store(spark, root)
-    val ds = store.dataset("bench", "docs-lat")
-    if (ds.exists) ds.drop()
-    ds.create()
-
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "lang")
-      .repartition(spark.sparkContext.defaultParallelism)
-    ds.writeEntriesDF(docs.as[(Long, String)].map { case (id, lang) =>
-        (id.toString, Cbor.encode(PoObj("lang" -> PoStr(lang))), false)
-      }.toDF("id", "value", "tombstone"), WriteMode.Overwrite)
-
-    val lens = new Lens(store, "bench", "lattice-lat",
+    val store = Fixture.store(spark, sfDir, "graft-latq")
+    Fixture.freshDataset(store, "docs-lat").writeEntriesDF(
+      Fixture.entries(Parallelism.spread(Fixture.docs(spark, sfDir, "lang")), field = "lang"),
+      WriteMode.Overwrite)
+    val lens = Fixture.freshLens(store, "lattice-lat",
       Seq(DataPath("datasets", "bench", "docs-lat")), new LatticeFn)
-    if (lens.output.exists) lens.output.drop()
-    lens.create()
     lens.build()
 
     lens.output.records.map { r =>

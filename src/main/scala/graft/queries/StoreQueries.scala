@@ -6,16 +6,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.core.{Cbor, NaturalOrder, PoArr, PoInt, PoObj, PoSet, PoStr}
-import graft.store.{AttachmentStore, DataPath, Export, Import, ReadPath, Store, WriteMode}
+import graft.core.{Cbor, Fs, Parallelism, PoArr, PoInt, PoObj, PoSet, PoStr}
+import graft.store.{AttachmentStore, Collection, DataPath, Export, Import, ReadPath, Store, WriteMode}
 
 /** Driver-verified queries over the store's commit/version machinery. */
 object StoreQueries {
 
-  /** Pid-scoped scratch root (the ivf-centroids / IncrementalLensQuery
-    * hygiene) — the shared helper lives in [[graft.core.Fs.pidScratch]]. */
-  private def pidScratch(prefix: String): String =
-    graft.core.Fs.pidScratch(prefix)
+  /** The two-commit fixture of q15 and the queries built on it: commit 1
+    * (overwrite) writes the even doc_ids, commit 2 (merge) the odd ones
+    * plus doc_id % 10 == 0 rewritten as "MODIFIED: <text>". */
+  private def twoCommits(ds: Collection, docs: DataFrame): Unit = {
+    ds.writeEntriesDF(Fixture.entries(docs.filter(col("doc_id") % 2 === 0)),
+      WriteMode.Overwrite)
+    ds.writeEntriesDF(
+      Fixture.entries(docs.filter(col("doc_id") % 2 === 1))
+        .unionByName(Fixture.entries(docs.filter(col("doc_id") % 10 === 0), modified)),
+      WriteMode.Merge)
+  }
+
+  private val modified: String => String = "MODIFIED: " + _
 
   /** `?at=` incremental export (S9/F2, reference
     * export-controller.js:25-41): two real commits into a collection,
@@ -31,30 +40,11 @@ object StoreQueries {
   def atExport(spark: SparkSession, sfDir: String, at: Long = 2,
                buckets: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val sfName = Paths.get(sfDir).getFileName.toString
     val tag = buckets.map(b => s"-b$b").getOrElse("")
-    // pid-scoped (same hazard the pointLookup fix closed): concurrent
-    // processes must not share a store root
-    val root = pidScratch(s"graft-atq-$sfName$tag")
-    val store = new Store(spark, root, buckets)
-    val ds = store.dataset("bench", "docs-at")
-    if (ds.exists) ds.drop()
-    ds.create()
-
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-
-    def entries(df: DataFrame, mod: Boolean): DataFrame =
-      df.as[(Long, String)].map { case (id, text) =>
-        val t = if (mod) s"MODIFIED: $text" else text
-        (id.toString, Cbor.encode(PoObj("text" -> PoStr(t))), false)
-      }.toDF("id", "value", "tombstone")
-
-    ds.writeEntriesDF(entries(docs.filter(col("doc_id") % 2 === 0), mod = false),
-      WriteMode.Overwrite)
-    ds.writeEntriesDF(
-      entries(docs.filter(col("doc_id") % 2 === 1), mod = false)
-        .unionByName(entries(docs.filter(col("doc_id") % 10 === 0), mod = true)),
-      WriteMode.Merge)
+    val store = new Store(spark,
+      Fs.pidScratch(s"graft-atq-${Fixture.sfName(sfDir)}$tag"), buckets)
+    val ds = Fixture.freshDataset(store, "docs-at")
+    twoCommits(ds, Fixture.docs(spark, sfDir))
 
     // the export projection: version >= at ? data : stub (NULL data)
     ds.records.map { r =>
@@ -131,34 +121,16 @@ object StoreQueries {
   def pointLookup(spark: SparkSession, sfDir: String,
                   lookupMod: Long = 101): DataFrame = {
     import spark.implicits._
-    // pid-scoped like the other store queries: a fixed path would let
-    // two concurrent processes corrupt one store root, and dead
-    // processes' dirs would never be reaped
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val root = pidScratch(s"graft-ptq-$sfName")
     // BUCKETED store (VERDICT r16 Next #4): the per-id lookups below are
     // the whole point of this fixture, and on a bucketed store each one
     // prunes to its id's single `bucket=k` dir (1/16 of the snapshot's
     // files) instead of scanning the full snapshot — the shape a point
     // lookup must have at 100 TB. Values/versions are layout-independent,
     // so the oracle contract is unchanged.
-    val store = new Store(spark, root, buckets = Some(16))
-    val ds = store.dataset("bench", "docs-pt")
-    if (ds.exists) ds.drop()
-    ds.create()
-
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-    def entries(df: DataFrame, mod: Boolean): DataFrame =
-      df.as[(Long, String)].map { case (id, text) =>
-        val t = if (mod) s"MODIFIED: $text" else text
-        (id.toString, Cbor.encode(PoObj("text" -> PoStr(t))), false)
-      }.toDF("id", "value", "tombstone")
-    ds.writeEntriesDF(entries(docs.filter(col("doc_id") % 2 === 0), mod = false),
-      WriteMode.Overwrite)
-    ds.writeEntriesDF(
-      entries(docs.filter(col("doc_id") % 2 === 1), mod = false)
-        .unionByName(entries(docs.filter(col("doc_id") % 10 === 0), mod = true)),
-      WriteMode.Merge)
+    val store = Fixture.store(spark, sfDir, "graft-ptq", buckets = Some(16))
+    val ds = Fixture.freshDataset(store, "docs-pt")
+    val docs = Fixture.docs(spark, sfDir)
+    twoCommits(ds, docs)
 
     val ids = docs.select(col("doc_id"))
       .filter(col("doc_id") % lookupMod === 7)
@@ -198,9 +170,7 @@ object StoreQueries {
     // (a fresh temp dir per invocation would leak one per bench rep);
     // keyed by sf so another scale's catalog never leaks into this
     // listing; collection creation below is idempotent on reuse
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val root = pidScratch(s"graft-mvq-$sfName")
-    val store = new Store(spark, root)
+    val store = Fixture.store(spark, sfDir, "graft-mvq")
     val docs = Tables.load(spark, sfDir, "documents")
     val langs = docs.select(col("lang")).distinct().as[String].collect().sorted
     val srcs = docs.select(col("source")).distinct().as[String].collect().sorted
@@ -245,12 +215,8 @@ object StoreQueries {
     // pid-scoped scratch, reaped + reused (see metaVfsListing): the
     // blobs are sha-keyed and deterministic, so re-running writes the
     // SAME files — no growth across bench reps
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val root = pidScratch(s"graft-cidq-$sfName")
-    val store = new Store(spark, root)
-    val ds = store.dataset("bench", "docs-cid")
-    if (ds.exists) ds.drop()
-    ds.create()
+    val store = Fixture.store(spark, sfDir, "graft-cidq")
+    val ds = Fixture.freshDataset(store, "docs-cid")
     val ids = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id").cast("long")).distinct()
       .filter(col("doc_id") % 7 === 0).as[Long].collect().sorted
@@ -291,10 +257,9 @@ object StoreQueries {
     * download path; Export.zip's scaladoc documents the 100 TB
     * alternative — distributed flat-file framings). */
   def zipRoundTrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val store = new Store(spark, pidScratch(s"graft-zipq-$sfName"))
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-    zipFormatRoundTrip(store, "docs-zipsrc", "docs-ziprt", "json", docs)
+    val store = Fixture.store(spark, sfDir, "graft-zipq")
+    zipFormatRoundTrip(store, "docs-zipsrc", "docs-ziprt", "json",
+        Fixture.docs(spark, sfDir))
       .orderBy(col("id").cast("long"))
   }
 
@@ -306,12 +271,8 @@ object StoreQueries {
                                  docs: DataFrame): DataFrame = {
     val spark = store.spark
     import spark.implicits._
-    val src = store.dataset("bench", srcName)
-    if (src.exists) src.drop()
-    src.create()
-    src.writeEntriesDF(docs.as[(Long, String)].map { case (id, t) =>
-        (id.toString, Cbor.encode(PoObj("text" -> PoStr(t))), false)
-      }.toDF("id", "value", "tombstone"), WriteMode.Overwrite)
+    Fixture.freshDataset(store, srcName)
+      .writeEntriesDF(Fixture.entries(docs), WriteMode.Overwrite)
 
     val baos = new java.io.ByteArrayOutputStream()
     Export.zip(store, DataPath("datasets", "bench", srcName), fmt, baos)
@@ -323,9 +284,7 @@ object StoreQueries {
       .map(e => (e.getName, zin.readAllBytes()))
       .toVector
 
-    val dst = store.dataset("bench", dstName)
-    if (dst.exists) dst.drop()
-    dst.create()
+    val dst = Fixture.freshDataset(store, dstName)
     Import.files(dst, uploads, WriteMode.Overwrite)
     dst.records.map { r =>
       val text = Cbor.decode(r.value).asInstanceOf[PoObj].fields("text") match {
@@ -346,23 +305,14 @@ object StoreQueries {
   def recordFilteredLens(spark: SparkSession, sfDir: String,
                          recordId: String = "17"): DataFrame = {
     import spark.implicits._
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val root = pidScratch(s"graft-f1q-$sfName")
-    val store = new Store(spark, root)
-    val ds = store.dataset("bench", "docs-f1")
-    if (ds.exists) ds.drop()
-    ds.create()
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-    ds.writeEntriesDF(docs.as[(Long, String)].map { case (id, t) =>
-        (id.toString, Cbor.encode(PoObj("text" -> PoStr(t))), false)
-      }.toDF("id", "value", "tombstone"), WriteMode.Overwrite)
+    val store = Fixture.store(spark, sfDir, "graft-f1q")
+    Fixture.freshDataset(store, "docs-f1")
+      .writeEntriesDF(Fixture.entries(Fixture.docs(spark, sfDir)), WriteMode.Overwrite)
 
     val acc = spark.sparkContext.longAccumulator("graft.q136.mapCalls")
-    val lens = new graft.lens.Lens(store, "bench", "token-index-f1",
+    val lens = Fixture.freshLens(store, "token-index-f1",
       Seq(DataPath("datasets", "bench", "docs-f1", recordID = Some(recordId))),
       new IncrementalLensQuery.CountingTokenFn(acc))
-    if (lens.output.exists) lens.output.drop()
-    lens.create()
     lens.build()
     val nMapCalls = acc.value
     lens.output.records.map { r =>
@@ -393,25 +343,10 @@ object StoreQueries {
     * whole lifecycle relationally. */
   def tombstoneExport(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val root = pidScratch(s"graft-tombq-$sfName")
-    val store = new Store(spark, root)
-    val ds = store.dataset("bench", "docs-tomb")
-    if (ds.exists) ds.drop()
-    ds.create()
-
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-    def entries(df: DataFrame, mod: Boolean): DataFrame =
-      df.as[(Long, String)].map { case (id, text) =>
-        val t = if (mod) s"MODIFIED: $text" else text
-        (id.toString, Cbor.encode(PoObj("text" -> PoStr(t))), false)
-      }.toDF("id", "value", "tombstone")
-    ds.writeEntriesDF(entries(docs.filter(col("doc_id") % 2 === 0), mod = false),
-      WriteMode.Overwrite)
-    ds.writeEntriesDF(
-      entries(docs.filter(col("doc_id") % 2 === 1), mod = false)
-        .unionByName(entries(docs.filter(col("doc_id") % 10 === 0), mod = true)),
-      WriteMode.Merge)
+    val store = Fixture.store(spark, sfDir, "graft-tombq")
+    val ds = Fixture.freshDataset(store, "docs-tomb")
+    val docs = Fixture.docs(spark, sfDir)
+    twoCommits(ds, docs)
 
     // commit 3: tombstones only — value bytes are empty, the flag does
     // the deleting (the DF form of the reference's undefined-as-value)
@@ -424,8 +359,7 @@ object StoreQueries {
 
     // commit 4: re-insert half of the deleted ids with their ORIGINAL
     // text — the gate has no old hash for them, so they stamp v4
-    ds.writeEntriesDF(
-      entries(docs.filter(col("doc_id") % 18 === 4), mod = false),
+    ds.writeEntriesDF(Fixture.entries(docs.filter(col("doc_id") % 18 === 4)),
       WriteMode.Merge)
 
     val collVersion = ds.meta.version
@@ -461,29 +395,19 @@ object StoreQueries {
     * every row, so an over- or under-bumped meta breaks the hash. */
   def overwriteExport(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val root = pidScratch(s"graft-ovwq-$sfName")
-    val store = new Store(spark, root)
-    val ds = store.dataset("bench", "docs-ovw")
-    if (ds.exists) ds.drop()
-    ds.create()
+    val store = Fixture.store(spark, sfDir, "graft-ovwq")
+    val ds = Fixture.freshDataset(store, "docs-ovw")
+    val docs = Fixture.docs(spark, sfDir)
 
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-    def entries(df: DataFrame, mod: Boolean): DataFrame =
-      df.as[(Long, String)].map { case (id, text) =>
-        val t = if (mod) s"MODIFIED: $text" else text
-        (id.toString, Cbor.encode(PoObj("text" -> PoStr(t))), false)
-      }.toDF("id", "value", "tombstone")
-
-    ds.writeEntriesDF(entries(docs, mod = false), WriteMode.Overwrite)
+    ds.writeEntriesDF(Fixture.entries(docs), WriteMode.Overwrite)
     val keep = docs.filter(col("doc_id") % 3 =!= 1)
     def commit2Shape(d: DataFrame): DataFrame =
-      entries(d.filter(col("doc_id") % 10 =!= 0), mod = false)
-        .unionByName(entries(d.filter(col("doc_id") % 10 === 0), mod = true))
+      Fixture.entries(d.filter(col("doc_id") % 10 =!= 0))
+        .unionByName(Fixture.entries(d.filter(col("doc_id") % 10 === 0), modified))
     ds.writeEntriesDF(commit2Shape(keep), WriteMode.Overwrite)
     ds.writeEntriesDF(
       commit2Shape(keep)
-        .unionByName(entries(docs.filter(col("doc_id") % 3 === 1), mod = false)),
+        .unionByName(Fixture.entries(docs.filter(col("doc_id") % 3 === 1))),
       WriteMode.Overwrite)
 
     val collVersion = ds.meta.version
@@ -512,26 +436,19 @@ object StoreQueries {
     * the deterministic content of the feed. */
   def changeFeedView(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val root = pidScratch(s"graft-cfq-$sfName")
+    val store = Fixture.store(spark, sfDir, "graft-cfq")
     // fresh LOG per invocation: the batch view is "all commits so
     // far", so a reused scratch store must not leak a previous run's
     // events into this one
-    graft.core.Fs.rmTree(Paths.get(root, "_commits"))
-    val store = new Store(spark, root)
+    Fs.rmTree(Paths.get(store.root, "_commits"))
     val log = new graft.streaming.CommitLog(store).install()
-    val ds = store.dataset("bench", "docs-cf")
-    if (ds.exists) ds.drop()
-    ds.create()
+    val ds = Fixture.freshDataset(store, "docs-cf")
     val docs = Tables.load(spark, sfDir, "documents")
       .select("doc_id", "lang", "text")
     val langs = docs.select(col("lang")).distinct().as[String].collect().sorted
     langs.foreach { l =>
       ds.writeEntriesDF(
-        docs.filter(col("lang") === l).as[(Long, String, String)]
-          .map { case (id, _, t) =>
-            (id.toString, Cbor.encode(PoObj("text" -> PoStr(t))), false)
-          }.toDF("id", "value", "tombstone"),
+        Fixture.entries(docs.filter(col("lang") === l).select("doc_id", "text")),
         WriteMode.Merge)
     }
     log.compact(minFiles = 2)
@@ -551,17 +468,9 @@ object StoreQueries {
     * the hash, pinning the run-once deletion semantics. */
   def ephemeralLens(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val root = pidScratch(s"graft-ephq-$sfName")
-    val store = new Store(spark, root)
-    val ds = store.dataset("bench", "docs-eph")
-    if (ds.exists) ds.drop()
-    ds.create()
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-      .repartition(spark.sparkContext.defaultParallelism)
-    ds.writeEntriesDF(docs.as[(Long, String)].map { case (id, t) =>
-        (id.toString, Cbor.encode(PoObj("text" -> PoStr(t))), false)
-      }.toDF("id", "value", "tombstone"), WriteMode.Overwrite)
+    val store = Fixture.store(spark, sfDir, "graft-ephq")
+    Fixture.freshDataset(store, "docs-eph").writeEntriesDF(
+      Fixture.entries(Parallelism.spread(Fixture.docs(spark, sfDir))), WriteMode.Overwrite)
 
     // a crashed previous rep can leave the fixed-suffix throwaway
     // behind; the ephemeral contract requires a fresh name
@@ -598,27 +507,16 @@ object StoreQueries {
     * LIST entries — dedup is the LENS input rule, not readPath's). */
   def readPathUnion(spark: SparkSession, sfDir: String,
                     recordId: String = "42"): DataFrame = {
-    import spark.implicits._
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val root = pidScratch(s"graft-rpq-$sfName")
-    val store = new Store(spark, root)
-    val ds = store.dataset("bench", "docs-rp")
-    if (ds.exists) ds.drop()
-    ds.create()
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-      .filter(col("doc_id") % 3 === 0)
-      .repartition(spark.sparkContext.defaultParallelism)
-    ds.writeEntriesDF(docs.as[(Long, String)].map { case (id, t) =>
-        (id.toString, Cbor.encode(PoObj("text" -> PoStr(t))), false)
-      }.toDF("id", "value", "tombstone"), WriteMode.Overwrite)
+    val store = Fixture.store(spark, sfDir, "graft-rpq")
+    Fixture.freshDataset(store, "docs-rp").writeEntriesDF(
+      Fixture.entries(Parallelism.spread(
+        Fixture.docs(spark, sfDir).filter(col("doc_id") % 3 === 0))),
+      WriteMode.Overwrite)
 
-    val lens = new graft.lens.Lens(store, "bench", "rp-lens",
-      Seq(DataPath("datasets", "bench", "docs-rp")),
+    Fixture.freshLens(store, "rp-lens", Seq(DataPath("datasets", "bench", "docs-rp")),
       new IncrementalLensQuery.CountingTokenFn(
         spark.sparkContext.longAccumulator("graft.q145.mapCalls")))
-    if (lens.output.exists) lens.output.drop()
-    lens.create()
-    lens.build()
+      .build()
 
     ReadPath.read(store, Seq(
         DataPath("datasets", "bench", "docs-rp"),
@@ -651,12 +549,8 @@ object StoreQueries {
   def rawServing(spark: SparkSession, sfDir: String,
                  mod: Long = 101, limit: Int = 12): DataFrame = {
     import spark.implicits._
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val root = pidScratch(s"graft-rawq-$sfName")
-    val store = new Store(spark, root, buckets = Some(8))
-    val ds = store.dataset("bench", "docs-raw")
-    if (ds.exists) ds.drop()
-    ds.create()
+    val store = Fixture.store(spark, sfDir, "graft-rawq", buckets = Some(8))
+    Fixture.freshDataset(store, "docs-raw")
     val docs = Tables.load(spark, sfDir, "documents")
       .filter(col("doc_id") % mod === 7)
       .select(col("doc_id").cast("long"), col("text"))
@@ -716,9 +610,8 @@ object StoreQueries {
     * REAL data (not just the codec spec corpus) breaks the hash.
     * JSON is q135's; this closes the remaining write+read codecs. */
   def codecMatrix(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val store = new Store(spark, pidScratch(s"graft-cmq-$sfName"))
-    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
+    val store = Fixture.store(spark, sfDir, "graft-cmq")
+    val docs = Fixture.docs(spark, sfDir)
     val parts = Seq("yaml", "cbor", "msgpack", "xml").zipWithIndex
       .map { case (fmt, k) =>
         zipFormatRoundTrip(store, s"docs-cm-$fmt", s"docs-cmrt-$fmt", fmt,
@@ -744,17 +637,12 @@ object StoreQueries {
     * corpus's lang values. */
   def dropCollections(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val root = pidScratch(s"graft-dropq-$sfName")
-    val store = new Store(spark, root)
+    val store = Fixture.store(spark, sfDir, "graft-dropq")
     val langs = Tables.load(spark, sfDir, "documents")
       .select(col("lang")).distinct().as[String].collect().sorted
     langs.foreach { l =>
-      val c = store.dataset("bench", s"docs-dr-$l")
-      if (c.exists) c.drop() // reused scratch: previous run's state
-      c.create()
       // a real committed record, so drop removes DATA, not just meta
-      c.writeEntriesDF(
+      Fixture.freshDataset(store, s"docs-dr-$l").writeEntriesDF(
         spark.createDataset(Seq((l, Cbor.encode(PoStr(s"doc of $l")), false)))
           .toDF("id", "value", "tombstone"), WriteMode.Overwrite)
     }

@@ -112,7 +112,15 @@ final class AttachmentStore(store: Store) {
     * full inventory (billions of blobs at 100 TB) never sits in driver
     * memory. Shared-filesystem semantics — the same premise snapshots
     * already rely on. */
-  def inventoryDF: org.apache.spark.sql.DataFrame = {
+  def inventoryDF: org.apache.spark.sql.DataFrame = inventory(tmpCutoffMs = None)
+
+  /** [[inventoryDF]]; with `tmpCutoffMs` each prefix listing also
+    * deletes the `*.tmp` files last modified at or before it: what a
+    * write that died before its rename left behind. Only for gc(), which
+    * holds the gate's write side, so no write() of this store is between
+    * its tmp write and its rename; the cutoff (gc's grace window) spares
+    * another process's upload in flight. */
+  private def inventory(tmpCutoffMs: Option[Long]): org.apache.spark.sql.DataFrame = {
     val spark = store.spark
     import spark.implicits._
     val rootStr = root.toString
@@ -124,9 +132,14 @@ final class AttachmentStore(store: Store) {
         .repartition(math.max(1, math.min(prefixes.size, 64)))
         .flatMap { pre =>
           val d = Paths.get(rootStr, pre)
-          graft.core.Fs.list(d).iterator.map(_.getFileName.toString)
-            .filter(h => h.length == 64 && h.forall(c => "0123456789abcdef".contains(c)))
-            .toSeq
+          val names = graft.core.Fs.list(d).map(_.getFileName.toString)
+          for (cutoff <- tmpCutoffMs; n <- names if n.endsWith(".tmp")) {
+            val f = d.resolve(n)
+            try {
+              if (Files.getLastModifiedTime(f).toMillis <= cutoff) Files.deleteIfExists(f)
+            } catch { case _: java.nio.file.NoSuchFileException => () }
+          }
+          names.filter(h => h.length == 64 && h.forall(c => "0123456789abcdef".contains(c)))
         }.toDF("h")
     }
   }
@@ -142,7 +155,9 @@ final class AttachmentStore(store: Store) {
     * Safety: takes the store's gc gate write lock (no commit is mid-
     * flight between link validation and manifest swap) and skips blobs
     * written within `graceMs` (the hold window — uploaded but possibly
-    * not yet linked by a commit). */
+    * not yet linked by a commit). Its inventory pass also deletes the
+    * tmp files, older than `graceMs`, of writes that died before their
+    * rename. */
   def gc(graceMs: Long = AttachmentStore.DefaultGraceMs): Long = {
     val spark = store.spark
     import spark.implicits._
@@ -164,7 +179,7 @@ final class AttachmentStore(store: Store) {
         else collections.map(_.toDF.select(explode(col("links")).as("l")))
           .reduce(_ unionByName _)
           .select(regexp_extract(col("l"), "hash://sha256/([a-f0-9]{64})", 1).as("h"))
-      val inv0 = inventoryDF
+      val inv0 = inventory(tmpCutoffMs = Some(now - graceMs))
       // the held set is bounded by write rate × grace window, but that
       // can still be large on a busy cluster: a literal In-expression
       // with many thousands of entries bloats the plan (and codegen), so

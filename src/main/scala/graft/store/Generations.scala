@@ -26,13 +26,13 @@ import graft.core.Fs
   * file. Readers go through the manifest, which still names the last
   * good generation, so neither is ever read; the next write of N
   * replaces the orphan wholesale (`mode("overwrite")`) and its publish
-  * prunes what is left. A death inside the prune leaves a half-deleted
-  * generation the manifest no longer names — equally invisible, and
-  * pruned by the next publish. A death after the rename loses nothing
-  * of the data; a collection then only misses its change-feed event,
-  * which a LensMaintainer heals at its next start or at the input's
-  * next commit. StoreSpec ("crash mid-commit"), RecoverySpec and
-  * LensCrashSpec pin these states. */
+  * deletes the tmp file and prunes what is left. A death inside the
+  * prune leaves a half-deleted generation the manifest no longer names —
+  * equally invisible, and pruned by the next publish. A death after the
+  * rename loses nothing of the data; a collection then only misses its
+  * change-feed event, which a LensMaintainer heals at its next start or
+  * at the input's next commit. StoreSpec ("crash mid-commit"),
+  * RecoverySpec and LensCrashSpec pin these states. */
 private[graft] final class Generations(dir: Path, prefix: String, keep: Int) {
 
   def dirOf(n: Long): Path = dir.resolve(s"$prefix$n")
@@ -65,9 +65,17 @@ private[graft] final class Generations(dir: Path, prefix: String, keep: Int) {
 
   /** Steps 2 and 3: make generation `live` the one `manifest` (whose
     * bytes are `json`) names, then prune every other generation but the
-    * `keep - 1` before it. */
+    * `keep - 1` before it, and the manifest tmp files a crash left
+    * between a tmp write and its rename. Under the writer lock no other
+    * writer of `manifest` can be mid-write. */
   def publish(manifest: Path, json: Array[Byte], live: Long): Unit = {
     Generations.atomicWrite(manifest, json)
+    // unhidden tmp names are what earlier versions of atomicWrite left
+    val tmpPrefix = s"${manifest.getFileName}."
+    Fs.list(manifest.getParent).filter { p =>
+      val n = p.getFileName.toString
+      n.stripPrefix(".").startsWith(tmpPrefix) && n.endsWith(".tmp")
+    }.foreach(Files.deleteIfExists)
     list.filter(g => g > live || g <= live - keep).foreach(g => Fs.rmTree(dirOf(g)))
   }
 
@@ -118,10 +126,12 @@ private[graft] object Generations {
   /** Replace file `p` with `bytes` atomically: write a tmp file of a
     * name unique to this call, then rename it over `p`. Concurrent
     * writers of one `p` each rename their own tmp file; readers see the
-    * old or a new content, never a torn one. */
+    * old or a new content, never a torn one. The tmp file is hidden
+    * (`.<name>.<uuid>.tmp`), so a directory read by name prefix or by
+    * Spark's file sources never lists it. */
   def atomicWrite(p: Path, bytes: Array[Byte]): Unit = {
     Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(s"${p.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    val tmp = p.resolveSibling(s".${p.getFileName}.${java.util.UUID.randomUUID()}.tmp")
     try {
       Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
       Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)

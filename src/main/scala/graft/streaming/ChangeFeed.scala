@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.store.{DataPath, Store}
+import graft.store.{DataPath, Generations, Store}
 
 /** Durable change feed — the commit log behind S12 (reference:
   * library/utility/update-events.js:7-14 is an in-process event bus; a
@@ -224,6 +224,9 @@ final class CommitLog(store: Store, tailCapacity: Int = CommitLog.DefaultTailCap
     * next compact() deletes already-covered commit files instead of
     * re-rolling them, and both the scan path and [[batch]] dedup.
     * Synchronized with [[append]], so compaction never races a write.
+    * Two instances (or processes) compacting at once each write the
+    * segment through their own tmp file; one that finds a candidate
+    * already rolled by the other backs off and returns 0.
     *
     * Structured-streaming note: a NEW segment file re-presents old
     * events to a file-source query that already consumed the per-commit
@@ -259,23 +262,28 @@ final class CommitLog(store: Store, tailCapacity: Int = CommitLog.DefaultTailCap
     if (fileCands.size + segCands.size < minFiles ||
         fileCands.isEmpty && segCands.size < 2) return 0
     val events: Seq[((Long, Long), String)] =
-      (fileCands.map { case (c, p) =>
-        (c, new String(Files.readAllBytes(p), UTF_8).trim)
-      } ++ segCands.flatMap { case (_, p) =>
-        new String(Files.readAllBytes(p), UTF_8).split("\n").iterator
-          .filter(_.nonEmpty).map(l => (CommitLog.lineCursor(l), l))
-      }).sortBy(_._1).distinctBy(_._1)
+      try {
+        (fileCands.map { case (c, p) =>
+          (c, new String(Files.readAllBytes(p), UTF_8).trim)
+        } ++ segCands.flatMap { case (_, p) =>
+          new String(Files.readAllBytes(p), UTF_8).split("\n").iterator
+            .filter(_.nonEmpty).map(l => (CommitLog.lineCursor(l), l))
+        }).sortBy(_._1).distinctBy(_._1)
+      } catch {
+        // another instance or process rolled a candidate after the
+        // listing: its segment holds those events
+        case _: java.nio.file.NoSuchFileException => return 0
+      }
     val (firstC, lastC) = (events.head._1, events.last._1)
-    val tmp = dir.resolve(s".tmp-segment-${lastC._1}-${lastC._2}")
-    Files.write(tmp, (events.map(_._2).mkString("\n") + "\n").getBytes(UTF_8))
     val target = dir.resolve(
       f"segment-${firstC._1}%013d-${firstC._2}%012d-${lastC._1}%013d-${lastC._2}%012d.json")
-    // REPLACE_EXISTING: the merged range can collide with an existing
-    // segment's name (crash recovery re-merging segment[1..k] with a
-    // same-range leftover) — replacing it with the identical merged
-    // content is correct; without the flag some filesystems throw
-    Files.move(tmp, target,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    // through a tmp file unique to this call: another instance or
+    // process compacting the same range writes its own. The merged range
+    // can equal an existing segment's (crash recovery re-merging
+    // segment[1..k] with a same-range leftover): replacing it with the
+    // identical merged content is correct
+    Generations.atomicWrite(target,
+      (events.map(_._2).mkString("\n") + "\n").getBytes(UTF_8))
     // never delete the file just written: a candidate segment whose
     // range equals the merged range IS `target` after the move, and
     // deleting it here would destroy the only copy of the rolled events

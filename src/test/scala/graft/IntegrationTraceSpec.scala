@@ -2,7 +2,6 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,7 +19,7 @@ class IntegrationTraceSpec extends AnyFunSuite {
 
   test("write a record over HTTP and watch the lens cascade refresh the view") {
     val store = new Store(SparkTestBase.spark,
-      Files.createTempDirectory("graft-trace").toString)
+      SparkTestBase.tempDir("graft-trace").toString)
     store.dataset("alice", "docs").create()
     val hub = new LensHub(store)
     hub.register(new Lens(store, "alice", "tag-index",
@@ -69,7 +68,7 @@ class IntegrationTraceSpec extends AnyFunSuite {
 
   test("a lens input may target a single record (F1 path filter)") {
     val store = new Store(SparkTestBase.spark,
-      Files.createTempDirectory("graft-f1").toString)
+      SparkTestBase.tempDir("graft-f1").toString)
     val d = store.dataset("a", "src").create()
     d.write("keep", PoObj("tags" -> PoArr(Vector(PoStr("x")))))
     d.write("skip", PoObj("tags" -> PoArr(Vector(PoStr("y")))))

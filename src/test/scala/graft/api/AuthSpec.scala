@@ -2,7 +2,6 @@ package graft.api
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
 import java.util.Base64
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +16,7 @@ import graft.store.Store
   * guards wired through server.js:54 and the controllers). */
 class AuthSpec extends AnyFunSuite {
 
-  private def freshAuth(): Auth = new Auth(Files.createTempDirectory("graft-auth"))
+  private def freshAuth(): Auth = new Auth(SparkTestBase.tempDir("graft-auth"))
 
   // ---- model ----
 
@@ -89,7 +88,7 @@ class AuthSpec extends AnyFunSuite {
 
   private def withAuthedApi(f: (String, HttpClient, Auth) => Unit): Unit = {
     val store = new Store(SparkTestBase.spark,
-      Files.createTempDirectory("graft-http-auth").toString)
+      SparkTestBase.tempDir("graft-http-auth").toString)
     store.dataset("alice", "d1").create()
     val auth = freshAuth()
     auth.register("alice", "alice-pass-1")
@@ -226,7 +225,7 @@ class AuthSpec extends AnyFunSuite {
     // "legacy" but no account does — an open register of that name
     // would hand a stranger write/delete over the orphaned data
     val store = new Store(SparkTestBase.spark,
-      Files.createTempDirectory("graft-http-orphan").toString)
+      SparkTestBase.tempDir("graft-http-orphan").toString)
     store.dataset("legacy", "d1").create()
     val api = new HttpApi(store, authOpt = Some(freshAuth())).start()
     try {

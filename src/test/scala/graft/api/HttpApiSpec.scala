@@ -2,7 +2,6 @@ package graft.api
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,7 +21,7 @@ class HttpApiSpec extends AnyFunSuite {
   private def withApi(lensTimeoutMs: Long = graft.lens.MapRunner.DefaultTimeoutMs)
                      (f: (String, HttpClient) => Unit): Unit = {
     val store = new Store(SparkTestBase.spark,
-      Files.createTempDirectory("graft-http").toString)
+      SparkTestBase.tempDir("graft-http").toString)
     store.dataset("alice", "d1").create()
     val api = new HttpApi(store, lensTimeoutMs = lensTimeoutMs).start()
     try f(s"http://127.0.0.1:${api.boundPort}", HttpClient.newHttpClient())
@@ -303,7 +302,7 @@ class HttpApiSpec extends AnyFunSuite {
 
   test("attachment serving + meta with derived linkers") {
     val store = new Store(SparkTestBase.spark,
-      Files.createTempDirectory("graft-http2").toString)
+      SparkTestBase.tempDir("graft-http2").toString)
     store.dataset("alice", "d1").create()
     val api = new HttpApi(store).start()
     try {
@@ -341,7 +340,7 @@ class HttpApiSpec extends AnyFunSuite {
 
   test("lens configuration and logs are readable over HTTP") {
     val store = new Store(SparkTestBase.spark,
-      Files.createTempDirectory("graft-http3").toString)
+      SparkTestBase.tempDir("graft-http3").toString)
     val d = store.dataset("alice", "base").create()
     d.write("r1", PoObj("tags" -> PoArr(Vector(PoStr("t1")))))
     val lens = new graft.lens.Lens(store, "alice", "idx",

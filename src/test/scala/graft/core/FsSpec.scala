@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkTestBase
+
 /** Pid-scoped scratch hygiene: [[Fs.reapStalePidDirs]] must reap
   * `<prefix><pid>` AND the sf-scoped `<prefix><pid>-<tag>` shape
   * (ADVICE r15: q18/q163 oracle scratch appends the sf dir name after
@@ -13,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class FsSpec extends AnyFunSuite {
 
   test("reapStalePidDirs: bare and sf-tagged stale dirs reaped, live/self/foreign kept") {
-    val parent = Files.createTempDirectory("graft-fs-reap")
+    val parent = SparkTestBase.tempDir("graft-fs-reap")
     val self = ProcessHandle.current().pid()
     // a pid that is certainly dead: walk down from an unlikely-high id
     val dead = Iterator.iterate(4194000L)(_ - 1)
@@ -38,7 +40,7 @@ class FsSpec extends AnyFunSuite {
   }
 
   test("linkOrCopyDirs: parallel bucket carry links every pair, same inodes (r18)") {
-    val root = Files.createTempDirectory("graft-fs-carry")
+    val root = SparkTestBase.tempDir("graft-fs-carry")
     val from = Files.createDirectory(root.resolve("from"))
     val to = Files.createDirectory(root.resolve("to"))
     val pairs = (0 until 64).map { k =>

@@ -55,7 +55,7 @@ object SlowCountingTagFn extends MapFn {
 class IncrementalLensSpec extends AnyFunSuite {
 
   private def freshStore(): Store =
-    new Store(SparkTestBase.spark, Files.createTempDirectory("graft-inc").toString)
+    new Store(SparkTestBase.spark, SparkTestBase.tempDir("graft-inc").toString)
 
   private def doc(tags: String*): PoValue =
     PoObj("tags" -> PoArr(tags.map(PoStr.apply).toVector))
@@ -417,7 +417,7 @@ class IncrementalLensSpec extends AnyFunSuite {
     // publish — its freshness gate then sees every input current and
     // no-ops. Unserialized, both would overwrite the same next cache
     // generation dir mid-job. Each record maps exactly once, ever.
-    val root = Files.createTempDirectory("graft-inc-xproc").toString
+    val root = SparkTestBase.tempDir("graft-inc-xproc").toString
     val s1 = new Store(SparkTestBase.spark, root)
     val s2 = new Store(SparkTestBase.spark, root)
     val ds = s1.dataset("alice", "docs").create()

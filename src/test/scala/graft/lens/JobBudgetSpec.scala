@@ -1,10 +1,9 @@
 package graft.lens
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.SparkTestBase.jobsOf
 import graft.core._
 import graft.store.{DataPath, Store}
 
@@ -18,27 +17,10 @@ class JobBudgetSpec extends AnyFunSuite {
   private val spark = SparkTestBase.spark
 
   private def freshStore(buckets: Option[Int] = None): Store =
-    new Store(spark, Files.createTempDirectory("graft-jobs").toString, buckets)
+    new Store(spark, SparkTestBase.tempDir("graft-jobs").toString, buckets)
 
   private def doc(tags: String*): PoValue =
     PoObj("tags" -> PoArr(tags.map(PoStr.apply).toVector))
-
-  /** Runs `body` and returns its result with the names of the Spark jobs
-    * it scheduled (listener bus flushed on both sides). */
-  private def jobsOf[A](body: => A): (A, Seq[String]) = {
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        names.add(j.stageInfos.map(_.name).distinct.mkString(" | "))
-    }
-    org.apache.spark.GraftSparkShim.flushListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.GraftSparkShim.flushListenerBus(spark.sparkContext)
-      (r, names.toArray(Array.empty[String]).toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   private def tagLens(store: Store): Lens = {
     val d = store.dataset("a", "docs").create()

@@ -61,7 +61,7 @@ class LensCrashSpec extends AnyFunSuite {
     * store's commit listener throw on `inc`'s output commits. */
   private def fixture(pbuckets: Int) = {
     spark.conf.set("graft.lens.cachePartitions", pbuckets.toString)
-    val store = new Store(spark, Files.createTempDirectory("graft-lens-crash").toString)
+    val store = new Store(spark, SparkTestBase.tempDir("graft-lens-crash").toString)
     val ds = store.dataset("a", "docs").create()
     ds.writeEntries((1 to 20).map(i =>
       graft.store.WriteEntry(s"r$i", Some(doc(s"t${i % 5}", s"t${i % 3}")))),
@@ -161,6 +161,8 @@ class LensCrashSpec extends AnyFunSuite {
           assert(logLines(inc) == logLines(full), s"$what: logs are the new build's")
           assert(generations(inc) == Set(s"g${liveCache(inc)._1.version}"),
             s"$what: only the live generation is left")
+          assert(!Fs.list(inc.cacheDir).exists(_.getFileName.toString.endsWith(".tmp")),
+            s"$what: no manifest tmp file is left")
         }
       } finally spark.conf.unset("graft.lens.cachePartitions")
     }

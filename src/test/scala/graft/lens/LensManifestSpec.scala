@@ -17,7 +17,7 @@ class LensManifestSpec extends AnyFunSuite {
   private val spark = SparkTestBase.spark
 
   test("manifest keys with a quote, a backslash and non-ASCII characters round-trip") {
-    val dir = Files.createTempDirectory("graft-manifest")
+    val dir = SparkTestBase.tempDir("graft-manifest")
     val m = CacheManifest(7, 4, Map("/datasets/a:q\"u\\o\"te" -> 3L,
       "/datasets/ü:naïve→名" -> 12L, "/lenses/a:\\\"" -> 0L))
     m.publish(dir)
@@ -34,7 +34,7 @@ class LensManifestSpec extends AnyFunSuite {
     test(s"a truncated manifest builds through the gate and stays correct ($pbuckets pbuckets)") {
       spark.conf.set("graft.lens.cachePartitions", pbuckets.toString)
       try {
-        val store = new Store(spark, Files.createTempDirectory("graft-manifest-torn").toString)
+        val store = new Store(spark, SparkTestBase.tempDir("graft-manifest-torn").toString)
         val ds = store.dataset("a", "docs").create()
         (1 to 20).foreach(i => ds.write(s"r$i", doc(s"t${i % 5}", s"t${i % 3}")))
         val in = Seq(DataPath("datasets", "a", "docs"))
@@ -80,7 +80,7 @@ class LensManifestSpec extends AnyFunSuite {
     test(s"an unreadable manifest gives a correct full build ($pbuckets pbuckets)") {
       spark.conf.set("graft.lens.cachePartitions", pbuckets.toString)
       try {
-        val store = new Store(spark, Files.createTempDirectory("graft-manifest-bad").toString)
+        val store = new Store(spark, SparkTestBase.tempDir("graft-manifest-bad").toString)
         val ds = store.dataset("a", "docs").create()
         (1 to 20).foreach(i => ds.write(s"r$i", doc(s"t${i % 5}", s"t${i % 3}")))
         val in = Seq(DataPath("datasets", "a", "docs"))

@@ -1,7 +1,5 @@
 package graft.lens
 
-import java.nio.file.Files
-
 import scala.util.Random
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -146,7 +144,7 @@ class LensRegimeSpec extends AnyFunSuite {
       withCachePartitions(cfg.pbuckets) {
         val rnd = new Random(7919L * (ci + 1))
         val store = new Store(spark,
-          Files.createTempDirectory("graft-regime").toString, cfg.buckets)
+          SparkTestBase.tempDir("graft-regime").toString, cfg.buckets)
         val names = (1 to cfg.inputs).map(i => s"in$i")
         val live = names.map(n => n -> scala.collection.mutable.Map[String, PoValue]()).toMap
         var counter = 0
@@ -225,7 +223,7 @@ class LensRegimeSpec extends AnyFunSuite {
   }
 
   test("a hot id past the driver reduce bound reduces as a Spark stage and equals a full rebuild") {
-    val store = new Store(spark, Files.createTempDirectory("graft-regime-hot").toString)
+    val store = new Store(spark, SparkTestBase.tempDir("graft-regime-hot").toString)
     val ds = store.dataset("a", "hot").create()
     // every record feeds t:cat and n:cat: their retained contributions
     // grow with the collection
@@ -259,7 +257,7 @@ class LensRegimeSpec extends AnyFunSuite {
   }
 
   test("a delta one past Store.MaxCommitInList takes the Spark regime and equals a full rebuild") {
-    val store = new Store(spark, Files.createTempDirectory("graft-regime-cap").toString)
+    val store = new Store(spark, SparkTestBase.tempDir("graft-regime-cap").toString)
     val ds = store.dataset("a", "big").create()
     val rnd = new Random(104729L)
     ds.writeEntries((1 to 40).map(i => WriteEntry(s"r$i", Some(randomDoc(rnd)))), WriteMode.Merge)

@@ -34,7 +34,7 @@ object TagIndexFn extends MapFn {
 class LensSpec extends AnyFunSuite {
 
   private def freshStore(): Store =
-    new Store(SparkTestBase.spark, Files.createTempDirectory("graft-lens").toString)
+    new Store(SparkTestBase.spark, SparkTestBase.tempDir("graft-lens").toString)
 
   private def tagDataset(store: Store, extra: Map[String, (String, String)] = Map.empty): Unit = {
     val d = store.dataset("system", "test-dataset").create()

@@ -726,8 +726,7 @@ class OpsSpec extends AnyFunSuite {
     val pairs = Seq.fill(60)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
       .filter { case (a, b) => a != b }.toDF("a_id", "b_id")
     val local = Dedup.dupClusters(pairs).as[(Long, Long)].collect().toMap
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft-ckpt-").toString
+    val ckptDir = SparkTestBase.tempDir("graft-ckpt-").toString
     try {
       val reliable = Dedup.dupClusters(pairs, checkpointDir = Some(ckptDir))
         .as[(Long, Long)].collect().toMap

@@ -1,7 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -11,7 +9,7 @@ import graft.core._
 class AttachmentsSpec extends AnyFunSuite {
 
   private def freshStore(): Store =
-    new Store(SparkTestBase.spark, Files.createTempDirectory("graft-att").toString)
+    new Store(SparkTestBase.spark, SparkTestBase.tempDir("graft-att").toString)
 
   test("blob store: write/has/read, idempotent, content-addressed") {
     val s = freshStore()
@@ -36,6 +34,23 @@ class AttachmentsSpec extends AnyFunSuite {
     assert(deleted == 1)
     assert(s.attachments.has(live))
     assert(!s.attachments.has(dead))
+  }
+
+  test("GC deletes the tmp file a write left when it died before its rename") {
+    val s = freshStore()
+    val live = s.attachments.write("live blob".getBytes)
+    s.dataset("a", "gc-tmp").create()
+      .write("r1", PoObj("file" -> PoStr(s.attachments.url(live, "text/plain"))))
+    val dead = s.attachments.sha256hex("upload that died".getBytes)
+    val prefixDir = java.nio.file.Paths.get(s.root, "attachments", dead.substring(0, 2))
+    java.nio.file.Files.createDirectories(prefixDir)
+    val tmp = prefixDir.resolve(s"$dead.${java.util.UUID.randomUUID()}.tmp")
+    java.nio.file.Files.write(tmp, "upload that d".getBytes)
+    // a tmp file is no blob: gc counts the blobs it deletes
+    assert(s.attachments.gc(graceMs = 0) == 0)
+    assert(!java.nio.file.Files.exists(tmp), "the stray tmp file is deleted")
+    assert(s.attachments.has(live), "the linked blob is kept")
+    assert(s.attachments.list() == Seq(live))
   }
 
   test("GC hold window: a just-written unlinked blob survives until the grace expires") {

@@ -15,7 +15,7 @@ class BucketedStoreSpec extends AnyFunSuite {
 
   private def freshStore(b: Int = 8): Store =
     new Store(SparkTestBase.spark,
-      Files.createTempDirectory("graft-bucket").toString, buckets = Some(b))
+      SparkTestBase.tempDir("graft-bucket").toString, buckets = Some(b))
 
   test("semantics match the default layout: versions, hash gate, tombstones, listing") {
     val c = freshStore().dataset("a", "b1").create()

@@ -1,7 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -36,7 +34,7 @@ class CommitFormsSpec extends AnyFunSuite {
   }
 
   test("a bucketed store rewrites a snapshot without bucket dirs whole, losing no row") {
-    val root = Files.createTempDirectory("graft-forms-layout").toString
+    val root = SparkTestBase.tempDir("graft-forms-layout").toString
     val plain = new Store(spark, root).dataset("a", "d").create()
     plain.writeEntries((1 to 20).map(i => WriteEntry(s"r$i", Some(PoInt(i.toLong)))), WriteMode.Merge)
     val bucketed = new Store(spark, root, Some(8)).dataset("a", "d")
@@ -51,7 +49,7 @@ class CommitFormsSpec extends AnyFunSuite {
 
   Seq(None, Some(8)).foreach { buckets =>
     test(s"held and frame merges agree on random batches (buckets = $buckets)") {
-      val store = new Store(spark, Files.createTempDirectory("graft-forms").toString, buckets)
+      val store = new Store(spark, SparkTestBase.tempDir("graft-forms").toString, buckets)
       val held = store.dataset("a", "held").create()
       val frame = store.dataset("a", "frame").create()
       val rnd = new scala.util.Random(buckets.getOrElse(0) + 17)

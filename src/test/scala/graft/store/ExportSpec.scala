@@ -1,7 +1,6 @@
 package graft.store
 
 import java.io.ByteArrayOutputStream
-import java.nio.file.Files
 import java.util.zip.ZipInputStream
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +13,7 @@ import graft.core._
 class ExportSpec extends AnyFunSuite {
 
   private def stored(): (Store, DataPath) = {
-    val s = new Store(SparkTestBase.spark, Files.createTempDirectory("graft-exp").toString)
+    val s = new Store(SparkTestBase.spark, SparkTestBase.tempDir("graft-exp").toString)
     val c = s.dataset("a", "exp").create()
     c.write("r1", PoObj("n" -> PoInt(1)))
     c.write("r2", PoStr("two"))

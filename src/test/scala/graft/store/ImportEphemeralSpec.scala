@@ -1,7 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -12,7 +10,7 @@ import graft.lens.{EphemeralLens, MapContext, MapFn, TagIndexFn}
 class ImportEphemeralSpec extends AnyFunSuite {
 
   private def freshStore(): Store =
-    new Store(SparkTestBase.spark, Files.createTempDirectory("graft-imp").toString)
+    new Store(SparkTestBase.spark, SparkTestBase.tempDir("graft-imp").toString)
 
   test("file import: one record per file, codec by extension (S8)") {
     val s = freshStore()

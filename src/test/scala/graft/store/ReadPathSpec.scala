@@ -1,7 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -36,7 +34,7 @@ class ReadPathSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("a record read on a 16-bucket store scans exactly one bucket dir") {
-    val store = new Store(spark, Files.createTempDirectory("graft-readpath").toString, Some(16))
+    val store = new Store(spark, SparkTestBase.tempDir("graft-readpath").toString, Some(16))
     store.dataset("a", "pts").create().writeEntries(
       (1 to 64).map(i => WriteEntry(s"r$i", Some(PoObj("n" -> PoInt(i.toLong))))), WriteMode.Merge)
     Seq("datasets", "lenses").foreach { source =>
@@ -57,7 +55,7 @@ class ReadPathSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("a one-record PUT on a 16-bucket store scans exactly one bucket dir") {
-    val store = new Store(spark, Files.createTempDirectory("graft-put-prune").toString, Some(16))
+    val store = new Store(spark, SparkTestBase.tempDir("graft-put-prune").toString, Some(16))
     val d = store.dataset("a", "pts").create()
     d.writeEntries((1 to 64).map(i =>
       WriteEntry(s"r$i", Some(PoObj("n" -> PoInt(i.toLong))))), WriteMode.Merge)
@@ -72,7 +70,7 @@ class ReadPathSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("a one-record lens tick on a 16-bucket store scans only the touched bucket dirs") {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    val store = new Store(spark, Files.createTempDirectory("graft-tick-prune").toString, Some(16))
+    val store = new Store(spark, SparkTestBase.tempDir("graft-tick-prune").toString, Some(16))
     val d = store.dataset("a", "docs").create()
     def tags(ts: String*) = PoObj("tags" -> PoArr(ts.map(PoStr.apply).toVector))
     d.writeEntries((1 to 64).map(i => WriteEntry(s"r$i", Some(tags(s"t$i", s"u${i % 8}")))),
@@ -100,7 +98,7 @@ class ReadPathSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("meta records are computed alone; other meta paths are rejected") {
-    val store = new Store(spark, Files.createTempDirectory("graft-readpath-meta").toString)
+    val store = new Store(spark, SparkTestBase.tempDir("graft-readpath-meta").toString)
     store.dataset("ann", "d").create()
     val meta = DataPath("meta", "system", "system")
     val (authors, scans) = scansOf(ReadPath.readRecord(store, meta.withRecord("authors")))

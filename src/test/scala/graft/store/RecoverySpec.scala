@@ -13,7 +13,7 @@ import graft.core._
 class RecoverySpec extends AnyFunSuite {
 
   private def freshStore(): Store =
-    new Store(SparkTestBase.spark, Files.createTempDirectory("graft-rec").toString)
+    new Store(SparkTestBase.spark, SparkTestBase.tempDir("graft-rec").toString)
 
   test("leftover tmp manifest and orphan snapshot dirs don't corrupt reads") {
     val s = freshStore()

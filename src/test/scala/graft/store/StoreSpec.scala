@@ -12,7 +12,7 @@ import graft.core._
 class StoreSpec extends AnyFunSuite {
 
   private def freshStore(): Store =
-    new Store(SparkTestBase.spark, Files.createTempDirectory("graft-store").toString)
+    new Store(SparkTestBase.spark, SparkTestBase.tempDir("graft-store").toString)
 
   test("create + one write: collection v1, record {version:1, hash, links:[]} (F5)") {
     val c = freshStore().dataset("alice", "d1").create()
@@ -253,7 +253,7 @@ class StoreSpec extends AnyFunSuite {
     // silently vanishes. Store.withLock's JVM-global monitor (and, for
     // real processes, the OS file lock taken under it) makes the loser
     // wait, re-read the winner's manifest, and merge ON TOP of it.
-    val root = Files.createTempDirectory("graft-store-xproc").toString
+    val root = SparkTestBase.tempDir("graft-store-xproc").toString
     val s1 = new Store(SparkTestBase.spark, root)
     val s2 = new Store(SparkTestBase.spark, root)
     s1.dataset("alice", "d1").create()

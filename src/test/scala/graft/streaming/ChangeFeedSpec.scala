@@ -13,7 +13,7 @@ import graft.store.{DataPath, Store}
 class ChangeFeedSpec extends AnyFunSuite {
 
   private def freshStore(): Store =
-    new Store(SparkTestBase.spark, Files.createTempDirectory("graft-feed").toString)
+    new Store(SparkTestBase.spark, SparkTestBase.tempDir("graft-feed").toString)
 
   test("every commit appends a replayable event; batch view reads them all") {
     val s = freshStore()
@@ -51,7 +51,7 @@ class ChangeFeedSpec extends AnyFunSuite {
         ()
       }
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt").toString)
+        SparkTestBase.tempDir("graft-ckpt").toString)
       .start()
     try {
       q.processAllAvailable()
@@ -249,6 +249,37 @@ class ChangeFeedSpec extends AnyFunSuite {
     val all = new CommitLog(s).eventsSinceCursor(0L, -1L)
     assert(all.length == 7, s"events lost: ${all.map(_._2)}")
     assert((1 to 7).forall(v => all.exists(_._2.contains(s""""version":$v"""))))
+  }
+
+  test("two instances compacting the same range at once: no call throws, every event reads back once") {
+    // the soleWriter = false topology: the ingest writer and a
+    // maintainer each hold a CommitLog on one _commits dir, and both
+    // may compact it
+    val s = freshStore()
+    val logs = Seq(new CommitLog(s, soleWriter = false), new CommitLog(s, soleWriter = false))
+    val p = graft.store.DataPath("datasets", "a", "cc")
+    val rounds = 40
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    (1 to rounds).foreach { round =>
+      (1 to 3).foreach(k => logs(k % 2).append(p, (3 * round + k).toLong))
+      // both reach compact() together, so they roll the same range
+      val barrier = new java.util.concurrent.CyclicBarrier(logs.size)
+      val ts = logs.map { log =>
+        val t = new Thread(() => {
+          barrier.await()
+          try log.compact(maxAgeMs = 0L, minFiles = 1)
+          catch { case e: Throwable => failures.add(e) }
+          ()
+        })
+        t.start(); t
+      }
+      ts.foreach(_.join(60000))
+    }
+    assert(failures.isEmpty,
+      s"${failures.size} of ${2 * rounds} compactions failed, first: ${failures.peek()}")
+    val versions = new CommitLog(s).eventsSinceCursor(0L, -1L)
+      .map(e => "\"version\":(\\d+)".r.findFirstMatchIn(e._2).get.group(1).toLong)
+    assert(versions.sorted == (4L to 3L * rounds + 3), "every event reads back once")
   }
 
   test("restart seq seeds past the durable log: same-ms appends never collide") {

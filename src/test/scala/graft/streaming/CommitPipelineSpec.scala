@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,11 +21,11 @@ class CommitPipelineSpec extends AnyFunSuite {
   test("commit log drives dedupDocs into a curated collection, deduping ACROSS commits") {
     val spark = SparkTestBase.spark
     import spark.implicits._
-    val store = new Store(spark, Files.createTempDirectory("graft-pipe").toString)
+    val store = new Store(spark, SparkTestBase.tempDir("graft-pipe").toString)
     val log = new CommitLog(store).install()
     val inbox = store.dataset("a", "inbox").create()
     val curated = store.dataset("a", "curated").create()
-    val spool = Files.createTempDirectory("graft-pipe-spool").toString
+    val spool = SparkTestBase.tempDir("graft-pipe-spool").toString
 
     def doc(text: String) = Some(PoObj("text" -> PoStr(text)): PoValue)
 
@@ -52,7 +50,7 @@ class CommitPipelineSpec extends AnyFunSuite {
         }
         ()
       }
-      .option("checkpointLocation", Files.createTempDirectory("graft-pipe-ck1").toString)
+      .option("checkpointLocation", SparkTestBase.tempDir("graft-pipe-ck1").toString)
       .start()
 
     // ---- hop 2: spool stream → dedupDocs (watermark-bounded state) →
@@ -70,7 +68,7 @@ class CommitPipelineSpec extends AnyFunSuite {
         if (entries.nonEmpty) curated.writeEntries(entries, WriteMode.Merge)
         ()
       }
-      .option("checkpointLocation", Files.createTempDirectory("graft-pipe-ck2").toString)
+      .option("checkpointLocation", SparkTestBase.tempDir("graft-pipe-ck2").toString)
       .start()
 
     try {
@@ -100,7 +98,7 @@ class CommitPipelineSpec extends AnyFunSuite {
 
   test("windowedStats runs directly over the commit-log stream (ops metrics)") {
     val spark = SparkTestBase.spark
-    val store = new Store(spark, Files.createTempDirectory("graft-winlog").toString)
+    val store = new Store(spark, SparkTestBase.tempDir("graft-winlog").toString)
     val log = new CommitLog(store).install()
     val d1 = store.dataset("a", "w1").create()
     val d2 = store.dataset("a", "w2").create()

@@ -52,7 +52,7 @@ class EventAnalyticsSpec extends AnyFunSuite {
     // then normalize through the same helper the batch path uses
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     // the file source wants a directory: link the driver file into one
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-events")
+    val streamDir = SparkTestBase.tempDir("graft-events")
     try java.nio.file.Files.createLink(streamDir.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
     catch { case _: Throwable =>

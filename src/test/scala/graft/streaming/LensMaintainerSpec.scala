@@ -16,7 +16,7 @@ class LensMaintainerSpec extends AnyFunSuite {
 
   private def fixture() = {
     val store = new Store(SparkTestBase.spark,
-      Files.createTempDirectory("graft-lm").toString)
+      SparkTestBase.tempDir("graft-lm").toString)
     val log = new CommitLog(store).install()
     (store, log)
   }
@@ -28,7 +28,7 @@ class LensMaintainerSpec extends AnyFunSuite {
     v.asInstanceOf[PoSet].items.collect { case PoStr(s) => s }.toSet
 
   private def ck(): String =
-    Files.createTempDirectory("graft-lm-ck").toString
+    SparkTestBase.tempDir("graft-lm-ck").toString
 
   test("runOnce drains the log, builds incrementally, and no-ops when settled") {
     val (store, log) = fixture()
