@@ -1,41 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main — one JSON line for the driver's BENCH_r{N}.json.
-  *
-  * Hygiene (VERDICT r1 #6/#9): a full warmup pass first absorbs JVM +
-  * codegen + broadcast warmup so per-query numbers are comparable across
-  * rounds, and the timed pass sinks to the `noop` datasource — a real
-  * row-by-row materialization Catalyst cannot shortcut the way it can a
-  * `count()` (which prunes aggregate columns and drops final sorts).
-  *
-  * Min-of-N (VERDICT r5 #2): each query is timed N times (default 3)
-  * after warmup and reports the MIN. A single loaded-box hiccup on one
-  * run can no longer poison the round's recorded number (BENCH_r05
-  * recorded phantom 4-7x regressions on q36-q38 this way). All raw
-  * runs are emitted under "runs" so drift is auditable.
-  *
-  * Job-time self-diagnosis (VERDICT r12 #3): alongside each wall time
-  * the artifact records the SUM OF SPARK JOB DURATIONS for the same rep
-  * ("job_s", scheduler-side timestamps via a job listener — the JOBLOG
-  * aggregate BenchOne computes, always-on here). Two drift disputes in
-  * two rounds were adjudicated by hand because wall time alone can't
-  * show box contention; now the artifact carries the split. Reading it:
-  * wall ≈ jobs = executor-bound; wall ≫ jobs on a query whose recorded
-  * baseline had wall ≈ jobs = the DRIVER/box was contended (sbt, GC,
-  * co-tenants), not a code regression; jobs themselves inflating with
-  * byte-identical code = executor-side contention (CPU steal), also
-  * environment. Fixture-heavy queries (per-request point lookups, zip
-  * streaming) legitimately run wall > jobs — compare against the same
-  * query's recorded split, not against zero. */
+import graft.obs.{Census, Profile}
+
 /** Prior-round per-query walls for [[Bench]]'s self-healing re-measure
   * (VERDICT r15 "what's wrong" #2). Provenance order (VERDICT r16
   * "what's wrong" #1 — the r16 prior was committed mid-session, so an
   * 18% cross-round level shift sailed through unremeasured):
-  * explicit env override → the PREVIOUS ROUND's committed artifact
-  * (`BENCH_rNN.json`, highest N whose dense positional "wj" line
-  * matches this sf AND this exact query-name set via the nck CRC
-  * guard — i.e. a number measured by the DRIVER at round end, never
+  * the PREVIOUS ROUND's committed artifact (`BENCH_rNN.json`, highest
+  * N whose `"part":"queries"` line — or, in the r13–r17 artifacts, the
+  * dense positional "wj" line — matches this sf AND this exact
+  * query-name set; a number measured by the DRIVER at round end, never
   * by this session) → sf-scoped `BENCH_LATEST_<sf>.json` (may be
   * same-session; fallback only) → `target/bench.json` bootstrap.
   * Extraction is a targeted scan of machine-written shapes — no JSON
@@ -59,19 +33,16 @@ object BenchPrior {
       latestPath(sfDir).stripSuffix(".json") + s"_c$cpus.json")
 
   def load(sfDir: String, names: Seq[String]): Map[String, Double] = {
-    val explicit = sys.env.get("SPARK_GRAFT_BENCH_PRIOR")
-      .flatMap(p => parse(p, sfDir = None))
-    def round = latestRoundArtifact(sfDir, names)
     def latest = parse(latestPath(sfDir), sfDir = None)
     def bootstrap = parse("target/bench.json", sfDir = Some(sfDir))
-    explicit.orElse(round).orElse(latest).orElse(bootstrap).getOrElse(Map.empty)
+    latestRoundArtifact(sfDir, names).orElse(latest).orElse(bootstrap).getOrElse(Map.empty)
   }
 
   /** Decode the r18+ plain per-query tail line: `"part":"queries"` with
-    * qNN-abbreviated names (the lineA/lineB spelling). Keys map back to
-    * full names by unique `qNN` prefix against the registry; ambiguity
-    * or an unknown key rejects the line (falls back to the wj decode /
-    * BENCH_LATEST) rather than mis-attributing numbers. */
+    * qNN-abbreviated names. Keys map back to full names by unique `qNN`
+    * prefix against the registry; ambiguity or an unknown key rejects
+    * the line (falls back to the wj decode / BENCH_LATEST) rather than
+    * mis-attributing numbers. */
   private[graft] def decodeQueriesLine(
       raw: String, sfDir: String, names: Seq[String]): Option[Map[String, Double]] = {
     val s = raw.replace("\\\"", "\"")
@@ -108,11 +79,13 @@ object BenchPrior {
 
   /** Decode per-query walls out of the newest committed `BENCH_rNN.json`
     * round artifact. The driver's artifact carries our own stdout tail
-    * (JSON-escaped), whose dense `"part":"wj"` line is positional over
-    * the alpha-sorted passing query names — the embedded "nck" CRC of
-    * the name list is the decode guard, so a renamed/added/dropped
-    * query makes this source reject itself rather than mis-attribute
-    * numbers (falls back to BENCH_LATEST). */
+    * (JSON-escaped); its `"part":"queries"` line is tried first, then
+    * the dense `"part":"wj"` line of the r13–r17 artifacts (no run
+    * writes it any more), positional over the alpha-sorted passing query
+    * names — the embedded "nck" CRC of the name list is the decode
+    * guard, so a renamed/added/dropped query makes this source reject
+    * itself rather than mis-attribute numbers (falls back to
+    * BENCH_LATEST). */
   private[graft] def latestRoundArtifact(
       sfDir: String, names: Seq[String]): Option[Map[String, Double]] =
     try {
@@ -143,7 +116,7 @@ object BenchPrior {
     crc.update(alpha.mkString(",").getBytes("UTF-8"))
     val wantNck = f"${crc.getValue & 0xffff}%04x"
     val lineRe = """"part":"wj"[^\n]*?"sf":"([^"]*)"""".r
-    // any complete copy works (printFinal emits the line twice); scan
+    // any complete copy works (the r13–r17 tails carry it twice); scan
     // all and keep the first that passes every guard
     lineRe.findAllMatchIn(s).flatMap { m =>
       val line = s.substring(math.max(0, s.lastIndexOf('{', m.start)), m.end)
@@ -186,6 +159,46 @@ object BenchPrior {
     } catch { case _: Throwable => None }
 }
 
+/** Benchmark main — a round's BENCH_r{N}.json records the tail of its
+  * stdout; the whole result goes to the artifact of record.
+  *
+  * Hygiene (VERDICT r1 #6/#9): a full warmup pass first absorbs JVM +
+  * codegen + broadcast warmup so per-query numbers are comparable across
+  * rounds, and the timed pass sinks to the `noop` datasource — a real
+  * row-by-row materialization Catalyst cannot shortcut the way it can a
+  * `count()` (which prunes aggregate columns and drops final sorts).
+  *
+  * Min-of-N (VERDICT r5 #2): each query is timed N times (default 3)
+  * after warmup and reports the MIN. A single loaded-box hiccup on one
+  * run can no longer poison the round's recorded number (BENCH_r05
+  * recorded phantom 4-7x regressions on q36-q38 this way). All raw
+  * runs are emitted under "runs" so drift is auditable.
+  *
+  * Job-time self-diagnosis (VERDICT r12 #3): alongside each wall time
+  * the artifact records the SUM OF SPARK JOB DURATIONS for the same rep
+  * ("job_s", scheduler-side timestamps from [[graft.obs.Census]]). Two
+  * drift disputes in two rounds were adjudicated by hand because wall
+  * time alone can't show box contention; now the artifact carries the
+  * split. Reading it: wall ≈ jobs = executor-bound; wall ≫ jobs on a
+  * query whose recorded baseline had wall ≈ jobs = the DRIVER/box was
+  * contended (sbt, GC, co-tenants), not a code regression; jobs
+  * themselves inflating with byte-identical code = executor-side
+  * contention (CPU steal), also environment. Fixture-heavy queries
+  * (per-request point lookups, zip streaming) legitimately run wall >
+  * jobs — compare against the same query's recorded split, not against
+  * zero.
+  *
+  * Stdout carries one encoding: a pad of empty lines, then the guarded
+  * region of [[report]] — the plain `"part":"queries"` line and the
+  * headline. The dense positional `"part":"wj"` line of r13–r17 is no
+  * longer written; [[BenchPrior]] still reads it from those committed
+  * artifacts.
+  *
+  * `SPARK_GRAFT_BENCH_ONLY` (comma-separated name prefixes) runs only
+  * the matching queries, in suite order, writes no artifact, and prints
+  * to stderr the census profile of each query's fastest rep: one line
+  * per Spark job and per stage, the job-count profile that tells
+  * small-job-overhead floors (q44) apart from data-volume costs. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -193,29 +206,13 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption).getOrElse(3))
     val spark = GraftSession.build() // SPARK_GRAFT_CPUS or all cores
 
-    // scheduler-timestamped job-duration accumulator (contention-immune
-    // at the measurement layer: j.time is stamped by the DAGScheduler,
-    // not by when the listener thread gets around to the event)
-    val jobMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobStarts.put(j.jobId, j.time)
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        Option(jobStarts.remove(j.jobId)).foreach(t0 => jobMs.addAndGet(j.time - t0))
-    })
-    def flush(): Unit = // drain queued events so counter reads are rep-aligned
-      org.apache.spark.GraftSparkShim.flushListenerBus(spark.sparkContext)
-
     def sink(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-    // SPARK_GRAFT_BENCH_ONLY (r18, probe tool): comma-separated name
-    // PREFIXES — run only matching queries, preserving suite order, for
-    // in-context regression bisection (a full 163-query run takes ~1 h;
-    // reproducing a context-dependent regression like r17's q131 needs
-    // the queries that precede it, not a fresh BenchOne JVM). The
-    // driver never sets it; when set, the artifact files are NOT
+    // the subset exists for in-context regression bisection (a full
+    // 163-query run takes ~1 h; reproducing a context-dependent
+    // regression like r17's q131 needs the queries that precede it).
+    // The driver never sets it; when set, the artifact files are NOT
     // written (a subset total must never become a prior or a committed
     // BENCH_LATEST).
     val onlyPrefixes = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -234,34 +231,30 @@ object Bench {
     // too — the min still reports under "queries", but the error lands
     // in "errors" with a marker, so a flaky regression can never be
     // recorded as a silently healthy number.
-    def timedRuns(name: String, count: Int)
-        : (Seq[(Double, Double)], Option[String]) = {
+    def timedRuns(name: String, count: Int): (Seq[(Double, Profile)], Option[String]) = {
       var firstErr: Option[String] = None
       val runs = (1 to count).flatMap { _ =>
-        flush()
-        val j0 = jobMs.get()
-        val t0 = System.nanoTime()
-        try {
+        try Some(Census.measure(spark.sparkContext) {
+          val t0 = System.nanoTime()
           sink(name)
-          val wall = (System.nanoTime() - t0) / 1e9
-          flush()
-          Some((wall, (jobMs.get() - j0) / 1e3))
-        } catch {
+          (System.nanoTime() - t0) / 1e9
+        })
+        catch {
           case e: Throwable =>
             if (firstErr.isEmpty)
               firstErr = Some(Option(e.getMessage).getOrElse(e.getClass.getName))
             None
         }
       }
-      (runs, firstErr)
+      (runs.sortBy(_._1), firstErr)
     }
-    // (name, successful (wall, job) pairs, first error any rep hit)
-    val sessionResults: Seq[(String, Seq[(Double, Double)], Option[String])] =
+    // (name, successful (wall, profile) reps fastest first, first error any rep hit)
+    val sessionResults: Seq[(String, Seq[(Double, Profile)], Option[String])] =
       names.map { name =>
         val (runs, firstErr) = timedRuns(name, reps)
         val err = firstErr.map(m =>
           if (runs.isEmpty) m else s"intermittent (${runs.size}/$reps runs passed): $m")
-        (name, runs.sortBy(_._1), err)
+        (name, runs, err)
       }
     // SELF-HEALING protocol (VERDICT r15 "what's wrong" #2): any query
     // whose session min-wall moved >1.3× (and >0.2 s absolute — sub-
@@ -278,16 +271,84 @@ object Bench {
       case (name, runs, _) if runs.nonEmpty && priorWalls.get(name).exists(p =>
         runs.head._1 > p * 1.3 && runs.head._1 - p > 0.2) => name
     }
-    val remeasuredRuns: Map[String, Seq[(Double, Double)]] =
-      suspects.map { name => name -> timedRuns(name, reps)._1.sortBy(_._1) }.toMap
-    val results: Seq[(String, Seq[(Double, Double)], Option[String])] =
+    val remeasuredRuns: Map[String, Seq[(Double, Profile)]] =
+      suspects.map { name => name -> timedRuns(name, reps)._1 }.toMap
+    val results: Seq[(String, Seq[(Double, Profile)], Option[String])] =
       sessionResults.map { case (name, runs, err) =>
-        remeasuredRuns.get(name) match {
-          case Some(re) if re.nonEmpty =>
-            (name, (runs ++ re).sortBy(_._1), err)
-          case _ => (name, runs, err)
+        (name, (runs ++ remeasuredRuns.getOrElse(name, Nil)).sortBy(_._1), err)
+      }
+    if (onlyPrefixes.isDefined)
+      results.foreach { case (name, runs, _) =>
+        runs.headOption.foreach { case (wall, p) =>
+          profileLines(name, wall, p).foreach(System.err.println)
         }
       }
+    val withJobSeconds = results.map { case (name, runs, err) =>
+      (name, runs.map { case (wall, p) => (wall, p.jobMs / 1e3) }, err)
+    }
+    val remeasured = suspects.map { name =>
+      (name, sessionResults.find(_._1 == name).get._2.head._1,
+        remeasuredRuns(name).map(_._1))
+    }
+    val (json, guardedLines) = report(withJobSeconds, remeasured, priorWalls, reps, sfDir,
+      cpus = spark.sparkContext.defaultParallelism)
+    // The artifact of record goes to its OWN file (VERDICT r7 #4: the
+    // r7 log-tail capture started mid-line and lost q1/q10-q29 from the
+    // checked-in BENCH json): the driver (or anyone) can pick up
+    // target/bench.json whole. A full run also writes the committed
+    // prior for next round's self-healing re-measure and its cpu-keyed
+    // copy (see BenchPrior.artifactPaths).
+    BenchPrior.artifactPaths(subset = onlyPrefixes.isDefined,
+        sys.env.get("SPARK_GRAFT_BENCH_OUT"), sfDir, spark.sparkContext.defaultParallelism)
+      .foreach { p =>
+        val path = java.nio.file.Paths.get(p)
+        Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
+        java.nio.file.Files.write(path,
+          (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
+    // the pad is a RUN OF EMPTY LINES ahead of the guarded region: the
+    // ~2 KB tail window starts mid-stream, and any non-empty pad line
+    // (r15 used a ==== bar) leaves a first tail line that is a
+    // fragment no parser accepts (BENCH_r15 "parsed": null). With
+    // newlines, the ragged start lands on an EMPTY line, so the first
+    // non-empty line of any tail window over this region is a complete
+    // line. build.sbt routes forked-run stdout RAW (no "[info] "
+    // framing) for the same reason.
+    val pad = "\n" * 2200
+    def printFinal(): Unit = {
+      print(pad)
+      guardedLines.foreach(println)
+      Console.out.flush()
+    }
+    // printed again after spark.stop(), so shutdown logging on stdout
+    // cannot push the region out of the tail window
+    printFinal()
+    // release the kn-gate's last persisted model table (ADVICE r16)
+    graft.ops.TextOps.releaseKnCache()
+    spark.stop()
+    printFinal()
+  }
+
+  /** One rep's census profile as stderr lines: a header, then one line
+    * per job (duration, tasks, stage names) and one per stage. */
+  private def profileLines(name: String, wall: Double, p: Profile): Seq[String] =
+    f"PROFILE $name wall=$wall%.3f s jobs=${p.jobs.size} job_s=${p.jobMs / 1e3}%.3f" +:
+      (p.jobs.map(j => f"JOBLOG ${j.id}%4d ${j.ms}%6d ms tasks=${j.tasks}  ${j.name.take(240)}") ++
+        p.stages.map(s => f"STAGELOG ${s.id}%4d run=${s.runMs}%6d ms tasks=${s.tasks} " +
+          f"exec=${s.executorRunMs} ms  ${s.name.take(80)}"))
+
+  /** Renders a bench run: the artifact JSON and the guarded stdout
+    * region printed after the pad.
+    *
+    * @param results    per query, its passing reps as (wall s, job s)
+    *                   fastest first, and the first error any rep hit
+    * @param remeasured per re-measured query, its session min wall and
+    *                   the walls of its re-measure reps
+    * @param priorWalls the prior round's walls ([[BenchPrior.load]]) */
+  private[graft] def report(results: Seq[(String, Seq[(Double, Double)], Option[String])],
+                            remeasured: Seq[(String, Double, Seq[Double])],
+                            priorWalls: Map[String, Double], reps: Int, sfDir: String,
+                            cpus: Int): (String, Seq[String]) = {
     // truncate BEFORE escaping (truncating after can cut an escape
     // sequence in half → invalid JSON), then escape every control char
     def jstr(s: String) = "\"" + s.take(200).flatMap {
@@ -319,12 +380,10 @@ object Bench {
     val jobTotal = f(ok.map(_._2.head._2).sum)
     // the self-healing record: prior wall, the session's min, and the
     // end-of-suite re-measure runs (wall seconds)
-    val remeas = suspects.map { name =>
-      val session = sessionResults.find(_._1 == name).get._2.head._1
-      val re = remeasuredRuns.getOrElse(name, Seq.empty).map(p => f(p._1))
+    val remeas = remeasured.map { case (name, session, re) =>
       "\"" + name + "\":{" +
         s""""prior":${f(priorWalls(name))},"session":${f(session)},""" +
-        s""""re":${re.mkString("[", ",", "]")}}"""
+        s""""re":${re.map(f).mkString("[", ",", "]")}}"""
     }.mkString("{", ",", "}")
     // cross-round movers that SURVIVED the remeasure (VERDICT r16 #1:
     // flag, don't absorb): recorded min over ALL runs still >1.5× the
@@ -352,117 +411,23 @@ object Bench {
     val meds = ok.map { case (k, ts, _) => "\"" + k + "\":" + f(median(ts)) }
       .mkString("{", ",", "}")
     val medTotal = f(ok.map { case (_, ts, _) => median(ts) }.sum)
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","job_total":$jobTotal,"med_total":$medTotal,"reps":$reps,"queries":$qs,"queries_med":$meds,"job_s":$js,"runs":$runs,"job_runs":$jruns,"remeasured":$remeas,"cross_round_movers":$movers,"errors":$errs,"cpus":${spark.sparkContext.defaultParallelism},"sf":"$sfDir"}"""
-    // The artifact of record goes to its OWN file (VERDICT r7 #4: the
-    // r7 log-tail capture started mid-line and lost q1/q10-q29 from the
-    // checked-in BENCH json). stdout keeps the line for humans; the
-    // driver (or anyone) can pick up target/bench.json whole. A full run
-    // also writes the committed prior for next round's self-healing
-    // re-measure and its cpu-keyed copy (see BenchPrior.artifactPaths).
-    BenchPrior.artifactPaths(subset = onlyPrefixes.isDefined,
-        sys.env.get("SPARK_GRAFT_BENCH_OUT"), sfDir, spark.sparkContext.defaultParallelism)
-      .foreach { p =>
-        val path = java.nio.file.Paths.get(p)
-        Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
-        java.nio.file.Files.write(path,
-          (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-    // stdout gets SHORT self-contained lines (VERDICT r10 #5: the
-    // round-10 single ~3.5 KB compact line still exceeded the driver's
-    // bounded capture — BENCH_r10's recorded tail starts AND ends
-    // mid-line, i.e. the window is ~2 KB and not line-aligned at
-    // either edge). Defense: split the per-query map alphabetically
-    // into two ~0.8 KB lines, each a complete JSON object carrying the
-    // headline total ("part" says which half of the map it holds), and
-    // abbreviate query names to their qNN prefix (full names + raw
-    // reps live in target/bench.json, the artifact of record). The
-    // print order makes any 2000-byte tail window over the stream
-    // contain at least one WHOLE copy of each half, wherever a byte
-    // cap or tail boundary lands.
-    val shortQs = ok.map { case (k, ts, _) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + f(ts.head._1) }
-    val (qa, qb) = shortQs.splitAt((shortQs.size + 1) / 2)
-    def part(tag: String, entries: Seq[String]) =
-      s"""{"metric":"total","value":$total,"unit":"sec","job_total":$jobTotal,"reps":$reps,"part":"$tag","queries":${entries.mkString("{", ",", "}")},"errors":$errs,"sf":"$sfDir"}"""
-    val lineA = part("a/2", qa)
-    val lineB = part("b/2", qb)
-    // Per-query JOB seconds as their own part lines (VERDICT r12 #3:
-    // the artifact must self-diagnose box contention). Printed FIRST
-    // within each set: the capture window is a ~2 KB TAIL, so the
-    // wall-time lines + headline — the primary numbers — stay inside
-    // it, and the job lines survive in the driver's full log / in
-    // target/bench.json when the window clips.
-    val shortJs = ok.map { case (k, ts, _) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + f(ts.head._2) }
-    val (ja, jb) = shortJs.splitAt((shortJs.size + 1) / 2)
-    def jpart(tag: String, entries: Seq[String]) =
-      s"""{"metric":"job_total","value":$jobTotal,"unit":"sec","wall_total":$total,"reps":$reps,"part":"$tag","job_s":${entries.mkString("{", ",", "}")},"sf":"$sfDir"}"""
-    val lineJA = jpart("ja/2", ja)
-    val lineJB = jpart("jb/2", jb)
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","job_total":$jobTotal,"med_total":$medTotal,"reps":$reps,"queries":$qs,"queries_med":$meds,"job_s":$js,"runs":$runs,"job_runs":$jruns,"remeasured":$remeas,"cross_round_movers":$movers,"errors":$errs,"cpus":$cpus,"sf":"$sfDir"}"""
     // A ~140-byte headline (VERDICT r11 #8) — no per-query map at all,
     // so even the smallest line-aligned capture window parses the
     // total; job_total rides it, making the global wall-vs-jobs
     // contention check possible from the headline alone.
     val headline =
       s"""{"metric":"total","value":$total,"unit":"sec","job_total":$jobTotal,"med_total":$medTotal,"reps":$reps,"n_queries":${ok.size},"errors":$errs,"sf":"$sfDir"}"""
-    // One DENSE line carrying BOTH per-query wall AND job seconds
-    // inside the driver's 2000-byte tail capture (VERDICT r13 #1/#2:
-    // the ja/jb job lines print ahead of the wall lines and were
-    // clipped out of BENCH_r13's recorded tail, so per-query
-    // contention still couldn't be adjudicated from the artifact).
-    // Names are elided to fit: "w"/"j" are POSITIONAL over the
-    // passing queries sorted alphabetically by full name — the same
-    // order as every "queries"/"job_s" map in this file and in
-    // target/bench.json (qNN spellings in parts a/b). SELF-DESCRIBING
-    // since r15 (VERDICT r14 "what's wrong" #1): the line carries a
-    // guard against name-set drift — "first"/"last" are the first and
-    // last FULL names of the alpha order and "nck" is the CRC32 (low
-    // 16 bits, hex) of the full alpha name list joined by "," — so a
-    // decoder can verify its reconstruction of the positional arrays
-    // against the correctness registry instead of trusting it.
-    // 2 dp keeps ~155 queries ≈ 1.7 KB; if growth pushes the line past
-    // the budget, "j" degrades to integer PERCENT of wall
-    // ("jenc":"pct", job_s ≈ w * j / 100) before "w" loses precision.
-    def fd(t: Double): String = f"$t%.2f"
-    val nameGuard = {
-      val crc = new java.util.zip.CRC32
-      crc.update(ok.map(_._1).mkString(",").getBytes("UTF-8"))
-      val first = ok.headOption.map(_._1).getOrElse("")
-      val last = ok.lastOption.map(_._1).getOrElse("")
-      f""""first":"$first","last":"$last","nck":"${crc.getValue & 0xffff}%04x""""
-    }
-    def dense(wArr: String, wenc: String, jArr: String, jenc: String) =
-      s"""{"metric":"total","value":$total,"unit":"sec","job_total":$jobTotal,"reps":$reps,"part":"wj","n_queries":${ok.size},"order":"alpha",$nameGuard,"wenc":"$wenc","jenc":"$jenc","w":$wArr,"j":$jArr,"sf":"$sfDir"}"""
-    val wSec = ok.map { case (_, ts, _) => fd(ts.head._1) }.mkString("[", ",", "]")
-    val jSec = ok.map { case (_, ts, _) => fd(ts.head._2) }.mkString("[", ",", "]")
-    val jPct = ok.map { case (_, ts, _) =>
-      val w = ts.head._1
-      (if (w <= 0) 0L else math.round(ts.head._2 / w * 100)).toString
-    }.mkString("[", ",", "]")
-    // "wenc":"cs" = wall as integer CENTISECONDS (w[i]/100 = seconds):
-    // the tightest self-described encoding before precision loss
-    val wCs = ok.map { case (_, ts, _) =>
-      math.round(ts.head._1 * 100).toString }.mkString("[", ",", "]")
-    // budget: the whole guarded region — headline + dense + a SECOND
-    // headline copy + sbt's trailing "[success] Total time ..." — must
-    // fit the ~2000-byte tail window with slack left for the newline
-    // pad, so every window start lands on an empty line: hence 1450
-    val denseWJ = Seq(
-      dense(wSec, "sec", jSec, "sec"),
-      dense(wSec, "sec", jPct, "pct"),
-      dense(wCs, "cs", jPct, "pct")).find(_.length <= 1450)
-      .getOrElse(dense(wCs, "cs", jPct, "pct"))
-    // PLAIN per-query line for the driver (VERDICT r17 Next #2: PERF_r17
-    // had per_query:{} — the driver does not decode the positional wj
-    // line, so per-query walls never reached it). One JSON object, qNN-
-    // abbreviated names (the established lineA/lineB spelling; unique-
-    // prefix-decodable against the registry), values in PLAIN SECONDS.
-    // Precision adapts to the window budget: the capture is the last
-    // 100 lines AND the last 2000 chars of stdout (measured across
-    // BENCH_r10..r17), so the guarded region — this line + a trailing
-    // headline + sbt's "[success]" line — must stay under ~1990 chars.
-    // The line carries every headline field, so a first-line parser
-    // reads it as the headline and a per-query extractor finds the map.
+    // PLAIN per-query line for the driver (VERDICT r17 Next #2). One JSON
+    // object, names abbreviated to their qNN prefix (unique-prefix-
+    // decodable against the registry; full names + raw reps live in the
+    // artifact of record), values in PLAIN SECONDS. Precision adapts to
+    // the window budget: the capture is the last 100 lines AND the last
+    // 2000 chars of stdout (measured across BENCH_r10..r17), so the
+    // guarded region — this line + a trailing headline + sbt's
+    // "[success]" line — must stay under ~1990 chars. The line carries
+    // every headline field, so a first-line parser reads it as the
+    // headline and a per-query extractor finds the map.
     def qLine(dp: Int, slim: Boolean): String = {
       def fq(t: Double): String = if (dp >= 2) f"$t%.2f" else f"$t%.1f"
       val entries = ok.map { case (k, ts, _) =>
@@ -478,42 +443,20 @@ object Bench {
     // guarded-region layout: best variant that fits the window with the
     // sbt success line (~80 chars) and newlines accounted for. Prefer
     // per-query precision, then a trailing headline copy (last-JSON-line
-    // parsers); degrade to the r17 region (headline+dense+headline) only
-    // if even the slim 1-dp line cannot fit (e.g. a long error map —
-    // a broken round, where the headline matters more than per-query).
-    val tailBudget = 1990 - 84
+    // parsers); degrade to the headline alone if even the slim 1-dp line
+    // cannot fit (e.g. a long error map — a broken round, where the
+    // headline matters more than per-query).
     val qCands = Seq(qLine(2, slim = false), qLine(1, slim = false), qLine(1, slim = true))
     val guardedLines: Seq[String] =
-      qCands.find(q => q.length + headline.length + 2 <= tailBudget)
+      qCands.find(q => q.length + headline.length + 2 <= TailBudget)
         .map(q => Seq(q, headline))
-        .orElse(qCands.find(_.length + 1 <= tailBudget).map(Seq(_)))
-        .getOrElse(Seq(headline, denseWJ, headline))
-    // the pad is a RUN OF EMPTY LINES ahead of the guarded region: the
-    // ~2 KB tail window starts mid-stream, and any non-empty pad line
-    // (r15 used a ==== bar) leaves a first tail line that is a
-    // fragment no parser accepts (BENCH_r15 "parsed": null). With
-    // newlines, the ragged start lands on an EMPTY line, so the first
-    // non-empty line of any tail window over this region is a complete
-    // headline. build.sbt routes forked-run stdout RAW (no "[info] "
-    // framing) for the same reason.
-    val pad = "\n" * 2200
-    def printFinal(): Unit = {
-      println(lineJA); println(lineJB)
-      println(lineA); println(lineB)
-      // the dense wj line stays for cross-round positional decoding of
-      // OLD artifacts and full-log consumers; pre-pad, it clips out of
-      // the bounded tail in favor of the plain queries line
-      println(headline); println(denseWJ)
-      print(pad)
-      guardedLines.foreach(println)
-      Console.out.flush()
-    }
-    // print order = reverse priority: the verbose per-name lines clip
-    // first; the pad + headline + dense + headline own the tail window.
-    printFinal()
-    // release the kn-gate's last persisted model table (ADVICE r16)
-    graft.ops.TextOps.releaseKnCache()
-    spark.stop()
-    printFinal()
+        .orElse(qCands.find(_.length + 1 <= TailBudget).map(Seq(_)))
+        .getOrElse(Seq(headline))
+    (json, guardedLines)
   }
+
+  /** Chars of the guarded region, newlines included, that fit the
+    * ~2000-char stdout tail capture with sbt's trailing "[success]"
+    * line (~80 chars) and slack. */
+  private[graft] val TailBudget = 1990 - 84
 }

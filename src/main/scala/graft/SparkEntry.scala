@@ -32,7 +32,7 @@ object SparkEntry {
     * Process-scoped path: the oracle SQL that references it is emitted
     * by the same Verify process, so both sides agree by construction
     * (and nothing outside /root/repo is written) — and concurrent
-    * Bench/BenchOne/Verify processes never race on one directory.
+    * Bench/Verify processes never race on one directory.
     * Sf-scoped too (ADVICE r15): the write election is per sf dir, so
     * one process verifying several scale factors keeps each sf's
     * persisted oracle input durable instead of last-write-wins. */
@@ -50,7 +50,7 @@ object SparkEntry {
     * read-only (training is deterministic, the rewrite would be
     * byte-identical anyway). One path per process: if one process ran
     * q18 over several sf dirs, the LAST write would win — fine for the
-    * driver contract (Verify/Bench/BenchOne are single-dir by
+    * driver contract (Verify/Bench are single-dir by
     * construction), noted for anyone scripting beyond it. */
   /** sf dir → the in-flight/completed centroid write. A map of futures
     * (not a claim set): the winner writes, LOSERS WAIT on the winner's

@@ -24,7 +24,20 @@ private[queries] object Fixture {
     * across runs. */
   def store(spark: SparkSession, sfDir: String, prefix: String,
             buckets: Option[Int] = None): Store =
-    new Store(spark, Fs.pidScratch(s"$prefix-${sfName(sfDir)}"), buckets)
+    new Store(spark, scratch(sfDir, prefix), buckets)
+
+  private def scratch(sfDir: String, prefix: String): String =
+    Fs.pidScratch(s"$prefix-${sfName(sfDir)}")
+
+  /** The pid-scoped scratch dir `<prefix>-<sf>-<pid>`, emptied, for a
+    * fixture that must start from nothing on every call. Emptied before
+    * use, not after: a fixture's returned frame may read what it leaves
+    * there lazily. */
+  def emptyScratch(sfDir: String, prefix: String): String = {
+    val root = scratch(sfDir, prefix)
+    Fs.rmTree(Paths.get(root))
+    root
+  }
 
   /** The documents table's `doc_id` and `field` columns. */
   def docs(spark: SparkSession, sfDir: String, field: String = "text"): DataFrame =

@@ -109,20 +109,6 @@ object IncrementalLensQuery {
       .orderBy(col("id").cast("long"), col("kind"))
   }
 
-  /** Phase timer for the q44 cost-attribution audits (VERDICT r11 #3):
-    * `SPARK_GRAFT_PHASELOG=1` prints one stderr line per phase of the
-    * fixture+build pipeline — the per-stage complement of BenchOne's
-    * JOBLOG. Off (zero-cost) unless the env var is set. */
-  private val phaselog = sys.env.get("SPARK_GRAFT_PHASELOG").contains("1")
-  private def phase[A](name: String)(body: => A): A =
-    if (!phaselog) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"PHASELOG ${(System.nanoTime() - t0) / 1e6}%8.1f ms  $name")
-      r
-    }
-
   def run(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // The pid-scoped root keeps a concurrent process's rebuilds from
@@ -137,27 +123,19 @@ object IncrementalLensQuery {
     val docs = Parallelism.spread(Fixture.docs(spark, sfDir))
 
     // ---- commit 1: the whole corpus
-    phase("commit1_overwrite") {
-      ds.writeEntriesDF(Fixture.entries(docs), WriteMode.Overwrite)
-    }
+    ds.writeEntriesDF(Fixture.entries(docs), WriteMode.Overwrite)
 
     val acc = spark.sparkContext.longAccumulator("graft.q44.mapCalls")
     val lens = Fixture.freshLens(store, "token-index-inc",
       Seq(DataPath("datasets", "bench", "documents-inc")), new CountingTokenFn(acc))
-    phase("build1_full") {
-      lens.build() // full: empty cache maps everything → output version 1
-    }
+    lens.build() // full: empty cache maps everything → output version 1
 
     // ---- commit 2 (merge): disjoint touched subsets (deleted, updated, new)
-    phase("commit2_merge") {
-      ds.writeEntriesDF(Fixture.touchedDelta(docs), WriteMode.Merge)
-    }
+    ds.writeEntriesDF(Fixture.touchedDelta(docs), WriteMode.Merge)
 
     // ---- incremental build: only updated+new paths may re-map
     acc.reset()
-    phase("build2_incremental") {
-      lens.build()
-    }
+    lens.build()
     val nMapCalls = acc.value
 
     lens.output.records.map { r =>

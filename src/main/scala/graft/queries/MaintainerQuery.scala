@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,7 +43,7 @@ object MaintainerQuery {
   def run(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // store root reused across bench reps (the q44 pattern); stream
-    // checkpoints are FRESH per invocation — re-consuming a previous
+    // checkpoints are emptied per invocation — re-consuming a previous
     // rep's log events only adds version-gated no-op triggers
     // ---- process 1: the ingest writer
     val storeW = Fixture.store(spark, sfDir, "graft-lmq")
@@ -63,7 +61,7 @@ object MaintainerQuery {
       Seq(DataPath("datasets", "bench", "documents-lm")),
       new IncrementalLensQuery.CountingTokenFn(acc))
     val maintainer = new LensMaintainer(logM, Seq(lens),
-      Files.createTempDirectory("graft-lmq-ck").toString)
+      Fixture.emptyScratch(sfDir, "graft-lmq-ck"))
 
     maintainer.runOnce() // drain commit 1 → full build
     val fullCalls = acc.value
@@ -86,7 +84,7 @@ object MaintainerQuery {
       Seq(DataPath("datasets", "bench", "documents-lm")),
       new IncrementalLensQuery.CountingTokenFn(acc))
     new LensMaintainer(logR, Seq(lensR),
-      Files.createTempDirectory("graft-lmq-ck2").toString).runOnce()
+      Fixture.emptyScratch(sfDir, "graft-lmq-ck2")).runOnce()
     val stormCalls = acc.value
     val absorbed = stormCalls == 0L &&
       lensR.output.meta.version == settledVersion

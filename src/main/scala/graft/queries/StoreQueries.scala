@@ -78,10 +78,9 @@ object StoreQueries {
     * deletes. */
   def attachmentGc(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // fresh store per invocation: surviving state from a previous run
-    // (or a concurrent process) must never leak into the inventory
-    val root = java.nio.file.Files.createTempDirectory("graft-gcq").toString
-    val store = new Store(spark, root)
+    // an empty store per invocation: surviving state from a previous
+    // run (or a concurrent process) must never leak into the inventory
+    val store = new Store(spark, Fixture.emptyScratch(sfDir, "graft-gcq"))
     val ds = store.dataset("bench", "docs-gc").create()
     val ids = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id").cast("long")).distinct().as[Long].collect().sorted

@@ -7,7 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * wrong" #1: a mid-session prior absorbed an 18% cross-round level
   * shift). These pin the dense-"wj"-line decoder: positional decode
   * over the alpha name order, guarded by the embedded nck CRC so a
-  * changed query set rejects rather than mis-attributes. */
+  * changed query set rejects rather than mis-attributes. No run writes
+  * the wj line any more; it is read only from the committed r13–r17
+  * artifacts. The r18+ `"part":"queries"` line is decoded here too;
+  * [[BenchReportSpec]] pins the side that writes it. */
 class BenchPriorSpec extends AnyFunSuite {
 
   private def nck(names: Seq[String]): String = {

@@ -6,6 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.SparkSession
 
 import graft.core.Fs
+import graft.obs.Census
 
 /** Shared local session for Spark-backed specs (one JVM-wide session —
   * Spark sessions are expensive; suites run sequentially under sbt). */
@@ -25,20 +26,10 @@ object SparkTestBase {
   }
 
   /** Runs `body` and returns its result with the names of the Spark jobs
-    * it scheduled (listener bus flushed on both sides). */
+    * it scheduled, as [[graft.obs.Census]] counts them. */
   def jobsOf[A](body: => A): (A, Seq[String]) = {
-    val names = new ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        names.add(j.stageInfos.map(_.name).distinct.mkString(" | "))
-    }
-    org.apache.spark.GraftSparkShim.flushListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.GraftSparkShim.flushListenerBus(spark.sparkContext)
-      (r, names.toArray(Array.empty[String]).toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (r, profile) = Census.measure(spark.sparkContext)(body)
+    (r, profile.jobs.map(_.name))
   }
 
   private val tempDirs = new ConcurrentLinkedQueue[Path]()

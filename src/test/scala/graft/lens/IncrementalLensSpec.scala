@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.SparkTestBase.jobsOf
 import graft.core._
 import graft.store.{DataPath, Store}
 
@@ -106,7 +107,6 @@ class IncrementalLensSpec extends AnyFunSuite {
   }
 
   test("settled rebuild is a ZERO-JOB no-op via the input-versions fast path (r16)") {
-    val spark = SparkTestBase.spark
     val store = freshStore()
     val d = store.dataset("a", "docs").create()
     d.write("r1", doc("cat"))
@@ -115,43 +115,32 @@ class IncrementalLensSpec extends AnyFunSuite {
     lens.build()
     val v = lens.output.meta.version
 
-    val jobs = new AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // 1. nothing committed since the build: the manifest matches and
-      //    the rebuild returns WITHOUT scheduling any Spark job (the
-      //    q159 at-least-once storm / settled-cascade-wave shape)
-      org.apache.spark.GraftSparkShim.flushListenerBus(spark.sparkContext)
-      jobs.set(0)
-      assert(lens.build() == v)
-      org.apache.spark.GraftSparkShim.flushListenerBus(spark.sparkContext)
-      assert(jobs.get == 0, s"settled rebuild scheduled ${jobs.get} Spark job(s)")
+    // 1. nothing committed since the build: the manifest matches and
+    //    the rebuild returns WITHOUT scheduling any Spark job (the
+    //    q159 at-least-once storm / settled-cascade-wave shape)
+    val (settled, settledJobs) = jobsOf(lens.build())
+    assert(settled == v)
+    assert(settledJobs.isEmpty, s"settled rebuild scheduled ${settledJobs.size} Spark job(s)")
 
-      // 2. an identical rewrite bumps the COLLECTION version but not the
-      //    record version: the fast path misses (collection moved), the
-      //    gate proves the no-op once and ADVANCES the manifest…
-      d.write("r1", doc("cat"))
-      assert(lens.build() == v)
-      org.apache.spark.GraftSparkShim.flushListenerBus(spark.sparkContext)
-      assert(jobs.get > 0, "the gate path must run after a collection-version bump")
+    // 2. an identical rewrite bumps the COLLECTION version but not the
+    //    record version: the fast path misses (collection moved), the
+    //    gate proves the no-op once and ADVANCES the manifest…
+    d.write("r1", doc("cat"))
+    val (gated, gateJobs) = jobsOf(lens.build())
+    assert(gated == v)
+    assert(gateJobs.nonEmpty, "the gate path must run after a collection-version bump")
 
-      // …so the NEXT rebuild is zero-job again
-      jobs.set(0)
-      assert(lens.build() == v)
-      org.apache.spark.GraftSparkShim.flushListenerBus(spark.sparkContext)
-      assert(jobs.get == 0, s"post-gate rebuild scheduled ${jobs.get} Spark job(s)")
+    // …so the NEXT rebuild is zero-job again
+    val (again, againJobs) = jobsOf(lens.build())
+    assert(again == v)
+    assert(againJobs.isEmpty, s"post-gate rebuild scheduled ${againJobs.size} Spark job(s)")
 
-      // 3. a REAL change still rebuilds through the full pipeline
-      CountingTagFn.calls.set(0)
-      d.write("r2", doc("dog"))
-      assert(lens.build() > v)
-      assert(CountingTagFn.calls.get == 1, "only the fresh record maps")
-      assert(setOf(lens.output.read("dog").get) == Set("r2"))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // 3. a REAL change still rebuilds through the full pipeline
+    CountingTagFn.calls.set(0)
+    d.write("r2", doc("dog"))
+    assert(lens.build() > v)
+    assert(CountingTagFn.calls.get == 1, "only the fresh record maps")
+    assert(setOf(lens.output.read("dog").get) == Set("r2"))
   }
 
   test("partitioned compute cache: incremental build rewrites only touched pbuckets, hardlink-carries the rest (r17)") {
